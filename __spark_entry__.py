@@ -442,13 +442,12 @@ _PRIORITY = [
                                    # (rotated in displacing
                                    # split_leakage_report — which then
                                    # rotated BACK in for the r13-opt
-                                   # _capped_shingles pin_layout change,
-                                   # displacing w_locf_gapfill)
+                                   # _capped_shingles change, displacing
+                                   # w_locf_gapfill)
     "split_leakage_report",        # helper changed r13 (opt):
-                                   # _capped_shingles pins via pin_layout
-                                   # (hash(sh)+sorted cache) — re-earns a
-                                   # row (displacing w_locf_gapfill —
-                                   # r5-r12 green, source unchanged)
+                                   # _capped_shingles — re-earns a row
+                                   # (displacing w_locf_gapfill — r5-r12
+                                   # green, source unchanged)
     "fk_integrity_report",         # round-6 add: all-FK orphan audit
                                    # (out of window since r14 opt —
                                    # displaced by

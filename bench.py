@@ -241,59 +241,30 @@ def main() -> None:
             }
 
     # guarded: an experiment failure must not discard the headline
-    # measurements already taken — the JSON line always prints
-    try:
-        skew = skew_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        skew = {"error": f"{type(exc).__name__}: {exc}"}
-    try:
-        merge = merge_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        merge = {"error": f"{type(exc).__name__}: {exc}"}
-    try:
-        append = append_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        append = {"error": f"{type(exc).__name__}: {exc}"}
-    try:
-        additive = additive_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        additive = {"error": f"{type(exc).__name__}: {exc}"}
-    try:
-        interval = interval_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        interval = {"error": f"{type(exc).__name__}: {exc}"}
-    try:
-        zorder = zorder_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        zorder = {"error": f"{type(exc).__name__}: {exc}"}
-    try:
-        jview = joinview_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        jview = {"error": f"{type(exc).__name__}: {exc}"}
-    try:
-        replica = replica_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        replica = {"error": f"{type(exc).__name__}: {exc}"}
-    try:
-        hh = heavyhitter_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        hh = {"error": f"{type(exc).__name__}: {exc}"}
-    try:
-        shidx = shingleindex_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        shidx = {"error": f"{type(exc).__name__}: {exc}"}
-    try:
-        mhidx = minhashindex_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        mhidx = {"error": f"{type(exc).__name__}: {exc}"}
-    try:
-        ann = annindex_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        ann = {"error": f"{type(exc).__name__}: {exc}"}
-    try:
-        seggrow = segmentgrowth_experiment(spark)
-    except Exception as exc:  # noqa: BLE001
-        seggrow = {"error": f"{type(exc).__name__}: {exc}"}
+    # measurements already taken — the JSON line always prints. Each
+    # record-line key is the experiment function's own name.
+    experiments: dict[str, dict] = {}
+    for exp in (
+        skew_experiment,
+        merge_experiment,
+        append_experiment,
+        additive_experiment,
+        interval_experiment,
+        zorder_experiment,
+        joinview_experiment,
+        replica_experiment,
+        heavyhitter_experiment,
+        shingleindex_experiment,
+        minhashindex_experiment,
+        annindex_experiment,
+        segmentgrowth_experiment,
+    ):
+        try:
+            experiments[exp.__name__] = exp(spark)
+        except Exception as exc:  # noqa: BLE001
+            experiments[exp.__name__] = {"error": f"{type(exc).__name__}: {exc}"}
+    seggrow = experiments["segmentgrowth_experiment"]
+    ann = experiments["annindex_experiment"]
 
     # Host-noise gauge (round 11, VERDICT r10 #7): min-of-K for three
     # queries whose source has been UNTOUCHED for 5+ rounds — when these
@@ -319,19 +290,7 @@ def main() -> None:
     full = {
         "query_stats": query_stats,
         "n_passes": K_PASSES,
-        "skew_experiment": skew,
-        "merge_experiment": merge,
-        "append_experiment": append,
-        "additive_experiment": additive,
-        "interval_experiment": interval,
-        "zorder_experiment": zorder,
-        "joinview_experiment": jview,
-        "replica_experiment": replica,
-        "heavyhitter_experiment": hh,
-        "shingleindex_experiment": shidx,
-        "minhashindex_experiment": mhidx,
-        "annindex_experiment": ann,
-        "segmentgrowth_experiment": seggrow,
+        **experiments,
         "host_gauge": host_gauge,
     }
     if errors:

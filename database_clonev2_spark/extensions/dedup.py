@@ -264,12 +264,6 @@ def _capped_shingles(docs: DataFrame) -> DataFrame:
         # references one checkpointed leaf instead of re-printing (and on
         # eviction re-running) the whole subtree per reference. A
         # multi-tenant deployment would use a reliable checkpoint dir.
-        # (Round-13 opt note: a pin_layout variant — repartition(sh) +
-        # sortWithinPartitions + persist, giving the downstream self-join
-        # an exchange-free plan — was measured 0.5 s SLOWER end-to-end at
-        # fixture scale: AQE broadcasts the ~8 MB frame anyway, so the
-        # layout shuffle+sort buys nothing locally. Reverted; see
-        # OPTIMIZATION_r13.md for the at-scale revisit note.)
         return sh.join(df_counts.filter(F.col("df") <= DF_CAP), "sh").localCheckpoint()
 
     return _memo_df(_KEPT_CACHE, "capped_shingles", docs, build)
@@ -997,14 +991,10 @@ def _vote_fingerprint(toks: DataFrame, n_bits: int) -> DataFrame:
     plain bit-sum per bit plus one shared count beats n_bits CASE-WHEN
     aggregations in codegen cost, same fingerprint.
 
-    Round 13: this IS the production form, on the strength of the
-    same-session A/B — a scan-side array + Arrow vote alternative
-    (``_vote_fingerprint_arrays``, kept below with a STATUS note) removes
-    this groupBy's exchange but lost end-to-end at fixture scale
-    (min-of-4 at sf0.1: 2.6 s vs 3.9 s for the full fingerprint build;
-    in-bench dedup_simhash 5.4 s vs 8.0 s), because the per-element
-    interpreted higher-order-function work the array form adds costs more
-    than the ~520 B/doc partial-sum shuffle it removes."""
+    A scan-side array + Arrow vote form removes this groupBy's exchange
+    but lost at fixture scale and at 20× (OPTIMIZATION_r13.md,
+    OPTIMIZATION_r14.md): its interpreted per-element higher-order-function
+    work costs more than the ~520 B/doc partial-sum shuffle it saves."""
     aggs = [F.count(F.lit(1)).alias("n")] + [
         F.sum(F.shiftrightunsigned(F.col("h"), i).bitwiseAND(F.lit(1))).alias(f"b{i}")
         for i in range(n_bits)
@@ -1022,126 +1012,12 @@ def _vote_fingerprint(toks: DataFrame, n_bits: int) -> DataFrame:
     return per_doc.select("doc_id", acc.alias("simhash"))
 
 
-def _doc_shingle_hash_arrays(d: DataFrame, hash_lambda) -> DataFrame:
-    """(doc_id, hs: array<bigint>) — each document's DISTINCT word-3-gram
-    shingle hashes as ONE array column, built entirely inside the scan
-    projection (guide §8.3's "fingerprint in the scan" shape): a document
-    is one input row, so its shingles are born co-located and never need
-    an explode + re-group to be voted on. Same window/distinct/
-    empty-filter semantics as ``_doc_shingles`` (complete windows only,
-    array_distinct, '' dropped); ``hash_lambda`` maps the shingle string
-    column to its 64-bit hash (xxhash64 for production, the md5 15-hex
-    family for the cross-engine twin). Documents with no shingles are
-    filtered out — exactly the rows a groupBy over the exploded stream
-    never sees.
-
-    STATUS (round 14, final): UNUSED in query paths — declined at
-    fixture scale (round 13) AND at 20× scale (round 14); see
-    ``_vote_fingerprint_arrays``."""
-    toked = d.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-    toks = F.col("toks")
-    shingles = F.when(
-        F.size(toks) >= SHINGLE_WIDTH,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - SHINGLE_WIDTH),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-                F.element_at(toks, i + 3),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    hs = F.transform(
-        F.filter(F.array_distinct(shingles), lambda s: s != ""), hash_lambda
-    )
-    return toked.select("doc_id", hs.alias("hs")).filter(F.size("hs") >= 1)
-
-
-def _vote_fingerprint_arrays(hs: DataFrame, n_bits: int) -> DataFrame:
-    """(doc_id, simhash) from (doc_id, hs: array<bigint>) — the SimHash
-    vote aggregation over per-document hash ARRAYS via one vectorized
-    Arrow batch function (guide §4.2 "hand whole batches to vectorized
-    native libraries"): per batch, every doc's hashes are concatenated
-    into one flat uint64 vector, unpacked to a bit matrix, and the
-    per-doc per-bit set counts come from ONE np.add.reduceat — no
-    Python-level per-hash work. Value-identical to the 65-buffer JVM
-    aggregation (bit i set iff 2·popcount_i > n — pinned bit-equal on
-    the full fixture corpus, tests/test_round13_opt.py), and the plan
-    has NO exchange: the votes happen inside the scan stage, where the
-    groupBy form shuffles 65 partial sums per (doc, mapper) and — being
-    a 65-buffer HashAggregate — never whole-stage-compiles.
-
-    STATUS (round 13): measured and currently UNUSED in query paths —
-    briefly the production form mid-round, then REVERTED after the
-    same-session A/B and the full bench both said no (fingerprint build
-    min-of-4 at sf0.1: 3.9 s vs 2.6 s for the exploded groupBy;
-    in-bench dedup_simhash 8.0 s vs 5.4 s): at fixture scale the
-    per-element INTERPRETED higher-order-function evaluation the array
-    build adds (transform over sequence + array_distinct + per-element
-    hash inside a lambda — HOFs do not whole-stage-compile either)
-    costs more than the ~520 B/doc partial-sum shuffle the kernel
-    removes, and the Arrow boundary itself measured free (arrays-only
-    3.92 s vs arrays+UDF 3.85 s, same session).
-
-    STATUS (round 14, final): DECLINED at scale too. Re-measured on a
-    20× synthetic corpus with the fixture's shingle-df shape
-    (tools/gen_synth_docs.py, 100k docs): fingerprint build 69.3 s as
-    arrays+kernel vs 2.37 s as explode+groupBy; full blocked-pair query
-    89.7 s vs 8.56 s (min of interleaved reps, same session). The
-    round-13 keep-rationale ("the removed exchange grows with the
-    corpus, the HOF overhead does not") is refuted: the interpreted
-    HOF evaluation is linear in corpus bytes with a ~30× constant, so
-    there is no crossover. Kept only as the bit-equality-tested
-    independent witness of the vote semantics
-    (tests/test_round13_opt.py::TestSimhashArrowVotes), not an
-    optimization candidate."""
-    import numpy as np
-    import pandas as pd
-
-    def _votes(col):
-        if len(col) == 0:
-            return pd.Series(np.empty(0, dtype=np.int64))
-        arrs = [np.asarray(a, dtype=np.int64) for a in col]
-        lens = np.fromiter((a.shape[0] for a in arrs), dtype=np.int64, count=len(arrs))
-        if (lens == 0).any():
-            # reduceat cannot represent empty segments; the frame filters
-            # size(hs) >= 1, so this is a contract violation, not data
-            raise ValueError("simhash vote batch contains an empty hash array")
-        flat = np.concatenate(arrs).view(np.uint64)
-        # little-endian byte view + bitorder="little" puts bit j of each
-        # uint64 at column j (both the sandbox and any supported cluster
-        # arch — x86-64/aarch64 — are little-endian)
-        bits = np.unpackbits(
-            flat.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
-        )[:, :n_bits].astype(np.int64)
-        offsets = np.zeros(len(arrs), dtype=np.int64)
-        np.cumsum(lens[:-1], out=offsets[1:])
-        cnt = np.add.reduceat(bits, offsets, axis=0)
-        fp = (
-            (2 * cnt > lens[:, None]).astype(np.uint64)
-            << np.arange(n_bits, dtype=np.uint64)
-        ).sum(axis=1, dtype=np.uint64)
-        return pd.Series(fp.view(np.int64))
-
-    # real annotation objects, set explicitly: the module's
-    # `from __future__ import annotations` would stringify inline hints,
-    # and pandas is deliberately a function-local import — pyspark's
-    # type-hint inference needs the actual pd.Series objects
-    _votes.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    votes_udf = F.pandas_udf(_votes, "bigint")
-    return hs.select("doc_id", votes_udf(F.col("hs")).alias("simhash"))
-
-
 def simhash_fingerprints(d: DataFrame) -> DataFrame:
     """(doc_id, simhash: bigint) — 64-bit SimHash: each distinct word-3-gram
     shingle votes ±1 per bit of its xxhash64; sign of the vote sum sets the
     bit. Shingles (not unigrams) carry word order, so documents sharing a
     small vocabulary still separate. Built from explode + groupBy + bit
-    arithmetic, all JVM-side (``_vote_fingerprint``) — a scan-side
-    array + Arrow vote alternative was measured SLOWER at fixture scale
-    and reverted (STATUS note on ``_vote_fingerprint_arrays``); it stays
-    pinned bit-equal to this form by tests/test_round13_opt.py."""
+    arithmetic, all JVM-side (``_vote_fingerprint``)."""
     toks = _doc_shingles(d).select("doc_id", F.xxhash64(F.col("shingle")).alias("h"))
     return _vote_fingerprint(toks, SIMHASH_BITS)
 
@@ -1158,8 +1034,7 @@ def simhash_fingerprints_md5(d: DataFrame) -> DataFrame:
     distance — is engine-exact. The top 4 bits of the 64-bit word stay
     zero: harmless to the pigeonhole blocking (bits that never flip
     weaken nothing) and to bit_count. Same exploded-groupBy form as the
-    xxhash64 face (the Arrow array alternative reverted, see
-    ``_vote_fingerprint_arrays`` STATUS)."""
+    xxhash64 face."""
     toks = _doc_shingles(d).select(
         "doc_id",
         F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10)

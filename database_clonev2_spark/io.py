@@ -82,9 +82,25 @@ def _parse_bytes(v: str) -> int:
     return int(s)
 
 
-def load_spread(
-    spark: SparkSession, sf_dir: str, name: str, *keys: str
-) -> DataFrame:
+def _spread(df: DataFrame, key: str, splits) -> DataFrame:
+    """The one spread rule behind ``load_spread`` and ``spread_frame``:
+    hash-repartition ``df`` on ``key`` to ``defaultParallelism`` when its
+    split count — ``splits()``, None if unknown — starves the session's
+    cores (under half of them). Otherwise ``df`` comes back unchanged.
+
+    Hashing on the downstream grouping key keeps the assignment
+    deterministic under retries (guide §2.5: never derive a synthetic key
+    from rand()) and avoids round-robin's sort-before-repartition cost."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if target <= 2:
+        return df
+    cur = splits()
+    if cur is None or 2 * cur >= target:
+        return df
+    return df.repartition(target, key)
+
+
+def load_spread(spark: SparkSession, sf_dir: str, name: str, key: str) -> DataFrame:
     """``load`` + scale-adaptive scan widening for CPU-heavy per-row work
     (round 13, guide §2.5 "input skew: one huge unsplittable file").
 
@@ -95,119 +111,52 @@ def load_spread(
     on one core of local[32] (measured: the shingle stream alone 1.06 s
     single-task vs 0.58 s spread; the fingerprint chain 3.2 s vs 2.1 s).
 
-    The fix is the guide's own: repartition immediately after the read —
-    but ONLY when the scan is actually starved, so the extra exchange never
-    fires at real scale. The decision is made from file bytes vs
-    ``spark.sql.files.maxPartitionBytes`` (no planning round-trip): when
-    the file already yields at least ~defaultParallelism/2 splits — any
-    production-sized input — this returns the plain lazy scan unchanged.
-    The repartition hashes on ``keys`` (the downstream grouping id), so the
-    assignment is deterministic under retries (guide §2.5: never derive a
-    synthetic key from rand()) and avoids round-robin's sort-before-
-    repartition cost.
+    The fix is the guide's own: repartition on ``key`` immediately after
+    the read — but ONLY when the scan is actually starved, so the extra
+    exchange never fires at real scale. The decision is made from file
+    bytes vs ``spark.sql.files.maxPartitionBytes`` (no planning
+    round-trip): when the file already yields at least
+    ~defaultParallelism/2 splits — any production-sized input — this
+    returns the plain lazy scan unchanged.
 
     NOT applied blanket in ``load``: for shuffle-light relational
     aggregations the extra exchange of the raw rows costs more than the
     single-task scan saves (measured: lineitem groupBy 0.47 s single-task
     vs 1.14 s through a repartition) — only the explode/hash-heavy
     pipelines opt in, at their registered call sites."""
-    df = load(spark, sf_dir, name)
-    target = spark.sparkContext.defaultParallelism
-    if target <= 2:
-        return df
-    try:
-        file_bytes = os.path.getsize(table_path(sf_dir, name))
-        max_split = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-        )
-    except (OSError, ValueError):
-        return df
-    est_splits = max(1, file_bytes // max(max_split, 1))
-    if 2 * est_splits >= target:
-        return df
-    return df.repartition(target, *keys) if keys else df.repartition(target)
+
+    def est_splits():
+        try:
+            file_bytes = os.path.getsize(table_path(sf_dir, name))
+            max_split = _parse_bytes(
+                spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+            )
+        except (OSError, ValueError):
+            return None
+        return max(1, file_bytes // max(max_split, 1))
+
+    return _spread(load(spark, sf_dir, name), key, est_splits)
 
 
-def pin_layout(df: DataFrame, *keys: str) -> DataFrame:
-    """Materialize ``df`` hash-partitioned AND in-partition-sorted on
-    ``keys`` (round 13, guide §2.4 "two operations keyed the same way can
-    share one exchange"): a cached frame's outputPartitioning/outputOrdering
-    survive into consumer plans (verified on the final AQE plan: the
-    sketch self-joins become SortMergeJoin directly over the two
-    InMemoryTableScans — ZERO exchanges, ZERO sorts), where a
-    ``localCheckpoint`` erases both (UnknownPartitioning — measured, this
-    Spark build) and forces every consumer to re-shuffle + re-sort. One
-    build-time shuffle+sort of the frame buys an exchange-free and
-    sort-free self-join — a net win at ANY scale for a frame read by both
-    join sides, because the join would otherwise shuffle the same bytes
-    twice and sort twice.
+def spread_frame(df: DataFrame, key: str) -> DataFrame:
+    """``load_spread``'s rule for a frame that is NOT a raw table scan:
+    when a checkpointed frame's ACTUAL partition count starves the
+    session's cores, hash-repartition it on ``key`` before CPU-heavy
+    per-row work.
 
-    Partition count = ``spark.sql.shuffle.partitions`` (the knob a
-    production deployment already sizes for shuffle width; both self-join
-    sides read the SAME cache, so co-partitioning holds for any value).
-    The count() materializes eagerly so concurrent consumer stages never
-    race to fill the cache. Trade-off vs localCheckpoint: lineage is NOT
-    truncated (consumer plans re-print the build subtree; eviction
-    recomputes it).
-
-    STATUS (round 13): measured and currently UNUSED in query paths — at
-    fixture scale AQE broadcasts the ~8 MB sketch frames anyway, so the
-    layout's extra exchange + sort + count job made the capped-Jaccard
-    shape 0.5 s SLOWER end-to-end (min-of-4, same session) and the
-    change was reverted to localCheckpoint pins.
-
-    STATUS (round 14, final): re-measured at 20× scale (100k-doc
-    synthetic corpus, tools/gen_synth_docs.py — the sketch frames now
-    genuinely shuffle): capped-Jaccard 9.17 vs 9.99 s (marginal win
-    inside a 2× noise band), minhash bands 2.47 vs 2.00 s (clear LOSS),
-    simhash blocks 6.36 vs 6.55 s (tie). NOT adopted: with only two
-    join-side consumers per sketch frame, the layout's own
-    shuffle+sort+count job is never consistently amortized. Kept with
-    its test as the documented shape for frames with MANY keyed
-    consumers that outgrow broadcast."""
-    from pyspark.storagelevel import StorageLevel
-
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    out = (
-        df.repartition(n, *keys)
-        .sortWithinPartitions(*keys)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    out.count()
-    return out
-
-
-def spread_frame(df: DataFrame, *keys: str) -> DataFrame:
-    """``load_spread``'s guard for a frame that is NOT a raw table scan
-    (e.g. an already-materialized localCheckpoint): when its ACTUAL
-    partition count starves the session's cores, hash-repartition on
-    ``keys`` before CPU-heavy per-row work.
-
-    CONTRACT (enforced, round 14 — VERDICT r13 #4): the input must be a
-    MATERIALIZED frame (checkpointed/cached leaf), where
-    ``rdd.getNumPartitions()`` is a metadata read. On a lazy frame the
-    same call is a full planning round-trip per invocation — if a new
-    call site needs a lazy-frame spread, materialize first or extend
-    ``load_spread``'s byte-size estimate instead. A production-scale
-    frame has >= cores partitions and this is a no-op."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    if target <= 2:
-        return df
-    # if/raise, not assert (the house rule: contracts must survive -O):
-    # a logical plan that is neither an RDD-scan leaf (localCheckpoint)
-    # nor cache-pinned would pay the planning round-trip silently
+    CONTRACT (enforced): the input must be an RDD-scan leaf
+    (``localCheckpoint()`` / ``checkpoint()``), where
+    ``rdd.getNumPartitions()`` is a metadata read. On any other frame —
+    lazy, or persisted (whose cache may not even be filled yet) — the
+    same call plans the frame on every invocation; checkpoint first, or
+    extend ``load_spread``'s byte-size estimate instead. A
+    production-scale frame has >= cores partitions and this is a no-op."""
+    # if/raise, not assert (the house rule: contracts must survive -O)
     plan = df._jdf.queryExecution().analyzed().toString()
-    if not plan.startswith(("LogicalRDD", "InMemoryRelation")) and not df.is_cached:
+    if not plan.startswith("LogicalRDD"):
         raise ValueError(
-            "spread_frame expects a materialized frame (localCheckpoint or "
-            "persisted); got a lazy plan — materialize first, or use "
-            "load_spread for raw table scans"
+            "spread_frame expects a materialized localCheckpoint()/checkpoint() "
+            f"frame; got a {plan.split(None, 1)[0]} plan — localCheckpoint it "
+            "first, or use load_spread for raw table scans"
         )
-    try:
-        cur = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - defensive: never fail the query
-        return df
-    if 2 * cur >= target:
-        return df
-    return df.repartition(target, *keys) if keys else df.repartition(target)
+    return _spread(df, key, lambda: df.rdd.getNumPartitions())

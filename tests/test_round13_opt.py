@@ -1,5 +1,6 @@
-"""Round-13 OPTIMIZATION-phase tests — the helpers the round introduced
-(`io.load_spread` / `io.spread_frame` / `io.pin_layout`), the driver-side
+"""Round-13 OPTIMIZATION-phase tests — the scan-spread helpers
+(`io.load_spread` / `io.spread_frame`) and their one production
+`spread_frame` call site, the SimHash vote rule, the driver-side
 FK-closure walk, and the one-exchange co-purchase pair build. Each test
 pins the property the optimization claims (value identity + the structural
 guarantee), not timings — timings live in BENCH_r13.json."""
@@ -14,7 +15,6 @@ from pyspark.sql import functions as F
 from database_clonev2_spark.io import (
     load,
     load_spread,
-    pin_layout,
     spread_frame,
     _parse_bytes,
 )
@@ -89,48 +89,36 @@ class TestSpreadFrame:
         with _pytest.raises(ValueError, match="materialized"):
             spread_frame(lazy, "k")
 
-    def test_persisted_frame_accepted(self, spark):
+    def test_persisted_frame_rejected(self, spark):
+        # persist() leaves the analyzed plan lazy (no RDD-scan leaf), even
+        # once the cache is filled — only a checkpoint is accepted
         df = spark.range(1000).select((F.col("id") % 7).alias("k")).persist()
         try:
             df.count()
-            out = spread_frame(df, "k")
-            assert _rows(df) == _rows(out)
+            with pytest.raises(ValueError, match="localCheckpoint"):
+                spread_frame(df, "k")
         finally:
             df.unpersist()
 
+    def test_training_pipeline_call_site_accepted(self, spark, sf_dir, monkeypatch):
+        # the registered e2e pipeline is the one production caller: its
+        # keeper frame must pass the strict guard
+        import __spark_entry__ as entry
+        import database_clonev2_spark.io as io_mod
 
-class TestPinLayout:
-    def test_partitioning_and_ordering_survive_into_consumer_plan(self, spark):
-        pinned = pin_layout(
-            spark.range(5000).select((F.col("id") % 101).alias("k"), "id"), "k"
-        )
-        try:
-            # (the cache's outputPartitioning is not directly readable
-            # through the AQE wrapper — the consumer-plan assertion below
-            # is the property that matters: no re-shuffle above the cache)
-            a, b = pinned.alias("a"), pinned.alias("b")
-            j = a.join(
-                b,
-                (F.col("a.k") == F.col("b.k")) & (F.col("a.id") < F.col("b.id")),
-            )
-            j.write.format("noop").mode("overwrite").save()
-            final = j._jdf.queryExecution().executedPlan().toString()
-            # consumer side of the final plan: no shuffle exchange above
-            # the cache reads (the cache-BUILD lineage below
-            # InMemoryRelation legitimately contains the one layout
-            # exchange)
-            consumer = final.split("InMemoryRelation")[0]
-            assert "Exchange hashpartitioning" not in consumer
-        finally:
-            pinned.unpersist()
+        accepted = []
 
-    def test_values_identical(self, spark):
-        df = spark.range(300).select((F.col("id") % 13).alias("k"), "id")
-        pinned = pin_layout(df, "k")
-        try:
-            assert _rows(df) == _rows(pinned)
-        finally:
-            pinned.unpersist()
+        def recording(df, key):
+            out = spread_frame(df, key)
+            accepted.append(key)
+            return out
+
+        monkeypatch.setattr(io_mod, "spread_frame", recording)
+        qs, _ = entry._registry()
+        qs["training_pipeline_e2e"](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        assert accepted == ["doc_id"]
 
 
 class TestFkClosureWalk:
@@ -179,67 +167,60 @@ class TestFkClosureWalk:
             qs["rcte_fk_closure"](spark, sf_dir)
 
 
-class TestSimhashArrowVotes:
-    """The scan-side array fingerprint (one Arrow vote kernel, zero
-    exchanges — the kept-but-unadopted at-scale alternative, STATUS note
-    on ``_vote_fingerprint_arrays``) must be BIT-EQUAL to the production
-    form (explode + 65-buffer groupBy, ``simhash_fingerprints``) for both
-    hash families — the property that makes adopting it in optimization
-    round 2 a plan change, not a semantics change."""
+class TestSimhashVoteRule:
+    """``_vote_fingerprint`` against a pure-Python SimHash vote: bit i is
+    set iff more than half of a document's hashes have bit i set. The
+    hand-built hashes carry bit 63 (negative as bigint), which the 60-bit
+    md5 family of the DuckDB twin never sets."""
 
-    def test_xxhash_family_bit_equal(self, spark, sf_dir):
+    @staticmethod
+    def _py_vote(hs, n_bits):
+        fp = 0
+        for i in range(n_bits):
+            ones = sum((h >> i) & 1 for h in hs)
+            if 2 * ones > len(hs):
+                fp |= 1 << i
+        return fp - (1 << 64) if fp >> 63 else fp
+
+    def test_vote_equals_python_rule(self, spark):
+        import random
+
         from database_clonev2_spark.extensions.dedup import (
             SIMHASH_BITS,
-            _doc_shingle_hash_arrays,
-            _vote_fingerprint_arrays,
-            simhash_fingerprints,
+            _vote_fingerprint,
         )
 
-        d = load(spark, sf_dir, "documents")
-        alt = _vote_fingerprint_arrays(
-            _doc_shingle_hash_arrays(d, lambda s: F.xxhash64(s)), SIMHASH_BITS
-        )
-        assert _rows(alt) == _rows(simhash_fingerprints(d))
+        rng = random.Random(13)
 
-    def test_md5_family_bit_equal(self, spark, sf_dir):
-        from database_clonev2_spark.extensions.dedup import (
-            SIMHASH_BITS_MD5,
-            _doc_shingle_hash_arrays,
-            _vote_fingerprint_arrays,
-            simhash_fingerprints_md5,
-        )
+        def signed(u):
+            return u - (1 << 64) if u >> 63 else u
 
-        d = load(spark, sf_dir, "documents")
-        alt = _vote_fingerprint_arrays(
-            _doc_shingle_hash_arrays(
-                d,
-                lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast(
-                    "bigint"
-                ),
-            ),
-            SIMHASH_BITS_MD5,
+        # doc 1: every bit ties 1:1, so no bit wins; docs 2-8 hold 1-7
+        # hashes, every other one with the sign bit forced on
+        docs = {1: [5, ~5]}
+        for doc_id, n in enumerate(range(1, 8), start=2):
+            docs[doc_id] = [
+                signed(rng.getrandbits(64) | (1 << 63 if k % 2 == 0 else 0))
+                for k in range(n)
+            ]
+        expected = {d: self._py_vote(hs, SIMHASH_BITS) for d, hs in docs.items()}
+        assert expected[1] == 0
+        assert any(fp < 0 for fp in expected.values())
+        toks = spark.createDataFrame(
+            [(d, h) for d, hs in docs.items() for h in hs], "doc_id bigint, h bigint"
         )
-        assert _rows(alt) == _rows(simhash_fingerprints_md5(d))
+        got = dict(_rows(_vote_fingerprint(toks, SIMHASH_BITS)))
+        assert got == expected
 
-    def test_short_and_empty_docs_excluded_identically(self, spark):
-        from database_clonev2_spark.extensions.dedup import (
-            SIMHASH_BITS,
-            _doc_shingle_hash_arrays,
-            _vote_fingerprint_arrays,
-        )
+    def test_short_and_empty_docs_have_no_fingerprint(self, spark):
+        from database_clonev2_spark.extensions.dedup import simhash_fingerprints
 
         d = spark.createDataFrame(
             [(1, "only two"), (2, ""), (3, "a b c d"), (4, "x y z")],
-            ["doc_id", "text"],
+            "doc_id bigint, text string",
         )
-        out = _rows(
-            _vote_fingerprint_arrays(
-                _doc_shingle_hash_arrays(d, lambda s: F.xxhash64(s)), SIMHASH_BITS
-            ).select("doc_id")
-        )
-        # docs 1 and 2 have < 3 tokens -> no shingles -> no fingerprint,
-        # exactly like the exploded groupBy form
-        assert out == [(3,), (4,)]
+        # fewer than 3 tokens -> no word-3-gram shingle -> no row
+        assert _rows(simhash_fingerprints(d).select("doc_id")) == [(3,), (4,)]
 
 
 class TestEdgesBuild:

@@ -2,9 +2,8 @@
 measurement (round 14, VERDICT r13 item 1).
 
 The driver's fixtures stop at sf0.1 (5,000 docs), where the bench is
-job-latency-bound (8-core total == 32-core total, PERF_r13.json), so the
-per-byte candidates reverted in round 13 (the scan-side Arrow SimHash vote
-kernel, `pin_layout` sketch self-joins) cannot be ranked there. This tool
+job-latency-bound (8-core total == 32-core total, PERF_r13.json), so
+changes whose cost grows with corpus bytes cannot be ranked there. This tool
 synthesizes a documents corpus N times larger with the SAME measured shape
 as /root/testdata/sf0.1/documents.parquet:
 
@@ -22,8 +21,8 @@ as /root/testdata/sf0.1/documents.parquet:
   scan-parallelism consequences round 13 measured.
 
 NOT fixture data (never read by queries()/oracle_sql()/bench.py — those
-stay on $SPARK_GRAFT_SF_DIR): this exists only so OPTIMIZATION_r14.md's
-at-scale A/B numbers are reproducible.
+stay on $SPARK_GRAFT_SF_DIR): it feeds at-scale A/Bs (`tools/ab.py`) and
+the benchmark's generated document inputs.
 
 Usage: python tools/gen_synth_docs.py <out_dir> <n_docs> [seed]
 """

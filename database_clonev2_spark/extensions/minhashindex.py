@@ -69,9 +69,9 @@ def read_minhash_meta(path: str) -> dict:
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    """Fsync'd atomic rename commit — ``_manifest.write_json_atomic``
-    holds the single implementation and the durability rationale."""
-    from ._manifest import write_json_atomic
+    """Fsync'd atomic commit — ``_durable.write_json_atomic`` holds the
+    single implementation and the durability rationale."""
+    from .._durable import write_json_atomic
 
     write_json_atomic(os.path.join(path, _META_FILE), meta)
 

@@ -122,9 +122,9 @@ def read_shingle_meta(path: str) -> dict:
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    """Fsync'd atomic rename commit — ``_manifest.write_json_atomic``
-    holds the single implementation and the durability rationale."""
-    from ._manifest import write_json_atomic
+    """Fsync'd atomic commit — ``_durable.write_json_atomic`` holds the
+    single implementation and the durability rationale."""
+    from .._durable import write_json_atomic
 
     write_json_atomic(_meta_path(path), meta)
 
@@ -689,9 +689,8 @@ def append_shingle_index(
     derives from ``batch_id``) before committing once. The torn-batch
     double-count this function used to disclaim is structurally gone.
     Filesystem contract: POSIX/HDFS atomic same-dir rename for the
-    meta file (the bucketed-merge manifest contract, stated at
-    ``pipeline/merge.py``); object stores need the usual manifest
-    service."""
+    meta file (stated in ``_durable``); object stores need the usual
+    manifest service."""
     with _maintainer_locked(path):
         result = _append_shingle_locked(spark, path, docs, batch_id)
     if max_segments is not None and result.pop("_n_segments", 0) > max_segments:

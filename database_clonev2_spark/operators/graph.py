@@ -117,7 +117,11 @@ def _edges_view(spark: SparkSession, sf_dir: str) -> None:
         # ("Block already exists" WARN, benign duplicate compute of a
         # partition); the A/B includes that cost and the lazy form
         # still wins — the frame is post-support-filter small, unlike
-        # the sketch self-join pins that stay eager (dedup.py).
+        # the sketch self-join pins that stay eager (dedup.py). The lazy
+        # pin is safe only because the edge frames are deterministic: a
+        # partition recomputed by a racing stage must equal the first
+        # fill, so a nondeterministic upstream column (rand(), uuid(),
+        # an order-dependent first()) here is a correctness hazard.
         .localCheckpoint(eager=False)
     )
     edges.createOrReplaceTempView("edges")

@@ -45,16 +45,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .._durable import (
+    append_applied_batch,
+    applied_batches,
+    epoch_dir_name,
+    epoch_sort_key,
+    write_json_atomic,
+)
 from .merge import (
-    _BATCHES_KEEP,
+    _RECOVERY_LOCK_FILE,
     BUCKET_COL,
+    _acquire_recovery_lock,
     _manifest_is_stale,
+    _release_recovery_lock,
     _with_bucket,
 )
 
 _META_FILE = "_join_meta.json"
 _COMMIT_FILE = "_commit.json"
-_LEDGER_FILE = "_applied_batches.json"
 _STORES = ("left", "right", "view")
 
 
@@ -67,44 +75,13 @@ def _read_meta(root: str) -> dict:
         return json.load(fh)
 
 
-def _write_meta(dir_path: str, meta: dict) -> None:
-    tmp = os.path.join(dir_path, _META_FILE + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.rename(tmp, os.path.join(dir_path, _META_FILE))
-
-
-def _ledger_path(root: str) -> str:
-    return os.path.join(root, _LEDGER_FILE)
-
-
-def applied_join_batches(root: str) -> list:
-    p = _ledger_path(root)
-    if not os.path.exists(p):
-        return []
-    with open(p) as fh:
-        return json.load(fh)["batch_ids"]
-
-
-def _append_join_batch(root: str, batch_id) -> None:
-    ids = applied_join_batches(root)
-    if batch_id in ids:
-        return
-    ids.append(batch_id)
-    ids = ids[-_BATCHES_KEEP:]
-    tmp = _ledger_path(root) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"batch_ids": ids}, fh)
-    os.rename(tmp, _ledger_path(root))
-
-
 def _commit_path(root: str) -> str:
     return os.path.join(root, _COMMIT_FILE)
 
 
 def _write_manifest(
     root: str, token: str, staged: dict, batch_id, change_dir: str | None = None
-) -> None:
+) -> dict:
     import time
 
     man = {
@@ -115,21 +92,8 @@ def _write_manifest(
         "pid": os.getpid(),
         "wall_ts": time.time(),
     }
-    tmp = _commit_path(root) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(man, fh)
-    os.rename(tmp, _commit_path(root))
-
-
-def _change_dir_name(batch_id, token: str) -> str:
-    """Filesystem-safe per-epoch change-log dir name; epoch-unique by the
-    ledger contract (a replayed id no-ops before reaching the write)."""
-    if batch_id is None:
-        return f"epoch-{token}"
-    safe = "".join(
-        ch if ch.isalnum() or ch in "-_." else "_" for ch in str(batch_id)
-    )
-    return f"epoch-{safe}"
+    write_json_atomic(_commit_path(root), man)
+    return man
 
 
 def _roll_forward(root: str, man: dict) -> None:
@@ -163,7 +127,7 @@ def _roll_forward(root: str, man: dict) -> None:
             os.rename(src, dst)
     shutil.rmtree(staging, ignore_errors=True)
     if man.get("batch_id") is not None:
-        _append_join_batch(root, man["batch_id"])
+        append_applied_batch(root, man["batch_id"])
     try:
         os.remove(_commit_path(root))
     except FileNotFoundError:
@@ -178,16 +142,31 @@ def recover_pending_join_commit(root: str, only_if_stale: bool = False) -> dict:
     reader/writer discipline as ``pipeline.merge`` (a reader replaying
     the renames under a live writer would race it). Manifest-less
     staging dirs are swept on the writer path only, for the same
-    reason."""
+    reason. Concurrent recoverers are serialized by merge's recovery
+    lock (``_acquire_recovery_lock``): two readers replaying one stale
+    manifest could otherwise strand the winner's new bucket to
+    ``.__old_`` and delete it. Readers skip while the lock is held;
+    writers wait."""
     report: dict = {}
     cp = _commit_path(root)
     if os.path.exists(cp):
-        with open(cp) as fh:
-            man = json.load(fh)
-        if only_if_stale and not _manifest_is_stale(man):
-            return {"skipped": "manifest writer alive"}
-        _roll_forward(root, man)
-        report = {"rolled_forward": man["token"]}
+        lock = os.path.join(root, _RECOVERY_LOCK_FILE)
+        held = _acquire_recovery_lock(lock, only_if_stale)
+        if held is None:
+            return {"skipped": "recovery lock held"}
+        try:
+            try:
+                with open(cp) as fh:
+                    man = json.load(fh)
+            except FileNotFoundError:
+                man = None  # another recoverer finished before we got the lock
+            if man is not None:
+                if only_if_stale and not _manifest_is_stale(man):
+                    return {"skipped": "manifest writer alive"}
+                _roll_forward(root, man)
+                report = {"rolled_forward": man["token"]}
+        finally:
+            _release_recovery_lock(lock, *held)
     if only_if_stale:
         return report
     if os.path.isdir(root):
@@ -249,7 +228,7 @@ def maintain_join_view(
     """
     if batch_left is None and batch_right is None:
         raise ValueError("at least one of batch_left/batch_right is required")
-    if batch_id is not None and batch_id in applied_join_batches(root):
+    if batch_id is not None and batch_id in applied_batches(root):
         return {"applied": False, "batch_id": batch_id, "reason": "already_applied"}
 
     if not os.path.exists(root):
@@ -274,6 +253,7 @@ def maintain_join_view(
                 "columns + right columns)"
             )
         token = uuid.uuid4().hex[:8]
+        change_dir = epoch_dir_name(token if batch_id is None else batch_id)
         staging = f"{root}.__create_{token}"
         os.makedirs(staging)
         a = _with_bucket(batch_left, key_cols, n_buckets)
@@ -288,9 +268,7 @@ def maintain_join_view(
         dv.write.partitionBy(BUCKET_COL).parquet(os.path.join(staging, "view"))
         if change_feed:
             dv.drop(BUCKET_COL).write.parquet(
-                os.path.join(
-                    staging, "_changes", _change_dir_name(batch_id, token)
-                )
+                os.path.join(staging, "_changes", change_dir)
             )
         meta = {
             "n_buckets": n_buckets,
@@ -299,9 +277,9 @@ def maintain_join_view(
             "right_schema": b.schema.json(),
             "view_schema": dv.schema.json(),
         }
-        _write_meta(staging, meta)
+        write_json_atomic(_meta_path(staging), meta)
         if batch_id is not None:
-            _append_join_batch(staging, batch_id)
+            append_applied_batch(staging, batch_id)
         n_dv = spark.read.schema(dv.schema).parquet(
             os.path.join(staging, "view")
         ).count()
@@ -312,11 +290,11 @@ def maintain_join_view(
             "batch_id": batch_id,
             "view_rows_added": n_dv,
             "touched": {s: n_buckets for s in _STORES},
-            "change_dir": _change_dir_name(batch_id, token) if change_feed else None,
+            "change_dir": change_dir if change_feed else None,
         }
 
     recover_pending_join_commit(root)
-    if batch_id is not None and batch_id in applied_join_batches(root):
+    if batch_id is not None and batch_id in applied_batches(root):
         return {"applied": False, "batch_id": batch_id, "reason": "already_applied"}
     meta = _read_meta(root)
     if meta["n_buckets"] != n_buckets or meta["key_cols"] != list(key_cols):
@@ -397,21 +375,14 @@ def maintain_join_view(
         if change_feed:
             # even an empty ΔV publishes: the dir marks the epoch as
             # processed for pull-based consumers
-            change_dir = _change_dir_name(batch_id, token)
+            change_dir = epoch_dir_name(token if batch_id is None else batch_id)
             dv.drop(BUCKET_COL).write.parquet(os.path.join(staging, "changes"))
         if staged or change_dir:
-            _write_manifest(root, token, staged, batch_id, change_dir)
             _roll_forward(
-                root,
-                {
-                    "token": token,
-                    "staged": staged,
-                    "batch_id": batch_id,
-                    "change_dir": change_dir,
-                },
+                root, _write_manifest(root, token, staged, batch_id, change_dir)
             )
         elif batch_id is not None:
-            _append_join_batch(root, batch_id)
+            append_applied_batch(root, batch_id)
     finally:
         da.unpersist()
         db.unpersist()
@@ -437,14 +408,15 @@ def read_join_view(spark: SparkSession, root: str) -> DataFrame:
 
 
 def list_join_change_epochs(root: str) -> list[str]:
-    """Published change-feed epoch dirs, oldest-first by publish order
-    (lexicographic on the sanitized epoch id — integer foreachBatch ids
-    need no zero-padding for correctness because consumers track a
-    consumed-set, not a cursor)."""
+    """Published change-feed epoch dirs in natural (numeric-aware) epoch
+    order — the order they were committed in for integer foreachBatch
+    epoch ids."""
     d = os.path.join(root, "_changes")
     if not os.path.isdir(d):
         return []
-    return sorted(n for n in os.listdir(d) if n.startswith("epoch-"))
+    return sorted(
+        (n for n in os.listdir(d) if n.startswith("epoch-")), key=epoch_sort_key
+    )
 
 
 def read_join_changes(

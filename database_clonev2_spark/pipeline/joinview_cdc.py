@@ -50,12 +50,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._durable import append_applied_batch, applied_batches, epoch_number
 from .merge import (
     BUCKET_COL,
-    _append_applied_batch,
     _read_bucket_meta,
     _with_bucket,
-    applied_batches,
     list_merge_changes,
     merge_delete_bucketed,
     merge_upsert_bucketed,
@@ -63,16 +62,6 @@ from .merge import (
 )
 
 PAIR_EPOCH_COL = "_pair_epoch"
-
-
-def _epoch_num(name: str) -> int:
-    suffix = name.split("epoch-", 1)[-1]
-    if not suffix.isdigit():
-        raise ValueError(
-            f"join-view folds need numeric epoch ids (got {name!r}): the "
-            "upsert versioning column orders replays by epoch"
-        )
-    return int(suffix)
 
 
 def maintain_join_view_from_changes(
@@ -155,7 +144,7 @@ def maintain_join_view_from_changes(
         # epoch-complete marker — the sync loop's skip key (see module
         # docstring crash semantics). A fully-empty epoch against a
         # not-yet-created view stays unmarked and is revisited: harmless.
-        _append_applied_batch(view_path, batch_id)
+        append_applied_batch(view_path, batch_id)
     return {"pairs_deleted": n_del, "pairs_upserted": n_ups}
 
 
@@ -182,7 +171,7 @@ def sync_join_view_from_changes(
             maintain_join_view_from_changes(
                 spark, view_path, right_path, ch,
                 join_key=join_key, left_key=left_key, right_key=right_key,
-                epoch_num=_epoch_num(name), batch_id=name,
+                epoch_num=epoch_number(name), batch_id=name,
                 n_buckets=n_buckets,
             )
         )

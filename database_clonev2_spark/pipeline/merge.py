@@ -41,6 +41,16 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._durable import (
+    _BATCHES_FILE,
+    _BATCHES_KEEP,
+    append_applied_batch,
+    applied_batches,
+    epoch_dir_name,
+    epoch_sort_key,
+    write_json_atomic,
+)
+
 #: layout/partition column of bucketed merge targets. Underscore-prefixed
 #: root files (the meta sidecar) are invisible to Spark's file index, but
 #: the partition COLUMN does surface in the read schema — use
@@ -49,8 +59,6 @@ BUCKET_COL = "_bucket"
 _META_FILE = "_merge_buckets.json"
 _HW_FILE = "_high_water.json"
 _COMMIT_FILE = "_commit.json"
-_BATCHES_FILE = "_applied_batches.json"
-_BATCHES_KEEP = 10_000  # replay-dedup horizon (foreachBatch epochs retained)
 # Protocol sidecar names, defined ONCE (round 13, VERDICT r12 minor
 # note): consumed by the recovery-lock helpers, the quiesce fence, and
 # the commit-shaped expiry baseline's exclusion filter — a drifted
@@ -145,12 +153,9 @@ def _write_bucket_meta(
         schema_json = _read_bucket_meta(target_path).get("schema_json")
     if schema_json is not None:
         meta["schema_json"] = schema_json
-    # tmp + rename: a crash mid-write must never leave a half-written
-    # sidecar (is_bucketed() keys off this file's existence)
-    tmp = _bucket_meta_path(target_path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.rename(tmp, _bucket_meta_path(target_path))
+    # atomic: a crash mid-write must never leave a half-written sidecar
+    # (is_bucketed() keys off this file's existence)
+    write_json_atomic(_bucket_meta_path(target_path), meta)
 
 
 _HIST_FILE = "_hist_edges.json"
@@ -169,10 +174,7 @@ def _read_hist_edges(target_path: str) -> dict[str, list[float]]:
 
 
 def _write_hist_edges(dir_path: str, edges: dict[str, list[float]]) -> None:
-    tmp = os.path.join(dir_path, _HIST_FILE + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(edges, fh)
-    os.rename(tmp, os.path.join(dir_path, _HIST_FILE))
+    write_json_atomic(os.path.join(dir_path, _HIST_FILE), edges)
 
 
 def _validate_hist_edges(hist_cols: dict[str, list[float]]) -> None:
@@ -246,13 +248,14 @@ def _write_commit_manifest(
     batch_id: int | str | None = None,
     schema_json: str | None = None,
     change_dir: str | None = None,
-) -> None:
+) -> dict:
     """Durably record an in-flight multi-bucket swap BEFORE the first
-    rename. Written atomically (tmp + rename) so recovery never sees a
-    half-written manifest. Underscore-prefixed, so Spark's file index
-    never surfaces it as data. ``batch_id`` (additive merges) rides the
-    manifest so the applied-batch ledger update is part of the same
-    commit — recovery appends it, making replay dedup crash-safe.
+    rename, and return the recorded manifest. Written atomically so
+    recovery never sees a half-written manifest. Underscore-prefixed,
+    so Spark's file index never surfaces it as data. ``batch_id``
+    (additive merges) rides the manifest so the applied-batch ledger
+    update is part of the same commit — recovery appends it, making
+    replay dedup crash-safe.
     ``schema_json`` (evolving merges) rides it for the same reason: the
     evolved schema must reach the meta sidecar before the manifest is
     removed, else a crash leaves mixed-schema buckets committed with no
@@ -263,22 +266,18 @@ def _write_commit_manifest(
     recover_pending_commit's only_if_stale)."""
     import time
 
-    tmp = _commit_path(target_path) + f".tmp_{token}"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "token": token,
-                "staging": staging,
-                "buckets": buckets,
-                "batch_id": batch_id,
-                "schema_json": schema_json,
-                "change_dir": change_dir,
-                "pid": os.getpid(),
-                "wall_ts": time.time(),
-            },
-            fh,
-        )
-    os.rename(tmp, _commit_path(target_path))
+    man = {
+        "token": token,
+        "staging": staging,
+        "buckets": buckets,
+        "batch_id": batch_id,
+        "schema_json": schema_json,
+        "change_dir": change_dir,
+        "pid": os.getpid(),
+        "wall_ts": time.time(),
+    }
+    write_json_atomic(_commit_path(target_path), man)
+    return man
 
 
 def _publish_change_dir(target_path: str, staging: str, change_dir: str) -> None:
@@ -292,28 +291,6 @@ def _publish_change_dir(target_path: str, staging: str, change_dir: str) -> None
         os.rename(src, dst)
 
 
-def _epoch_dir_name(batch_id) -> str:
-    """Filesystem-safe change-epoch dir name (mirrors joinview's)."""
-    safe = "".join(
-        ch if ch.isalnum() or ch in "-_." else "_" for ch in str(batch_id)
-    )
-    return f"epoch-{safe}"
-
-
-def _epoch_sort_key(name: str):
-    """Natural-order key for epoch dir names: digit runs compare as
-    integers, so epoch-10 sorts AFTER epoch-2 (lexicographic order put
-    it before, which silently misordered sequential application past 9
-    epochs — folds commute, but replica application does not)."""
-    import re
-
-    # tag each run so int/str never compare directly (mixed-form ids)
-    return [
-        (0, int(part)) if part.isdigit() else (1, part)
-        for part in re.split(r"(\d+)", name)
-    ]
-
-
 def list_merge_changes(target_path: str) -> list[str]:
     """Published change-feed epoch dirs of an upsert target, in natural
     (numeric-aware) epoch order — the order they were committed in for
@@ -323,7 +300,7 @@ def list_merge_changes(target_path: str) -> list[str]:
         return []
     return sorted(
         (n for n in os.listdir(d) if n.startswith("epoch-")),
-        key=_epoch_sort_key,
+        key=epoch_sort_key,
     )
 
 
@@ -512,32 +489,6 @@ def prune_consumed_changes(
     return victims
 
 
-def _batches_path(target_path: str) -> str:
-    return os.path.join(target_path, _BATCHES_FILE)
-
-
-def applied_batches(target_path: str) -> list:
-    """Batch ids already folded into an additive merge target (most
-    recent last; bounded to the last _BATCHES_KEEP)."""
-    p = _batches_path(target_path)
-    if not os.path.exists(p):
-        return []
-    with open(p) as fh:
-        return json.load(fh)["batch_ids"]
-
-
-def _append_applied_batch(target_path: str, batch_id) -> None:
-    ids = applied_batches(target_path)
-    if batch_id in ids:
-        return
-    ids.append(batch_id)
-    ids = ids[-_BATCHES_KEEP:]
-    tmp = _batches_path(target_path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"batch_ids": ids}, fh)
-    os.rename(tmp, _batches_path(target_path))
-
-
 def _manifest_is_stale(man: dict) -> bool:
     """A dangling manifest is safe to recover only when its writer is
     gone. Writers are serialized per target (single-writer assumption),
@@ -650,15 +601,8 @@ def _acquire_recovery_lock(lock: str, only_if_stale: bool):
     sections run at once); it stays as a permanent 0-byte
     underscore-prefixed sidecar parquet readers ignore.
 
-    FILESYSTEM CONTRACT (closing the r8 verdict's documentation note,
-    for the whole commit protocol): this layout assumes POSIX
-    single-filesystem semantics — atomic ``os.rename`` within the
-    parent directory (commit swaps, manifest publish), atomic
-    ``O_CREAT|O_EXCL`` (this lock), and advisory ``fcntl.flock`` (this
-    guard). Local filesystems and NFSv4 provide all three. HDFS
-    provides atomic create/rename but no flock — run recovery from a
-    single coordinator there. Object stores provide none of the three;
-    they need a lakehouse table format or a lease service instead.
+    The filesystem contract of the whole commit protocol (this lock,
+    this guard, the renames) is stated once, in ``_durable``.
 
     The lock body is ``pid\\ntoken``: the pid feeds the abandonment
     judge, the uuid token makes release OWNERSHIP-VERIFIED (round-9
@@ -876,66 +820,9 @@ def _recover_pending_commit_locked(
             # live writer mid-commit: leave its manifest and staging alone
             return None
         if man is not None:
-            token, staging = man["token"], man["staging"]
-            referenced.add(os.path.abspath(staging))
-            rolled = 0
-
-            # holder heartbeat (round-9 review catch): touch the lock's
-            # mtime between recovery steps so a legitimately long
-            # recovery (many buckets, huge rmtrees) never ages into the
-            # 3600 s no-heartbeat backstop and gets reclaimed mid-work —
-            # staleness now means "no step completed for an hour", not
-            # "recovery took an hour"
-            lock = os.path.join(target_path, _RECOVERY_LOCK_FILE)
-
-            def _beat():
-                try:
-                    os.utime(lock)
-                except OSError:
-                    pass
-
-            # every rename/remove below tolerates FileNotFoundError: a
-            # concurrent recoverer (or the original writer finishing) may
-            # complete any individual step first; each step is replayed
-            # idempotently toward the same final state
-            for b in man["buckets"]:
-                _beat()
-                src = os.path.join(staging, f"{BUCKET_COL}={b}")
-                dst = os.path.join(target_path, f"{BUCKET_COL}={b}")
-                if os.path.exists(src):
-                    try:
-                        if os.path.exists(dst):
-                            os.rename(dst, f"{target_path}.__old_b{b}_{token}")
-                        os.rename(src, dst)
-                        rolled += 1
-                    except FileNotFoundError:
-                        pass
-            for b in man["buckets"]:
-                _beat()
-                old = f"{target_path}.__old_b{b}_{token}"
-                if os.path.exists(old):
-                    shutil.rmtree(old, ignore_errors=True)
-            if man.get("change_dir") is not None:
-                _publish_change_dir(target_path, staging, man["change_dir"])
-            shutil.rmtree(staging, ignore_errors=True)
-            # the applied-batch ledger and evolved-schema sidecar updates
-            # are PART of the commit: replaying them here (idempotently)
-            # before the manifest is removed means a crash anywhere leaves
-            # either [not committed, not in ledger/meta] or [committed, in
-            # ledger/meta] — never a committed batch a replay would re-add,
-            # never committed evolved buckets without their schema
-            if man.get("batch_id") is not None:
-                _append_applied_batch(target_path, man["batch_id"])
-            if man.get("schema_json") is not None:
-                m = _read_bucket_meta(target_path)
-                _write_bucket_meta(
-                    target_path, m["n_buckets"], m["key_cols"], man["schema_json"]
-                )
-            try:
-                os.remove(cp)
-            except FileNotFoundError:
-                pass
-            report = {"token": token, "rolled_forward_buckets": rolled}
+            referenced.add(os.path.abspath(man["staging"]))
+            rolled = _roll_forward(target_path, man)
+            report = {"token": man["token"], "rolled_forward_buckets": rolled}
     # manifest-less staging = never reached the commit point = garbage.
     # WRITER-ONLY (round 7, review-caught): merges write staging BEFORE
     # the manifest, so a manifest-less staging dir is also what a LIVE
@@ -956,6 +843,77 @@ def _recover_pending_commit_locked(
             ):
                 shutil.rmtree(full, ignore_errors=True)
     return report
+
+
+def _roll_forward(target_path: str, man: dict) -> int:
+    """Run the commit sequence a manifest records — swap each staged
+    bucket dir in, clean up stranded olds and staging, publish the
+    change dir, record the batch id in the replay ledger and the evolved
+    schema in the meta sidecar, remove the manifest — idempotently. The
+    live writer (``_commit_staged_buckets``) and crash recovery both run
+    it, so a crashed commit is finished by exactly the steps it was
+    interrupted in. Returns the number of buckets swapped in."""
+    token, staging = man["token"], man["staging"]
+    rolled = 0
+
+    # holder heartbeat (round-9 review catch): touch the lock's
+    # mtime between recovery steps so a legitimately long
+    # recovery (many buckets, huge rmtrees) never ages into the
+    # 3600 s no-heartbeat backstop and gets reclaimed mid-work —
+    # staleness now means "no step completed for an hour", not
+    # "recovery took an hour"
+    lock = os.path.join(target_path, _RECOVERY_LOCK_FILE)
+
+    def _beat():
+        try:
+            os.utime(lock)
+        except OSError:
+            pass
+
+    # every rename/remove below tolerates FileNotFoundError: a
+    # concurrent recoverer (or the original writer finishing) may
+    # complete any individual step first; each step is replayed
+    # idempotently toward the same final state
+    for b in man["buckets"]:
+        _beat()
+        src = os.path.join(staging, f"{BUCKET_COL}={b}")
+        dst = os.path.join(target_path, f"{BUCKET_COL}={b}")
+        if os.path.exists(src):
+            try:
+                if os.path.exists(dst):
+                    # strand dirs OUTSIDE target_path: a sibling of the
+                    # partition dirs would parse as a bogus partition value
+                    os.rename(dst, f"{target_path}.__old_b{b}_{token}")
+                os.rename(src, dst)
+                rolled += 1
+            except FileNotFoundError:
+                pass
+    for b in man["buckets"]:
+        _beat()
+        old = f"{target_path}.__old_b{b}_{token}"
+        if os.path.exists(old):
+            shutil.rmtree(old, ignore_errors=True)
+    if man.get("change_dir") is not None:
+        _publish_change_dir(target_path, staging, man["change_dir"])
+    shutil.rmtree(staging, ignore_errors=True)
+    # the applied-batch ledger and evolved-schema sidecar updates
+    # are PART of the commit: replaying them here (idempotently)
+    # before the manifest is removed means a crash anywhere leaves
+    # either [not committed, not in ledger/meta] or [committed, in
+    # ledger/meta] — never a committed batch a replay would re-add,
+    # never committed evolved buckets without their schema
+    if man.get("batch_id") is not None:
+        append_applied_batch(target_path, man["batch_id"])
+    if man.get("schema_json") is not None:
+        m = _read_bucket_meta(target_path)
+        _write_bucket_meta(
+            target_path, m["n_buckets"], m["key_cols"], man["schema_json"]
+        )
+    try:
+        os.remove(_commit_path(target_path))
+    except FileNotFoundError:
+        pass
+    return rolled
 
 
 def read_merge_target(spark: SparkSession, target_path: str) -> DataFrame:
@@ -1028,13 +986,10 @@ def _commit_staged_buckets(
     change_dir=None,
 ) -> None:
     """The manifest-guarded per-bucket swap shared by every bucketed
-    commit: record the manifest (the commit point), swap each staged
-    bucket dir in, clean up stranded olds and staging, record the batch
-    id in the replay ledger (additive merges) and the evolved schema in
-    the meta sidecar (evolving merges), remove the manifest. Any
-    crash inside this sequence is rolled forward by
-    recover_pending_commit, which replays these exact steps
-    idempotently.
+    commit: record the manifest (the commit point), then run
+    ``_roll_forward`` over it — the same function
+    ``recover_pending_commit`` replays after a crash, so a live writer
+    runs exactly the steps a crashed one is recovered by.
 
     QUIESCE COOPERATION AT THE COMMIT POINT (round 10, ADVICE r9 high):
     the manifest publish — the first instant this commit becomes
@@ -1057,7 +1012,7 @@ def _commit_staged_buckets(
     while True:
         with _quiesce_fenced(target_path):
             if not _quiesce_requested(target_path):
-                _write_commit_manifest(
+                man = _write_commit_manifest(
                     target_path,
                     token,
                     staging,
@@ -1068,28 +1023,7 @@ def _commit_staged_buckets(
                 )
                 break
         _time.sleep(0.05)
-    for b in touched:
-        src = os.path.join(staging, f"{BUCKET_COL}={b}")
-        dst = os.path.join(target_path, f"{BUCKET_COL}={b}")
-        if os.path.exists(dst):
-            # strand dirs OUTSIDE target_path: a sibling of the
-            # partition dirs would parse as a bogus partition value
-            os.rename(dst, f"{target_path}.__old_b{b}_{token}")
-        if os.path.exists(src):
-            os.rename(src, dst)
-    for b in touched:
-        old = f"{target_path}.__old_b{b}_{token}"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-    if change_dir is not None:
-        _publish_change_dir(target_path, staging, change_dir)
-    shutil.rmtree(staging, ignore_errors=True)
-    if batch_id is not None:
-        _append_applied_batch(target_path, batch_id)
-    if schema_json is not None:
-        meta = _read_bucket_meta(target_path)
-        _write_bucket_meta(target_path, meta["n_buckets"], meta["key_cols"], schema_json)
-    os.remove(_commit_path(target_path))
+    _roll_forward(target_path, man)
 
 
 def merge_upsert(
@@ -1236,7 +1170,7 @@ def merge_upsert_bucketed(
         if change_feed and os.path.exists(target_path):
             # the epoch IS processed (it changed nothing): record it so a
             # replay short-circuits instead of re-running the emptiness probe
-            _append_applied_batch(target_path, batch_id)
+            append_applied_batch(target_path, batch_id)
         return {
             "before_touched": 0,
             "updates": 0,
@@ -1264,9 +1198,9 @@ def merge_upsert_bucketed(
             # creation: every row is an insert; the change set and the
             # ledger entry land inside the same creating rename
             updates.withColumn("change_type", F.lit("insert")).write.parquet(
-                os.path.join(staging, "_changes", _epoch_dir_name(batch_id))
+                os.path.join(staging, "_changes", epoch_dir_name(batch_id))
             )
-            _append_applied_batch(staging, batch_id)
+            append_applied_batch(staging, batch_id)
         os.rename(staging, target_path)
         out = {
             "before_touched": 0,
@@ -1276,7 +1210,7 @@ def merge_upsert_bucketed(
             "n_buckets": n_buckets,
         }
         if change_feed:
-            out["change_dir"] = _epoch_dir_name(batch_id)
+            out["change_dir"] = epoch_dir_name(batch_id)
         return out
 
     if not is_bucketed(target_path):
@@ -1361,7 +1295,7 @@ def merge_upsert_bucketed(
             # update_postimage convention) so a downstream aggregate can
             # RETRACT the old contribution — after-images alone cannot
             # maintain SUM/COUNT of the target's current state.
-            change_dir = _epoch_dir_name(batch_id)
+            change_dir = epoch_dir_name(batch_id)
             upd_keys = upd.select(*key_cols).distinct()
             before_p = target.join(upd_keys, key_cols, "left_semi").select(
                 *key_cols, F.struct(*non_key).alias("_old")
@@ -1508,7 +1442,7 @@ def merge_delete_bucketed(
         )
         if not touched:
             if batch_id is not None:
-                _append_applied_batch(target_path, batch_id)
+                append_applied_batch(target_path, batch_id)
             return {
                 "before_touched": 0,
                 "deleted": 0,
@@ -1533,7 +1467,7 @@ def merge_delete_bucketed(
             os.makedirs(os.path.join(staging, f"{BUCKET_COL}={b}"), exist_ok=True)
         change_dir = None
         if change_feed:
-            change_dir = _epoch_dir_name(batch_id)
+            change_dir = epoch_dir_name(batch_id)
             removed = target.join(kd.select(*key_cols), key_cols, "left_semi")
             non_key = [
                 c for c in removed.columns if c not in (*key_cols, BUCKET_COL)
@@ -1652,7 +1586,7 @@ def apply_merge_changes(
         n = spark.read.parquet(staging).count()
         _write_bucket_meta(staging, n_buckets, list(key_cols))
         if batch_id is not None:
-            _append_applied_batch(staging, batch_id)
+            append_applied_batch(staging, batch_id)
         os.rename(staging, target_path)
         return {
             "upserted": n,
@@ -1703,7 +1637,7 @@ def apply_merge_changes(
         )
         if not touched:
             if batch_id is not None:
-                _append_applied_batch(target_path, batch_id)
+                append_applied_batch(target_path, batch_id)
             return {
                 "upserted": 0,
                 "deleted": 0,
@@ -2692,7 +2626,7 @@ def merge_additive_bucketed(
         if hist_cols:
             _write_hist_edges(staging, hist_cols)
         if batch_id is not None:
-            _append_applied_batch(staging, batch_id)
+            append_applied_batch(staging, batch_id)
         os.rename(staging, target_path)
         return {
             "applied": True,
@@ -2738,7 +2672,7 @@ def merge_additive_bucketed(
             # die reading its own footerless output — record the epoch in
             # the ledger (the batch IS processed) and leave the state be
             if batch_id is not None:
-                _append_applied_batch(target_path, batch_id)
+                append_applied_batch(target_path, batch_id)
             return {
                 "applied": True,
                 "batch_id": batch_id,
@@ -2905,8 +2839,7 @@ def rebucket_target(
     _write_bucket_meta(tmp, n_buckets, list(key_cols))
     hw = _read_hw_sidecar(target_path)
     if hw is not None:
-        with open(_hw_sidecar_path(tmp), "w") as fh:
-            json.dump(hw, fh)
+        write_json_atomic(_hw_sidecar_path(tmp), hw)
     hist = _read_hist_edges(target_path)
     if hist:  # additive view: the pinned edge spec must survive rebucketing
         _write_hist_edges(tmp, hist)
@@ -2914,8 +2847,7 @@ def rebucket_target(
     if ids:
         # additive view: losing the replay ledger on rebucket would let a
         # restarted stream double-add its next replayed epoch
-        with open(_batches_path(tmp), "w") as fh:
-            json.dump({"batch_ids": ids}, fh)
+        write_json_atomic(os.path.join(tmp, _BATCHES_FILE), {"batch_ids": ids})
     old = f"{target_path}.__old_{uuid.uuid4().hex[:8]}"
     os.rename(target_path, old)
     os.rename(tmp, target_path)
@@ -2938,22 +2870,17 @@ def _read_hw_sidecar(target_path: str) -> dict | None:
 def _write_hw_sidecar(
     target_path: str, watermark_col: str, high_water, dtype: str, total: int
 ) -> None:
-    """Atomic (write-tmp + rename) sidecar update, mirroring the
-    _merge_buckets.json pattern. Underscore-prefixed, so Spark's file
-    index never lists it as data."""
-    p = _hw_sidecar_path(target_path)
-    tmp = f"{p}.__tmp_{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "watermark_col": watermark_col,
-                "high_water": None if high_water is None else str(high_water),
-                "dtype": dtype,
-                "total": total,
-            },
-            fh,
-        )
-    os.replace(tmp, p)
+    """Atomic sidecar update (``write_json_atomic``). Underscore-prefixed,
+    so Spark's file index never lists it as data."""
+    write_json_atomic(
+        _hw_sidecar_path(target_path),
+        {
+            "watermark_col": watermark_col,
+            "high_water": None if high_water is None else str(high_water),
+            "dtype": dtype,
+            "total": total,
+        },
+    )
 
 
 def incremental_append(

@@ -30,15 +30,14 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._durable import append_applied_batch, applied_batches, epoch_number
 from .merge import (
     BUCKET_COL,
-    _append_applied_batch,
     _commit_staged_buckets,
     _read_bucket_meta,
     _widened_schema,
     _with_bucket,
     _write_bucket_meta,
-    applied_batches,
     is_bucketed,
     list_merge_changes,
     read_merge_changes,
@@ -48,20 +47,6 @@ from .merge import (
 
 FROM_COL = "_from_epoch"
 TO_COL = "_to_epoch"
-
-
-def _epoch_number(name: str) -> int:
-    """The numeric id of ``epoch-<n>`` — SCD-2 validity is an ordered
-    axis (as-of queries compare against it), so only numeric epoch ids
-    are foldable; a non-numeric batch id raises rather than producing a
-    history whose versions cannot be ordered."""
-    suffix = name.split("epoch-", 1)[-1]
-    if not suffix.isdigit():
-        raise ValueError(
-            f"SCD-2 folds need numeric epoch ids (got {name!r}): validity "
-            "ranges must be orderable for as-of queries"
-        )
-    return int(suffix)
 
 
 def fold_changes_scd2(
@@ -101,7 +86,7 @@ def fold_changes_scd2(
     for name in names:
         if name in applied_batches(history_path):
             continue
-        e = _epoch_number(name)
+        e = epoch_number(name)
         ch = read_merge_changes(spark, target_path, [name])
         results.append(
             _fold_one_epoch(
@@ -151,7 +136,7 @@ def _fold_one_epoch(
         upd.write.partitionBy(BUCKET_COL).parquet(staging)
         n = spark.read.parquet(staging).count()
         _write_bucket_meta(staging, n_buckets, list(key_cols))
-        _append_applied_batch(staging, epoch_name)
+        append_applied_batch(staging, epoch_name)
         os.rename(staging, history_path)
         return {"opened": n, "closed": 0, "touched_buckets": n_buckets}
 
@@ -195,7 +180,7 @@ def _fold_one_epoch(
             r[BUCKET_COL] for r in all_keys.select(BUCKET_COL).distinct().collect()
         )
         if not touched:
-            _append_applied_batch(history_path, epoch_name)
+            append_applied_batch(history_path, epoch_name)
             return {"opened": 0, "closed": 0, "touched_buckets": 0}
         hist = spark.read.schema(hist_schema).parquet(history_path).filter(
             F.col(BUCKET_COL).isin(touched)

@@ -22,6 +22,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# AQE coalescing floor (see get_spark for the measurement behind it)
+AQE_MIN_PARTITION_SIZE = "64k"
 
 
 def get_spark(
@@ -54,10 +56,9 @@ def get_spark(
         # more tasks. Measured min-of-4 interleaved at sf0.1: capped
         # Jaccard 1.34 vs 1.51 s, containment 1.38 vs 1.49, triangle
         # 1.43 vs 1.55, q3 0.77 vs 0.83; no query regressed (round 14).
-        # Env-parameterized so a deployment can restore Spark's default.
         .config(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
+            AQE_MIN_PARTITION_SIZE,
         )
         .config(
             "spark.sql.shuffle.partitions",
@@ -90,7 +91,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
         ("spark.sql.session.timeZone", "UTC"),
         (
             "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"),
+            AQE_MIN_PARTITION_SIZE,
         ),
     ):
         try:

@@ -1315,22 +1315,23 @@ class TestRound7CrashWindows:
         merge_upsert_bucketed(spark, target, base, ["id"], n_buckets=4)
 
         upd = spark.createDataFrame([(1, "N1", 9.5)], ["id", "name", "score"])
-        real_rename = os.rename
+        # the sidecar is published by _durable.write_json_atomic's replace
+        real_replace = os.replace
         meta_final = os.path.join(target, "_merge_buckets.json")
 
-        def dying_rename(src, dst):
+        def dying_replace(src, dst):
             if str(dst) == meta_final:
                 # crash AFTER the bucket swaps, BEFORE the evolved schema
                 # reaches the sidecar — the exact ADVICE r6 window
                 raise RuntimeError("simulated crash before meta write")
-            return real_rename(src, dst)
+            return real_replace(src, dst)
 
-        monkeypatch.setattr(merge_mod.os, "rename", dying_rename)
+        monkeypatch.setattr(merge_mod.os, "replace", dying_replace)
         with pytest.raises(RuntimeError, match="before meta write"):
             merge_upsert_bucketed(
                 spark, target, upd, ["id"], n_buckets=4, allow_evolution=True
             )
-        monkeypatch.setattr(merge_mod.os, "rename", real_rename)
+        monkeypatch.setattr(merge_mod.os, "replace", real_replace)
 
         # mixed-schema buckets are committed, manifest dangles with the
         # evolved schema; recovery must persist it before any read

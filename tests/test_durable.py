@@ -1,0 +1,479 @@
+"""Durability of on-disk state, without Spark.
+
+- ``_durable.write_json_atomic`` leaves the old JSON or the new JSON,
+  never a torn file or a ``.tmp.*`` sibling, whichever step raises;
+- the bucketed-merge and join-view commits recover to exactly the
+  pre-state or the post-state from a crash at every rename/replace;
+- reader-side join-view recovery honours merge's recovery lock;
+- every JSON state write and every rename outside ``_durable.py`` is a
+  named, reasoned exception (AST guard).
+
+The commit sequences are pure directory surgery, so marker files stand
+in for parquet bucket dirs.
+"""
+
+from __future__ import annotations
+
+import ast
+import json
+import os
+import shutil
+import subprocess
+import tempfile
+from pathlib import Path
+from unittest import mock
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from database_clonev2_spark import _durable
+from database_clonev2_spark._durable import applied_batches, write_json_atomic
+from database_clonev2_spark.pipeline import joinview as jv
+from database_clonev2_spark.pipeline import merge as mg
+
+
+def _dead_pid() -> int:
+    proc = subprocess.Popen(["true"])
+    proc.wait()
+    return proc.pid
+
+
+def _crash_on_call(real, k: int, state: dict):
+    """``real`` wrapped to raise on its k-th call (1-based)."""
+
+    def dying(*args, **kwargs):
+        state["n"] += 1
+        if state["n"] == k:
+            raise RuntimeError("crash")
+        return real(*args, **kwargs)
+
+    return dying
+
+
+# ---------------------------------------------------------------------------
+# write_json_atomic
+# ---------------------------------------------------------------------------
+
+_json_values = st.recursive(
+    st.none() | st.booleans() | st.integers() | st.text(max_size=20),
+    lambda inner: st.lists(inner, max_size=4)
+    | st.dictionaries(st.text(max_size=8), inner, max_size=4),
+    max_leaves=12,
+)
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    old=st.none() | st.dictionaries(st.text(max_size=8), _json_values, max_size=4),
+    new=st.dictionaries(st.text(max_size=8), _json_values, max_size=4),
+    step=st.sampled_from(["tmp_write", "fsync", "replace", "dir_fsync"]),
+)
+def test_write_json_atomic_never_tears(old, new, step):
+    d = tempfile.mkdtemp()
+    try:
+        path = os.path.join(d, "_state.json")
+        if old is not None:
+            write_json_atomic(path, old)
+        real_dump, real_fsync, real_replace = json.dump, os.fsync, os.replace
+        state = {"n": 0}
+
+        def torn_dump(obj, fh):
+            text = json.dumps(obj)
+            fh.write(text[: len(text) // 2])
+            raise OSError("ENOSPC mid-write")
+
+        patches = {
+            "tmp_write": mock.patch.object(_durable.json, "dump", torn_dump),
+            "fsync": mock.patch.object(
+                _durable.os, "fsync", _crash_on_call(real_fsync, 1, state)
+            ),
+            "replace": mock.patch.object(
+                _durable.os, "replace", _crash_on_call(real_replace, 1, state)
+            ),
+            "dir_fsync": mock.patch.object(
+                _durable.os, "fsync", _crash_on_call(real_fsync, 2, state)
+            ),
+        }
+        with patches[step], pytest.raises((OSError, RuntimeError)):
+            write_json_atomic(path, new)
+        assert json.dump is real_dump
+        if step == "dir_fsync":
+            # the replace already published: the new JSON is the state
+            with open(path) as fh:
+                assert json.load(fh) == new
+        elif old is None:
+            assert not os.path.exists(path)
+        else:
+            with open(path) as fh:
+                assert json.load(fh) == old
+        assert [n for n in os.listdir(d) if ".tmp." in n] == []
+    finally:
+        shutil.rmtree(d)
+
+
+def test_ledger_is_shared_and_bounded(tmp_path, monkeypatch):
+    d = str(tmp_path)
+    assert applied_batches(d) == []
+    monkeypatch.setattr(_durable, "_BATCHES_KEEP", 3)
+    for b in [1, 2, 2, "e-3", 4]:
+        _durable.append_applied_batch(d, b)
+    assert applied_batches(d) == [2, "e-3", 4]
+    # merge's importable name reads the same ledger file
+    assert mg.applied_batches(d) == [2, "e-3", 4]
+
+
+def test_epoch_names():
+    assert _durable.epoch_dir_name(7) == "epoch-7"
+    assert _durable.epoch_dir_name("a/b c") == "epoch-a_b_c"
+    assert _durable.epoch_number("epoch-12") == 12
+    with pytest.raises(ValueError, match="numeric epoch ids"):
+        _durable.epoch_number("epoch-x1")
+    names = [f"epoch-{i}" for i in (0, 1, 2, 10, 11, 3, 20)]
+    assert sorted(names, key=_durable.epoch_sort_key) == [
+        "epoch-0", "epoch-1", "epoch-2", "epoch-3",
+        "epoch-10", "epoch-11", "epoch-20",
+    ]
+
+
+def test_join_change_epochs_list_in_natural_order(tmp_path):
+    root = str(tmp_path)
+    for i in (0, 2, 10, 1):
+        os.makedirs(os.path.join(root, "_changes", f"epoch-{i}"))
+    assert jv.list_join_change_epochs(root) == [
+        "epoch-0", "epoch-1", "epoch-2", "epoch-10",
+    ]
+
+
+# ---------------------------------------------------------------------------
+# join view: tri-store commit
+# ---------------------------------------------------------------------------
+
+_JV_STAGED = {"left": [0, 1], "right": [2], "view": [0, 2]}
+_JV_TOKEN = "tok1"
+
+
+def _build_join_root(root: str, pid: int | None = None) -> dict:
+    shutil.rmtree(root, ignore_errors=True)
+    for store in ("left", "right", "view"):
+        for b in range(3):
+            d = os.path.join(root, store, f"{jv.BUCKET_COL}={b}")
+            os.makedirs(d)
+            Path(d, "marker").write_text("old")
+    for store, bs in _JV_STAGED.items():
+        for b in bs:
+            d = os.path.join(
+                root, f".__stage_{_JV_TOKEN}", store, f"{jv.BUCKET_COL}={b}"
+            )
+            os.makedirs(d)
+            Path(d, "marker").write_text("new")
+    cd = os.path.join(root, f".__stage_{_JV_TOKEN}", "changes")
+    os.makedirs(cd)
+    Path(cd, "marker").write_text("delta")
+    man = {
+        "token": _JV_TOKEN,
+        "staged": _JV_STAGED,
+        "batch_id": 7,
+        "change_dir": "epoch-7",
+    }
+    if pid is not None:
+        man.update(pid=pid, wall_ts=0)
+    with open(os.path.join(root, "_commit.json"), "w") as fh:
+        json.dump(man, fh)
+    return man
+
+
+def _join_snapshot(root: str) -> dict:
+    return {
+        (store, b): Path(
+            root, store, f"{jv.BUCKET_COL}={b}", "marker"
+        ).read_text()
+        for store in ("left", "right", "view")
+        for b in range(3)
+    }
+
+
+def test_join_roll_forward_recovers_from_every_crash_position(tmp_path, monkeypatch):
+    """Exhaustive crash-position sweep over the tri-store commit: kill
+    _roll_forward at EVERY rename step, then recover; the final state
+    must be identical regardless of where the crash landed."""
+    ref_root = str(tmp_path / "ref")
+    man = _build_join_root(ref_root)
+    jv._roll_forward(ref_root, man)
+    want = _join_snapshot(ref_root)
+    assert want == {
+        (s, b): ("new" if b in _JV_STAGED[s] else "old")
+        for s in ("left", "right", "view")
+        for b in range(3)
+    }
+    assert Path(ref_root, "_changes", "epoch-7", "marker").read_text() == "delta"
+    n_renames = 1 + sum(2 * len(bs) for bs in _JV_STAGED.values())  # + change dir
+
+    for k in range(1, n_renames + 1):
+        root = str(tmp_path / f"crash{k}")
+        man = _build_join_root(root)
+        monkeypatch.setattr(
+            jv.os, "rename", _crash_on_call(os.rename, k, {"n": 0})
+        )
+        try:
+            jv._roll_forward(root, man)
+            crashed = False
+        except RuntimeError:
+            crashed = True
+        finally:
+            monkeypatch.undo()
+        # recovery = replay the same manifest
+        if crashed:
+            jv._roll_forward(root, man)
+        assert _join_snapshot(root) == want, f"divergence after crash at rename {k}"
+        assert Path(root, "_changes", "epoch-7", "marker").read_text() == "delta", k
+        assert applied_batches(root) == [7], k
+        assert not os.path.exists(os.path.join(root, "_commit.json")), k
+        assert not os.path.exists(os.path.join(root, f".__stage_{_JV_TOKEN}")), k
+        residue = [d for d in os.listdir(root) if d.startswith(".__old_")]
+        assert residue == [], (k, residue)
+
+
+def test_join_reader_recovery_waits_for_the_recovery_lock(tmp_path):
+    """A reader replaying a dead writer's manifest while another
+    recoverer holds the lock could strand that recoverer's freshly
+    swapped bucket to ``.__old_`` and delete it; the reader must skip,
+    leaving every bucket dir and the manifest untouched."""
+    root = str(tmp_path / "jv")
+    _build_join_root(root, pid=_dead_pid())
+    lock = os.path.join(root, mg._RECOVERY_LOCK_FILE)
+    Path(lock).write_text(f"{os.getpid()}\nlive-holder\n")
+    cp = os.path.join(root, "_commit.json")
+    manifest_before = Path(cp).read_text()
+    stage = os.path.join(root, f".__stage_{_JV_TOKEN}")
+
+    jv.recover_pending_join_commit(root, only_if_stale=True)
+
+    assert _join_snapshot(root) == {
+        (s, b): "old" for s in ("left", "right", "view") for b in range(3)
+    }
+    assert Path(cp).read_text() == manifest_before
+    for store, bs in _JV_STAGED.items():
+        for b in bs:
+            assert Path(
+                stage, store, f"{jv.BUCKET_COL}={b}", "marker"
+            ).read_text() == "new"
+    assert not os.path.exists(os.path.join(root, "_changes"))
+    assert applied_batches(root) == []
+    assert Path(lock).read_text() == f"{os.getpid()}\nlive-holder\n"
+
+    # once the holder is gone, the same reader call rolls forward
+    os.remove(lock)
+    jv.recover_pending_join_commit(root, only_if_stale=True)
+    assert _join_snapshot(root) == {
+        (s, b): ("new" if b in _JV_STAGED[s] else "old")
+        for s in ("left", "right", "view")
+        for b in range(3)
+    }
+    assert not os.path.exists(cp)
+    assert not os.path.exists(lock)
+
+
+# ---------------------------------------------------------------------------
+# bucketed merge: single-store commit
+# ---------------------------------------------------------------------------
+
+_MG_TOUCHED = [0, 2, 3]
+_MG_TOKEN = "tokm"
+_MG_SCHEMA = '{"type":"struct","fields":[]}'
+
+
+def _build_merge_target(target: str) -> str:
+    shutil.rmtree(target, ignore_errors=True)
+    staging = f"{target}.__stage_{_MG_TOKEN}"
+    shutil.rmtree(staging, ignore_errors=True)
+    for b in range(4):
+        d = os.path.join(target, f"{mg.BUCKET_COL}={b}")
+        os.makedirs(d)
+        Path(d, "marker").write_text("old")
+    with open(os.path.join(target, "_merge_buckets.json"), "w") as fh:
+        json.dump({"n_buckets": 4, "key_cols": ["k"]}, fh)
+    for b in _MG_TOUCHED:
+        d = os.path.join(staging, f"{mg.BUCKET_COL}={b}")
+        os.makedirs(d)
+        Path(d, "marker").write_text("new")
+    cd = os.path.join(staging, "__changes")
+    os.makedirs(cd)
+    Path(cd, "marker").write_text("delta")
+    return staging
+
+
+def _merge_state(target: str) -> dict:
+    """Everything a commit may change: bucket contents, the change feed,
+    the ledger, the meta sidecar, and any manifest/staging/strand/tmp
+    residue next to or inside the target."""
+    parent, base = os.path.split(target)
+    changes = os.path.join(target, "_changes")
+    return {
+        "buckets": {
+            b: Path(target, f"{mg.BUCKET_COL}={b}", "marker").read_text()
+            for b in range(4)
+        },
+        "changes": sorted(os.listdir(changes)) if os.path.isdir(changes) else [],
+        "ledger": applied_batches(target),
+        "meta": json.loads(Path(target, "_merge_buckets.json").read_text()),
+        "residue": sorted(
+            n
+            for n in os.listdir(parent)
+            if n.startswith(base + ".")
+        )
+        + sorted(
+            n
+            for n in os.listdir(target)
+            if n == "_commit.json" or ".tmp" in n
+        ),
+    }
+
+
+def _commit(target: str, staging: str) -> None:
+    mg._commit_staged_buckets(
+        target,
+        _MG_TOKEN,
+        staging,
+        _MG_TOUCHED,
+        batch_id=5,
+        schema_json=_MG_SCHEMA,
+        change_dir="epoch-5",
+    )
+
+
+def _count_calls(target: str, staging: str, monkeypatch) -> dict:
+    counts = {"rename": 0, "replace": 0}
+    for name in counts:
+        real = getattr(os, name)
+
+        def counting(*a, _name=name, _real=real, **kw):
+            counts[_name] += 1
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(mg.os, name, counting)
+    _commit(target, staging)
+    monkeypatch.undo()
+    return counts
+
+
+def test_merge_commit_recovers_from_every_crash_position(tmp_path, monkeypatch):
+    """Exhaustive crash-position sweep over the single-store merge
+    commit (the tri-store sibling is swept above): kill
+    _commit_staged_buckets at EVERY os.rename (bucket swaps, change-dir
+    publish) and EVERY os.replace (manifest publish, ledger append, meta
+    write), recover via recover_pending_commit, and require exactly the
+    pre-state or the post-state."""
+    pre_target = str(tmp_path / "pre.parquet")
+    _build_merge_target(pre_target)
+    shutil.rmtree(f"{pre_target}.__stage_{_MG_TOKEN}")
+    pre = _merge_state(pre_target)
+
+    ref = str(tmp_path / "ref.parquet")
+    counts = _count_calls(ref, _build_merge_target(ref), monkeypatch)
+    post = _merge_state(ref)
+    assert post["buckets"] == {0: "new", 1: "old", 2: "new", 3: "new"}
+    assert post["changes"] == ["epoch-5"]
+    assert post["ledger"] == [5]
+    assert post["meta"]["schema_json"] == _MG_SCHEMA
+    assert post["residue"] == []
+    # 3 swaps × 2 renames + the change dir; manifest + ledger + meta
+    assert counts == {"rename": 2 * len(_MG_TOUCHED) + 1, "replace": 3}
+
+    for name, n in counts.items():
+        for k in range(1, n + 1):
+            target = str(tmp_path / f"crash_{name}{k}.parquet")
+            staging = _build_merge_target(target)
+            monkeypatch.setattr(
+                mg.os, name, _crash_on_call(getattr(os, name), k, {"n": 0})
+            )
+            try:
+                with pytest.raises(RuntimeError, match="crash"):
+                    _commit(target, staging)
+            finally:
+                monkeypatch.undo()
+            mg.recover_pending_commit(target)
+            got = _merge_state(target)
+            # the manifest publish is the commit point: a crash at it
+            # leaves nothing committed, a crash after it rolls forward
+            want = pre if (name, k) == ("replace", 1) else post
+            assert got == want, (name, k, got)
+            assert Path(
+                target, "_changes", "epoch-5", "marker"
+            ).exists() == (want is post), (name, k)
+
+
+# ---------------------------------------------------------------------------
+# guard: one commit module
+# ---------------------------------------------------------------------------
+
+_PKG = Path(__file__).resolve().parent.parent / "database_clonev2_spark"
+
+_RENAME = {"os.rename"}
+_CREATION = "staging → target creation commit: one directory rename publishes data, meta and ledger together"
+_LEASE = "quiesce lease: renamed inside _quiesce_fenced after its check; a sweepable lease, not recoverable state"
+#: (module, function) → (calls it may make outside ``_durable.py``, why).
+#: Directory renames are not JSON state; only the two quiesce-lease
+#: writers may json.dump, because their rename must happen inside the
+#: fence.
+ALLOWED = {
+    ("pipeline/merge.py", "_swap_write"): (_RENAME, "flat-layout directory swap"),
+    ("pipeline/merge.py", "rebucket_target"): (_RENAME, "whole-layout directory swap"),
+    ("pipeline/merge.py", "_roll_forward"): (_RENAME, "manifest-guarded bucket-dir swaps"),
+    ("pipeline/merge.py", "_publish_change_dir"): (_RENAME, "moves a staged change-epoch dir under _changes/"),
+    ("pipeline/merge.py", "merge_upsert_bucketed"): (_RENAME, _CREATION),
+    ("pipeline/merge.py", "apply_merge_changes"): (_RENAME, _CREATION),
+    ("pipeline/merge.py", "merge_additive_bucketed"): (_RENAME, _CREATION),
+    ("pipeline/merge.py", "request_quiesce"): ({"json.dump", "os.rename"}, _LEASE),
+    ("pipeline/merge.py", "_refresh_quiesce_marker"): ({"json.dump", "os.replace"}, _LEASE),
+    ("pipeline/joinview.py", "_roll_forward"): (_RENAME, "manifest-guarded tri-store bucket-dir swaps and change-dir publish"),
+    ("pipeline/joinview.py", "maintain_join_view"): (_RENAME, _CREATION),
+    ("pipeline/scd2.py", "_fold_one_epoch"): (_RENAME, _CREATION),
+}
+
+
+def _state_writes() -> dict:
+    """(module, innermost function) → {call: [lines]} for every
+    json.dump, os.rename and os.replace call in the package outside
+    _durable.py."""
+    hits: dict = {}
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        if rel == "_durable.py":
+            continue
+
+        def visit(node, func):
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    visit(child, child.name)
+                    continue
+                if (
+                    isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and isinstance(child.func.value, ast.Name)
+                    and (child.func.value.id, child.func.attr)
+                    in {("json", "dump"), ("os", "rename"), ("os", "replace")}
+                ):
+                    call = f"{child.func.value.id}.{child.func.attr}"
+                    hits.setdefault((rel, func), {}).setdefault(call, []).append(
+                        child.lineno
+                    )
+                visit(child, func)
+
+        visit(ast.parse(path.read_text()), "<module>")
+    return hits
+
+
+def test_state_writes_go_through_durable():
+    hits = _state_writes()
+    stray = {
+        k: {c: lines for c, lines in calls.items() if c not in ALLOWED.get(k, ((),))[0]}
+        for k, calls in hits.items()
+    }
+    stray = {k: v for k, v in stray.items() if v}
+    assert stray == {}, (
+        "write JSON state with _durable.write_json_atomic; a directory "
+        f"swap needs a named entry in ALLOWED: {stray}"
+    )
+    stale = sorted(set(ALLOWED) - set(hits))
+    assert stale == [], f"allowlisted functions no longer rename: {stale}"

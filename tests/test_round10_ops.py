@@ -487,6 +487,7 @@ class TestQuiesceFence:
         writer that never checks markers) must cost a RETRY, not a torn
         cut — the lazy branch now reruns the validation the
         materialized branch always had."""
+        from database_clonev2_spark._durable import append_applied_batch
         from database_clonev2_spark.pipeline import merge as merge_mod
 
         tgt = _bucketed_table(spark, tmp_path, "t", [(1, "a"), (2, "b")])
@@ -499,7 +500,7 @@ class TestQuiesceFence:
             # BEFORE the revalidation at return
             if fired["n"] == 0:
                 fired["n"] = 1
-                merge_mod._append_applied_batch(p, "e-midair")
+                append_applied_batch(p, "e-midair")
             return real_read(sp, p)
 
         monkeypatch.setattr(

@@ -1201,203 +1201,6 @@ class TestBucketedCompaction:
             compact_parquet(spark, target)
 
 
-def test_join_roll_forward_recovers_from_every_crash_position(tmp_path, monkeypatch):
-    """Exhaustive crash-position sweep over the tri-store commit: kill
-    _roll_forward at EVERY rename step, then recover; the final state
-    must be identical regardless of where the crash landed (no Spark —
-    the commit sequence is pure directory surgery, so marker files
-    stand in for parquet bucket dirs)."""
-    import json
-    import os
-    import shutil
-
-    from database_clonev2_spark.pipeline import joinview as jv
-
-    staged_spec = {"left": [0, 1], "right": [2], "view": [0, 2]}
-    token = "tok1"
-
-    def build(root):
-        shutil.rmtree(root, ignore_errors=True)
-        for store in ("left", "right", "view"):
-            for b in range(3):
-                d = os.path.join(root, store, f"{jv.BUCKET_COL}={b}")
-                os.makedirs(d)
-                open(os.path.join(d, "marker"), "w").write("old")
-        for store, bs in staged_spec.items():
-            for b in bs:
-                d = os.path.join(root, f".__stage_{token}", store, f"{jv.BUCKET_COL}={b}")
-                os.makedirs(d)
-                open(os.path.join(d, "marker"), "w").write("new")
-        cd = os.path.join(root, f".__stage_{token}", "changes")
-        os.makedirs(cd)
-        open(os.path.join(cd, "marker"), "w").write("delta")
-        man = {
-            "token": token,
-            "staged": staged_spec,
-            "batch_id": 7,
-            "change_dir": "epoch-7",
-        }
-        with open(os.path.join(root, "_commit.json"), "w") as fh:
-            json.dump(man, fh)
-        return man
-
-    def snapshot(root):
-        out = {}
-        for store in ("left", "right", "view"):
-            for b in range(3):
-                p = os.path.join(root, store, f"{jv.BUCKET_COL}={b}", "marker")
-                out[(store, b)] = open(p).read()
-        return out
-
-    # reference: uninterrupted roll-forward
-    ref_root = str(tmp_path / "ref")
-    man = build(ref_root)
-    jv._roll_forward(ref_root, man)
-    want = snapshot(ref_root)
-    assert want == {
-        (s, b): ("new" if b in staged_spec[s] else "old")
-        for s in ("left", "right", "view")
-        for b in range(3)
-    }
-    assert (
-        open(os.path.join(ref_root, "_changes", "epoch-7", "marker")).read()
-        == "delta"
-    )
-    n_renames = 1 + sum(2 * len(bs) for bs in staged_spec.values())  # + change dir
-
-    real_rename = os.rename
-    for k in range(1, n_renames + 1):
-        root = str(tmp_path / f"crash{k}")
-        man = build(root)
-        state = {"n": 0}
-
-        def dying(src, dst, _k=k):
-            state["n"] += 1
-            if state["n"] == _k:
-                raise RuntimeError("crash")
-            return real_rename(src, dst)
-
-        monkeypatch.setattr(jv.os, "rename", dying)
-        try:
-            jv._roll_forward(root, man)
-            crashed = False
-        except RuntimeError:
-            crashed = True
-        finally:
-            monkeypatch.setattr(jv.os, "rename", real_rename)
-        # recovery = replay the same manifest
-        if crashed:
-            jv._roll_forward(root, man)
-        assert snapshot(root) == want, f"divergence after crash at rename {k}"
-        assert (
-            open(os.path.join(root, "_changes", "epoch-7", "marker")).read()
-            == "delta"
-        ), k
-        assert jv.applied_join_batches(root) == [7], k
-        assert not os.path.exists(os.path.join(root, "_commit.json")), k
-        assert not os.path.exists(os.path.join(root, f".__stage_{token}")), k
-        residue = [d for d in os.listdir(root) if d.startswith(".__old_")]
-        assert residue == [], (k, residue)
-
-
-def test_merge_commit_recovers_from_every_crash_position(tmp_path, monkeypatch):
-    """Exhaustive crash-position sweep over the single-store merge
-    commit (the tri-store sibling is swept above): kill
-    _commit_staged_buckets at EVERY rename, recover via
-    recover_pending_commit, and require the identical final state."""
-    import json
-    import os
-    import shutil
-
-    from database_clonev2_spark.pipeline import merge as mg
-
-    touched = [0, 2, 3]
-    token = "tokm"
-
-    def build(target):
-        shutil.rmtree(target, ignore_errors=True)
-        staging = f"{target}.__stage_{token}"
-        for b in range(4):
-            d = os.path.join(target, f"{mg.BUCKET_COL}={b}")
-            os.makedirs(d)
-            open(os.path.join(d, "marker"), "w").write("old")
-        with open(os.path.join(target, "_merge_buckets.json"), "w") as fh:
-            json.dump({"n_buckets": 4, "key_cols": ["k"]}, fh)
-        for b in touched:
-            d = os.path.join(staging, f"{mg.BUCKET_COL}={b}")
-            os.makedirs(d)
-            open(os.path.join(d, "marker"), "w").write("new")
-        cd = os.path.join(staging, "__changes")
-        os.makedirs(cd)
-        open(os.path.join(cd, "marker"), "w").write("delta")
-        return staging
-
-    def snapshot(target):
-        return {
-            b: open(
-                os.path.join(target, f"{mg.BUCKET_COL}={b}", "marker")
-            ).read()
-            for b in range(4)
-        }
-
-    ref = str(tmp_path / "ref.parquet")
-    staging = build(ref)
-    mg._commit_staged_buckets(
-        ref, token, staging, touched, batch_id=5, change_dir="epoch-5"
-    )
-    want = snapshot(ref)
-    assert want == {0: "new", 1: "old", 2: "new", 3: "new"}
-    assert (
-        open(os.path.join(ref, "_changes", "epoch-5", "marker")).read() == "delta"
-    )
-
-    real_rename = os.rename
-    for k in range(1, 2 * len(touched) + 2):
-        target = str(tmp_path / f"crash{k}.parquet")
-        staging = build(target)
-        state = {"n": 0}
-
-        def dying(src, dst, _k=k):
-            state["n"] += 1
-            if state["n"] == _k:
-                raise RuntimeError("crash")
-            return real_rename(src, dst)
-
-        monkeypatch.setattr(mg.os, "rename", dying)
-        try:
-            mg._commit_staged_buckets(
-                target, token, staging, touched, batch_id=5, change_dir="epoch-5"
-            )
-            crashed = False
-        except RuntimeError:
-            crashed = True
-        finally:
-            monkeypatch.setattr(mg.os, "rename", real_rename)
-        if crashed and os.path.exists(os.path.join(target, "_commit.json")):
-            mg.recover_pending_commit(target)
-        elif crashed:
-            # crashed before the manifest landed: nothing committed, the
-            # writer-path sweep discards the orphan staging
-            mg.recover_pending_commit(target)
-            assert snapshot(target) == {b: "old" for b in range(4)}, k
-            continue
-        assert snapshot(target) == want, f"divergence after crash at rename {k}"
-        assert (
-            open(os.path.join(target, "_changes", "epoch-5", "marker")).read()
-            == "delta"
-        ), k
-        assert mg.applied_batches(target) == [5], k
-        assert not os.path.exists(os.path.join(target, "_commit.json")), k
-        assert not os.path.exists(staging), k
-        residue = [
-            d
-            for d in os.listdir(str(tmp_path))
-            if d.startswith(f"crash{k}.parquet.__old_")
-            or d.startswith(f"crash{k}.parquet.__stage_")
-        ]
-        assert residue == [], (k, residue)
-
-
 def test_stream_join_maintain_tagged_both_sides(spark, tmp_path):
     """Round 7: two live join sides through one union-tagged stream —
     same-epoch pairs join via the delta-x-delta term; cross-epoch pairs
@@ -2168,15 +1971,6 @@ class TestReplicaChaining:
     """Round 7: applying a target's CDC feed to a second bucketed
     target reproduces it row-for-row — the chained-clone topology where
     each hop ships only per-epoch changed rows."""
-
-    def test_epoch_natural_order(self, tmp_path):
-        from database_clonev2_spark.pipeline.merge import _epoch_sort_key
-
-        names = [f"epoch-{i}" for i in (0, 1, 2, 10, 11, 3, 20)]
-        assert sorted(names, key=_epoch_sort_key) == [
-            "epoch-0", "epoch-1", "epoch-2", "epoch-3",
-            "epoch-10", "epoch-11", "epoch-20",
-        ]
 
     def test_replica_converges_and_resumes(self, spark, tmp_path):
         from pyspark.sql import functions as F

@@ -1,6 +1,6 @@
 """Session-scoped memoization registry for persisted sketch/quantizer
 artifacts (SimHash fingerprints, KMeans assignments, embedding near-dup
-tables).
+tables), and for the inferred parquet schemas of ``io.read_parquet``.
 
 Why this exists (review-caught, round 3):
 - keying on ``id(spark)`` is unsafe — CPython can reuse the address after
@@ -13,6 +13,8 @@ Why this exists (review-caught, round 3):
 """
 
 from __future__ import annotations
+
+from pyspark.sql import DataFrame
 
 _CACHES: list[tuple[str, dict]] = []
 
@@ -72,10 +74,12 @@ def memo_df(cache: dict, tag: str, src, build):
 
 def clear_caches(group: str | None = None) -> None:
     """Unpersist and drop registered memoized artifacts — all of them,
-    or only one ``group``'s. The caches assume the parquet under each
-    sf_dir is immutable for the session (true for the fixtures); call
-    after regenerating fixture data mid-session, or to release the
-    persisted tables. Pass ``group="identity"`` only after every
+    or only one ``group``'s. The sketch and identity caches assume the
+    parquet under each sf_dir is immutable for the session (true for the
+    fixtures); call after regenerating fixture data mid-session, or to
+    release the persisted tables. The "schema" group (``io.read_parquet``)
+    needs no clearing: it is keyed on a fingerprint of the files, so a
+    rewrite misses on its own. Pass ``group="identity"`` only after every
     ``add_identity_dense`` result has been materialized.
 
     RELEASE SEMANTICS (round-8 review note): ``DataFrame.unpersist`` only
@@ -92,8 +96,10 @@ def clear_caches(group: str | None = None) -> None:
             continue
         for v in cache.values():
             df = v[0] if isinstance(v, tuple) else v
+            if not isinstance(df, DataFrame):
+                continue  # e.g. a stored schema: nothing to release
             try:
                 df.unpersist()
-            except Exception:
+            except Exception:  # noqa: BLE001 - a frame of a stopped session
                 pass
         cache.clear()

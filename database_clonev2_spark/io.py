@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ._cache import register_cache, session_key
+
 FIXTURE_TABLES = [
     "region",
     "nation",
@@ -34,6 +36,59 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# Inferred parquet schemas, one entry per (session, path, nanosAsLong):
+# the fingerprint the schema was read from, and the schema. Its own group,
+# so a sketch-scoped clear never drops it.
+_SCHEMAS = register_cache("schema")
+
+
+def _fingerprint(path: str):
+    """``(relpath, st_ino, st_size, st_mtime_ns)`` of every file under
+    ``path`` (or of ``path`` itself for a single-file table), so any
+    rewrite, swap, append or delete changes it. None when ``path`` is not
+    a readable local file or directory."""
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
+        out = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for f in sorted(files):
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                out.append((os.path.relpath(full, path), st.st_ino, st.st_size, st.st_mtime_ns))
+        return tuple(out)
+    except OSError:
+        return None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """The one schema-less parquet read. Spark infers a parquet schema
+    with a footer-reading job; this infers it once per file set and reads
+    with the stored schema afterwards (SURVEY.md §1.3).
+
+    A miss runs the plain ``spark.read.parquet`` and returns that frame
+    (re-reading it through its own schema would resolve the relation a
+    second time). A hit is ``spark.read.schema(stored).parquet(path)``,
+    which plans to the same relation. The nanosAsLong conf is part of the
+    key because it changes what inference returns (``load`` sets it)."""
+    fp = _fingerprint(path)
+    if fp is None:  # not local, or gone: let Spark report it
+        return spark.read.parquet(path)
+    key = (
+        session_key(spark),
+        os.path.abspath(path),
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (fp, df.schema)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan; Catalyst prunes columns and pushes filters.
 
@@ -43,7 +98,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     applies when casting TIMESTAMP_NS, so oracle comparisons stay exact."""
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = read_parquet(spark, table_path(sf_dir, name))
         # Gate the rewrite on the PHYSICAL type, not the table name: only
         # when the nanosAsLong fallback actually fired does ``ts`` resolve
         # to LongType. Cloned/derived events tables already carry a micros
@@ -60,7 +115,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz"),
             )
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return read_parquet(spark, table_path(sf_dir, name))
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -28,11 +28,12 @@ from __future__ import annotations
 import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import FIXTURE_TABLES, load, table_path
+from ..io import FIXTURE_TABLES, load, read_parquet, table_path
 from .ddl import TableSpec
 
 
@@ -84,7 +85,8 @@ def clone_table(
     write_table(df, dest, fmt=fmt, mode="overwrite" if overwrite else "errorifexists")
     # row-count echo (ref Program.cs:682) — read back through the same format
     if fmt == "parquet":
-        n = spark.read.parquet(dest).count()
+        # through the schema registry: later loads of ``dest`` skip inference
+        n = read_parquet(spark, dest).count()
     elif fmt == "orc":
         n = spark.read.orc(dest).count()
     else:
@@ -164,8 +166,6 @@ def validate_foreign_key(
     parent_keys = parent.select(
         *[F.col(p).alias(c) for c, p in zip(child_cols, parent_cols)]
     ).distinct()
-    from functools import reduce
-
     all_present = reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in child_cols])
     return (
         child.select(*child_cols)
@@ -248,20 +248,32 @@ def fixture_specs(spark: SparkSession, sf_dir: str) -> list[TableSpec]:
 def validate_database(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     """Run every constraint of the fixture schema as a validation query and
     return violation counts — the observable replacement for engine-enforced
-    constraints."""
-    specs = {s.name: s for s in fixture_specs(spark, sf_dir)}
-    out: dict[str, int] = {}
-    for s in specs.values():
+    constraints.
+
+    All checks run as ONE action: each violation frame is tagged with its
+    check name, the frames are unioned, and one ``groupBy("check").count()``
+    collects every count, so the checks' stages run concurrently instead of
+    as one sequential job per check. Checks without violations are absent
+    from that result and zero-filled here."""
+    checks: dict[str, DataFrame] = {}
+    for s in fixture_specs(spark, sf_dir):
         df = load(spark, sf_dir, s.name)
         if s.primary_key:
-            out[f"pk:{s.name}"] = validate_primary_key(df, s.primary_key).count()
+            checks[f"pk:{s.name}"] = validate_primary_key(df, s.primary_key)
         for name, child_cols, parent, parent_cols in s.foreign_keys:
-            out[f"fk:{name}"] = validate_foreign_key(
+            checks[f"fk:{name}"] = validate_foreign_key(
                 df, child_cols, load(spark, sf_dir, parent), parent_cols
-            ).count()
+            )
         for name, expr in s.checks:
-            out[f"ck:{name}"] = validate_check(df, expr).count()
-    return out
+            checks[f"ck:{name}"] = validate_check(df, expr)
+    if not checks:
+        return {}
+    tagged = [v.select(F.lit(k).alias("check")) for k, v in checks.items()]
+    counts = {
+        r["check"]: r["count"]
+        for r in reduce(lambda a, b: a.union(b), tagged).groupBy("check").count().collect()
+    }
+    return {k: counts.get(k, 0) for k in checks}
 
 
 # --- index → physical layout mapping (SURVEY.md §1.1 index row) -----------

@@ -1,9 +1,11 @@
 """Source/sink surface: schema-explicit readers and writers for every
 format the engine moves data through (SURVEY.md §2.A scans/sinks rows).
 
-Schemas are always explicit on read (SURVEY.md §1.3: "schemas are never
-inferred from data" — the reference reads them from the catalog); inference
-is opt-in for exploration only.
+SURVEY.md §1.3: "schemas are never inferred from data" — the reference
+reads them from the catalog. CSV and JSON reads take a mandatory explicit
+schema. Parquet and ORC carry their own types: a schema-less parquet read
+goes through ``io.read_parquet``, which infers each file set's schema once
+per session and reads with that explicit schema afterwards.
 """
 
 from __future__ import annotations
@@ -13,6 +15,7 @@ from pyspark.sql import types as T
 
 from ..connectors import JdbcReadPlan, JdbcWritePlan, catalog_query_plan
 from ..io import FIXTURE_TABLES, load, load_all, table_path
+from ..io import read_parquet as _io_read_parquet
 
 __all__ = [
     "FIXTURE_TABLES",
@@ -31,10 +34,11 @@ __all__ = [
 
 
 def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    reader = spark.read
+    """Parquet scan; an explicit ``schema`` wins, otherwise the schema
+    comes from ``io.read_parquet``'s registry."""
     if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+        return spark.read.schema(schema).parquet(path)
+    return _io_read_parquet(spark, path)
 
 
 def read_csv(

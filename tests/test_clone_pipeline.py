@@ -29,6 +29,8 @@ from database_clonev2_spark.pipeline.clone import (
 from database_clonev2_spark.pipeline.ddl import TableSpec, create_table_ddl, generate_statements
 from database_clonev2_spark.pipeline.executor import execute_statements
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _table_hash(df):
     """Order-insensitive whole-table fingerprint."""
@@ -1186,7 +1188,7 @@ class TestCli:
             [sys.executable, "-m", "database_clonev2_spark", "clone",
              "/root/testdata/sf0.001", t, "--tables", "region", "nation", "events",
              "--validate"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=240,
+            capture_output=True, text=True, cwd=REPO, timeout=240,
         )
         assert r.returncode == 0, r.stderr[-500:]
         out = _json.loads(r.stdout.strip().splitlines()[-1])
@@ -1200,7 +1202,7 @@ class TestCli:
         r = subprocess.run(
             [sys.executable, "-m", "database_clonev2_spark", "ddl",
              "/root/testdata/sf0.001", "--execute"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=60,
+            capture_output=True, text=True, cwd=REPO, timeout=60,
         )
         assert r.returncode == 1
         assert "requires --dialect spark" in r.stderr
@@ -1223,14 +1225,14 @@ class TestCli:
         r = subprocess.run(
             [sys.executable, "-m", "database_clonev2_spark", "sync",
              src, rep, "--keys", "id", "--buckets", "2"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=240,
+            capture_output=True, text=True, cwd=REPO, timeout=240,
         )
         assert r.returncode == 0, r.stderr[-500:]
         assert _json.loads(r.stdout.strip().splitlines()[-1])["epochs_applied"] == 1
         r = subprocess.run(
             [sys.executable, "-m", "database_clonev2_spark", "verify-replica",
              src, rep],
-            capture_output=True, text=True, cwd="/root/repo", timeout=240,
+            capture_output=True, text=True, cwd=REPO, timeout=240,
         )
         assert r.returncode == 0, r.stderr[-500:]
         assert _json.loads(r.stdout.strip().splitlines()[-1])["match"] is True
@@ -1242,7 +1244,7 @@ class TestCli:
         r = subprocess.run(
             [sys.executable, "-m", "database_clonev2_spark", "verify-replica",
              src, rep, "--repair"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=240,
+            capture_output=True, text=True, cwd=REPO, timeout=240,
         )
         assert r.returncode == 0, r.stderr[-500:]
         out = _json.loads(r.stdout.strip().splitlines()[-1])

@@ -7,10 +7,13 @@ and git history only. Its first run caught a real violation
 its r2 green row), which is exactly the failure mode this guards.
 """
 
+import os
 import shutil
 import subprocess
 
 import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _has_git_history() -> bool:
@@ -19,7 +22,7 @@ def _has_git_history() -> bool:
     try:
         subprocess.run(
             ["git", "rev-parse", "HEAD"],
-            capture_output=True, check=True, cwd="/root/repo",
+            capture_output=True, check=True, cwd=REPO,
         )
         return True
     except Exception:

@@ -236,10 +236,12 @@ def compact_bucketed_target(
     cluster_by: list[str] | None = None,
 ) -> dict:
     """Small-file compaction for BUCKETED merge targets (round 7) — the
-    remedy ``compact_parquet`` refuses to apply: a continuously-merged
-    bucketed table accumulates one file set per micro-batch INSIDE each
-    touched bucket, and until now the only exit was ``rebucket_target``'s
-    full O(|target|) rewrite. This compacts per bucket, preserving the
+    remedy ``compact_parquet`` refuses to apply: a bucketed table fed by
+    bucket-aware appends (``incremental_append``) accumulates one file set
+    per batch INSIDE each touched bucket (a merge rewrites a touched
+    bucket as one file, more only when AQE splits an oversized one), and
+    until now the only exit was ``rebucket_target``'s full O(|target|)
+    rewrite. This compacts per bucket, preserving the
     bucket-pruning invariant by construction (rows never change buckets),
     and commits through the SAME manifest-guarded multi-bucket swap as
     the merges themselves — so a crash mid-compaction rolls forward and

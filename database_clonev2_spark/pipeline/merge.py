@@ -236,6 +236,69 @@ def _with_bucket(df: DataFrame, key_cols: list[str], n_buckets: int) -> DataFram
     )
 
 
+def _stage_buckets(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` to ``path`` partitioned by bucket, one file per bucket,
+    and return the written rows, read back through ``df.schema`` so the
+    output we just wrote is never schema-inferred.
+
+    The REBALANCE hint shuffles the rows by bucket before the write, so
+    each bucket lands in one task instead of one file per write task that
+    held rows for it (Iceberg's ``write.distribution-mode=hash``). Unlike
+    ``repartition``, AQE still splits a bucket larger than the advisory
+    partition size (``optimizeSkewsInRebalancePartitions``), so a 25 GB
+    bucket is written by several tasks, never forced through one."""
+    df.hint("rebalance", BUCKET_COL).write.partitionBy(BUCKET_COL).parquet(path)
+    return spark.read.schema(df.schema).parquet(path)
+
+
+def _probe_epoch(bucketed: DataFrame, by: list[str], changes: bool = False) -> dict:
+    """Everything an epoch asks of its input, in ONE action: the row
+    count, the most rows sharing one ``by`` group (the duplicate-key
+    probe when ``by`` holds the key) and the sorted touched bucket ids;
+    for CDC ``changes``, also the delete-row count and the set of
+    ``change_type`` tags. ``by`` must include ``BUCKET_COL``; the collect
+    is one row holding at most N bucket ids."""
+    per_group = [F.count(F.lit(1)).alias("n")]
+    overall = [
+        F.sum("n").alias("rows"),
+        F.max("n").alias("max_per_group"),
+        F.sort_array(F.collect_set(BUCKET_COL)).alias("touched"),
+    ]
+    if changes:
+        per_group += [
+            F.count_if(F.col("change_type") == "delete").alias("deletes"),
+            F.collect_set("change_type").alias("tags"),
+        ]
+        overall += [
+            F.sum("deletes").alias("deletes"),
+            F.array_distinct(F.flatten(F.collect_list("tags"))).alias("tags"),
+        ]
+    r = bucketed.groupBy(*by).agg(*per_group).agg(*overall).first()
+    out = {
+        "rows": r["rows"] or 0,
+        "max_per_group": r["max_per_group"] or 0,
+        "touched": list(r["touched"]),
+    }
+    if changes:
+        out["deletes"] = r["deletes"] or 0
+        out["tags"] = set(r["tags"])
+    return out
+
+
+def _count_pair(first: DataFrame, second: DataFrame) -> tuple[int, int]:
+    """Row counts of two frames in ONE action: a tagged union counted per
+    tag (the one-action ``validate_database`` trick)."""
+    rows = (
+        first.select(F.lit(0).alias("_side"))
+        .union(second.select(F.lit(1).alias("_side")))
+        .groupBy("_side")
+        .count()
+        .collect()
+    )
+    n = {r["_side"]: r["count"] for r in rows}
+    return n.get(0, 0), n.get(1, 0)
+
+
 def _commit_path(target_path: str) -> str:
     return os.path.join(target_path, _COMMIT_FILE)
 
@@ -962,7 +1025,7 @@ def _swap_write(
     mark, demoting the next sync to the O(|target|) legacy scan)."""
     tmp = f"{target_path}.__new_{uuid.uuid4().hex[:8]}"
     df.write.parquet(tmp)
-    n = spark.read.parquet(tmp).count()
+    n = spark.read.schema(df.schema).parquet(tmp).count()
     for name in preserve_files:
         src = os.path.join(target_path, name)
         if os.path.exists(src):
@@ -1101,9 +1164,12 @@ def merge_upsert_bucketed(
     ``_bucket = pmod(xxhash64(*key_cols), n_buckets)``. Per merge:
 
     1. bucket the update rows (map-only);
-    2. collect the DISTINCT touched bucket ids — at most ``n_buckets``
-       integers, metadata-scale by construction (this is the one collect,
-       and it cannot exceed N rows regardless of data size);
+    2. probe them in ONE aggregate grouped by (key, bucket): the row
+       count, the most rows any key has (the duplicate-key check) and
+       the sorted DISTINCT touched bucket ids — at most ``n_buckets``
+       integers, metadata-scale by construction (this is the one
+       collect, and it cannot exceed one row of N ids regardless of
+       data size);
     3. scan ONLY the touched partitions (``_bucket IN (...)`` prunes at
        the file index — untouched partition directories are never read);
     4. merge within the touched buckets: without ``order_col``, update
@@ -1111,7 +1177,11 @@ def merge_upsert_bucketed(
        COMPETE — ``max_by(payload, order_col)`` over the union — so a
        late/replayed batch carrying an older version never regresses the
        target (same contract as streaming.sync);
-    5. rewrite ONLY the touched partitions (dynamic partition overwrite).
+    5. rewrite ONLY the touched partitions, ONE file per touched bucket:
+       the staged write is REBALANCEd on ``_bucket`` so each bucket is
+       written by one task (AQE still splits a bucket larger than the
+       advisory partition size), and the touched before/after row counts
+       are one tagged-union action over the old and the staged buckets.
 
     Replay-idempotent: re-running a committed merge recomputes the same
     per-bucket result (the anti-join removes what the previous run
@@ -1162,108 +1232,109 @@ def merge_upsert_bucketed(
         )
     if change_feed and batch_id in applied_batches(target_path):
         return {"applied": False, "batch_id": batch_id, "reason": "already_applied"}
-    if updates.isEmpty():
-        # review-caught (round 4): an empty first write would create a
-        # schemaless parquet dir + the bucket sidecar, permanently
-        # poisoning the target path (every later read throws
-        # UNABLE_TO_INFER_SCHEMA). An empty merge is a no-op either way.
-        if change_feed and os.path.exists(target_path):
-            # the epoch IS processed (it changed nothing): record it so a
-            # replay short-circuits instead of re-running the emptiness probe
-            append_applied_batch(target_path, batch_id)
-        return {
-            "before_touched": 0,
-            "updates": 0,
-            "after_touched": 0,
-            "touched_buckets": 0,
-            "n_buckets": n_buckets,
-        }
-    if validate_unique:
-        dup = updates.groupBy(*key_cols).count().filter(F.col("count") > 1).isEmpty()
-        if not dup:
-            raise ValueError(f"updates contain duplicate keys on {key_cols}")
-    upd = _with_bucket(updates, key_cols, n_buckets)
-
-    if not os.path.exists(target_path):
-        # stage data + meta sidecar together; one rename commits both
-        # (a crash between a bare write and the meta write used to leave
-        # a target that failed is_bucketed — same round-7 fix as the
-        # additive first batch)
-        token = uuid.uuid4().hex[:8]
-        staging = f"{target_path}.__stage_{token}"
-        upd.write.partitionBy(BUCKET_COL).parquet(staging)
-        n = spark.read.parquet(staging).count()
-        _write_bucket_meta(staging, n_buckets, list(key_cols))
-        if change_feed:
-            # creation: every row is an insert; the change set and the
-            # ledger entry land inside the same creating rename
-            updates.withColumn("change_type", F.lit("insert")).write.parquet(
-                os.path.join(staging, "_changes", epoch_dir_name(batch_id))
-            )
-            append_applied_batch(staging, batch_id)
-        os.rename(staging, target_path)
-        out = {
-            "before_touched": 0,
-            "updates": n,
-            "after_touched": n,
-            "touched_buckets": n_buckets,
-            "n_buckets": n_buckets,
-        }
-        if change_feed:
-            out["change_dir"] = epoch_dir_name(batch_id)
-        return out
-
-    if not is_bucketed(target_path):
-        raise ValueError(
-            f"{target_path} is not a bucketed merge target; use merge_upsert "
-            "for flat layouts or rewrite it once via merge_upsert_bucketed "
-            "on a fresh path"
-        )
-    recover_pending_commit(target_path)  # finish any crashed predecessor
-    meta = _read_bucket_meta(target_path)
-    if meta["n_buckets"] != n_buckets or meta["key_cols"] != list(key_cols):
-        raise ValueError(
-            f"bucket layout mismatch: target has n_buckets={meta['n_buckets']} "
-            f"key_cols={meta['key_cols']}, caller passed n_buckets={n_buckets} "
-            f"key_cols={list(key_cols)}"
-        )
-
-    # schema reconciliation (see docstring "SCHEMA EVOLUTION"). An
-    # schema resolution/widening shared with the replica-apply and
-    # SCD-2-fold paths (recorded_schema/_widened_schema docstrings)
-    target_schema = recorded_schema(spark, target_path)
-    target_cols = [f.name for f in target_schema if f.name != BUCKET_COL]
-    extra = [c for c in updates.columns if c not in target_cols]
-    missing_in_upd = [c for c in target_cols if c not in updates.columns]
-    evolved_schema_json = None
-    if extra and not allow_evolution:
-        raise ValueError(
-            f"updates carry columns the target lacks: {extra} — pass "
-            "allow_evolution=True to add them (pre-evolution rows read as "
-            "NULL), or drop them explicitly. (Silently discarding them, the "
-            "pre-round-6 behavior, was data loss.)"
-        )
-    if extra:
-        widened = _widened_schema(target_schema, updates.schema, extra)
-        evolved_schema_json = widened.json()
-    elif meta.get("schema_json"):
-        widened = target_schema  # evolved target: keep reading through it
-    for c in missing_in_upd:
-        upd = upd.withColumn(c, F.lit(None).cast(target_schema[c].dataType))
-    non_key = [c for c in upd.columns if c not in (*key_cols, BUCKET_COL)]
-
-    upd = upd.persist()  # consumed by the touched-id probe + the merge
+    # persisted: the probe, the merge and the change feed must see the
+    # same rows, or a bucket the merge writes could miss the manifest
+    upd = _with_bucket(updates, key_cols, n_buckets).persist()
     try:
-        touched = sorted(
-            r[BUCKET_COL] for r in upd.select(BUCKET_COL).distinct().collect()
+        probe = _probe_epoch(
+            upd, [*key_cols, BUCKET_COL] if validate_unique else [BUCKET_COL]
         )
+        if not probe["rows"]:
+            # review-caught (round 4): an empty first write would create a
+            # schemaless parquet dir + the bucket sidecar, permanently
+            # poisoning the target path (every later read throws
+            # UNABLE_TO_INFER_SCHEMA). An empty merge is a no-op either way.
+            if change_feed and os.path.exists(target_path):
+                # the epoch IS processed (it changed nothing): record it so a
+                # replay short-circuits instead of re-running the emptiness probe
+                append_applied_batch(target_path, batch_id)
+            return {
+                "before_touched": 0,
+                "updates": 0,
+                "after_touched": 0,
+                "touched_buckets": 0,
+                "n_buckets": n_buckets,
+            }
+        if validate_unique and probe["max_per_group"] > 1:
+            raise ValueError(f"updates contain duplicate keys on {key_cols}")
+        n_updates, touched = probe["rows"], probe["touched"]
+
+        if not os.path.exists(target_path):
+            # stage data + meta sidecar together; one rename commits both
+            # (a crash between a bare write and the meta write used to leave
+            # a target that failed is_bucketed — same round-7 fix as the
+            # additive first batch)
+            token = uuid.uuid4().hex[:8]
+            staging = f"{target_path}.__stage_{token}"
+            _stage_buckets(spark, upd, staging)
+            _write_bucket_meta(staging, n_buckets, list(key_cols))
+            if change_feed:
+                # creation: every row is an insert; the change set and the
+                # ledger entry land inside the same creating rename
+                upd.drop(BUCKET_COL).withColumn(
+                    "change_type", F.lit("insert")
+                ).write.parquet(
+                    os.path.join(staging, "_changes", epoch_dir_name(batch_id))
+                )
+                append_applied_batch(staging, batch_id)
+            os.rename(staging, target_path)
+            out = {
+                "before_touched": 0,
+                "updates": n_updates,
+                "after_touched": n_updates,
+                "touched_buckets": n_buckets,
+                "n_buckets": n_buckets,
+            }
+            if change_feed:
+                out["change_dir"] = epoch_dir_name(batch_id)
+            return out
+
+        if not is_bucketed(target_path):
+            raise ValueError(
+                f"{target_path} is not a bucketed merge target; use merge_upsert "
+                "for flat layouts or rewrite it once via merge_upsert_bucketed "
+                "on a fresh path"
+            )
+        recover_pending_commit(target_path)  # finish any crashed predecessor
+        if change_feed and batch_id in applied_batches(target_path):
+            # the recovery may have just completed THIS batch's crashed commit
+            return {"applied": False, "batch_id": batch_id, "reason": "already_applied"}
+        meta = _read_bucket_meta(target_path)
+        if meta["n_buckets"] != n_buckets or meta["key_cols"] != list(key_cols):
+            raise ValueError(
+                f"bucket layout mismatch: target has n_buckets={meta['n_buckets']} "
+                f"key_cols={meta['key_cols']}, caller passed n_buckets={n_buckets} "
+                f"key_cols={list(key_cols)}"
+            )
+
+        # schema reconciliation (see docstring "SCHEMA EVOLUTION"). An
+        # schema resolution/widening shared with the replica-apply and
+        # SCD-2-fold paths (recorded_schema/_widened_schema docstrings)
+        target_schema = recorded_schema(spark, target_path)
+        target_cols = [f.name for f in target_schema if f.name != BUCKET_COL]
+        extra = [c for c in upd.columns if c not in (*target_cols, BUCKET_COL)]
+        missing_in_upd = [c for c in target_cols if c not in upd.columns]
+        evolved_schema_json = None
+        if extra and not allow_evolution:
+            raise ValueError(
+                f"updates carry columns the target lacks: {extra} — pass "
+                "allow_evolution=True to add them (pre-evolution rows read as "
+                "NULL), or drop them explicitly. (Silently discarding them, the "
+                "pre-round-6 behavior, was data loss.)"
+            )
+        if extra:
+            widened = _widened_schema(target_schema, upd.schema, extra)
+            evolved_schema_json = widened.json()
+        elif meta.get("schema_json"):
+            widened = target_schema  # evolved target: keep reading through it
+        for c in missing_in_upd:
+            upd = upd.withColumn(c, F.lit(None).cast(target_schema[c].dataType))
+        non_key = [c for c in upd.columns if c not in (*key_cols, BUCKET_COL)]
+
         reader = spark.read
         if extra or meta.get("schema_json"):
             reader = reader.schema(widened)
-        target = reader.parquet(target_path).filter(
-            F.col(BUCKET_COL).isin(touched)
-        )
-        before = target.count()
+        target = reader.parquet(target_path).filter(F.col(BUCKET_COL).isin(touched))
         if order_col is None:
             kept = target.join(upd.select(*key_cols), key_cols, "left_anti")
             merged = kept.unionByName(upd.select(*kept.columns))
@@ -1284,8 +1355,8 @@ def merge_upsert_bucketed(
         # after the manifest rolls forward (see docstring crash semantics)
         token = uuid.uuid4().hex[:8]
         staging = f"{target_path}.__stage_{token}"
-        merged.write.partitionBy(BUCKET_COL).parquet(staging)
-        after = spark.read.parquet(staging).count()
+        staged = _stage_buckets(spark, merged, staging)
+        before, after = _count_pair(target, staged)
         change_dir = None
         if change_feed:
             # what ACTUALLY changed: post-merge winners for the update
@@ -1300,10 +1371,8 @@ def merge_upsert_bucketed(
             before_p = target.join(upd_keys, key_cols, "left_semi").select(
                 *key_cols, F.struct(*non_key).alias("_old")
             )
-            after_p = (
-                spark.read.parquet(staging)
-                .join(upd_keys, key_cols, "left_semi")
-                .select(*key_cols, *non_key, F.struct(*non_key).alias("_new"))
+            after_p = staged.join(upd_keys, key_cols, "left_semi").select(
+                *key_cols, *non_key, F.struct(*non_key).alias("_new")
             )
             paired = after_p.join(before_p, key_cols, "left").persist()
             try:
@@ -1318,19 +1387,14 @@ def merge_upsert_bucketed(
                     .where(F.col("change_type").isNotNull())
                     .select(*key_cols, *non_key, "change_type")
                 )
-                pre = (
-                    paired.where(
-                        F.col("_old").isNotNull()
-                        & ~F.col("_new").eqNullSafe(F.col("_old"))
-                    ).select(
-                        *key_cols,
-                        *[F.col(f"_old.{c}").alias(c) for c in non_key],
-                        F.lit("update_preimage").alias("change_type"),
-                    )
+                pre = paired.where(
+                    F.col("_old").isNotNull() & ~F.col("_new").eqNullSafe(F.col("_old"))
+                ).select(
+                    *key_cols,
+                    *[F.col(f"_old.{c}").alias(c) for c in non_key],
+                    F.lit("update_preimage").alias("change_type"),
                 )
-                post.unionByName(pre).write.parquet(
-                    os.path.join(staging, "__changes")
-                )
+                post.unionByName(pre).write.parquet(os.path.join(staging, "__changes"))
             finally:
                 paired.unpersist()
         # the evolved schema rides the commit manifest so it reaches the
@@ -1348,19 +1412,19 @@ def merge_upsert_bucketed(
             schema_json=evolved_schema_json,
             change_dir=change_dir,
         )
-        n_updates = upd.count()
+        out = {
+            "before_touched": before,
+            "updates": n_updates,
+            "after_touched": after,
+            "touched_buckets": len(touched),
+            "n_buckets": n_buckets,
+        }
+        if change_feed:
+            out["change_dir"] = change_dir
+        return out
+
     finally:
         upd.unpersist()
-    out = {
-        "before_touched": before,
-        "updates": n_updates,
-        "after_touched": after,
-        "touched_buckets": len(touched),
-        "n_buckets": n_buckets,
-    }
-    if change_feed:
-        out["change_dir"] = change_dir
-    return out
 
 
 def merge_delete_bucketed(
@@ -1424,6 +1488,9 @@ def merge_delete_bucketed(
     if batch_id is not None and batch_id in applied_batches(target_path):
         return {"applied": False, "batch_id": batch_id, "reason": "already_applied"}
     recover_pending_commit(target_path)
+    if batch_id is not None and batch_id in applied_batches(target_path):
+        # the recovery may have just completed THIS batch's crashed commit
+        return {"applied": False, "batch_id": batch_id, "reason": "already_applied"}
     meta = _read_bucket_meta(target_path)
     if meta["n_buckets"] != n_buckets or meta["key_cols"] != list(key_cols):
         raise ValueError(
@@ -1453,12 +1520,10 @@ def merge_delete_bucketed(
         target = reader.parquet(target_path).filter(
             F.col(BUCKET_COL).isin(touched)
         )
-        before = target.count()
         kept = target.join(kd.select(*key_cols), key_cols, "left_anti")
         token = uuid.uuid4().hex[:8]
         staging = f"{target_path}.__stage_{token}"
-        kept.write.partitionBy(BUCKET_COL).parquet(staging)
-        after = spark.read.schema(target_schema).parquet(staging).count()
+        before, after = _count_pair(target, _stage_buckets(spark, kept, staging))
         for b in touched:
             # fully-emptied buckets: stage an explicit empty dir so the
             # swap REPLACES the old bucket instead of leaving it behind
@@ -1522,7 +1587,9 @@ def apply_merge_changes(
     stage explicit empty dirs (the delete verb's mechanics). One commit
     means one ledger entry — a replayed epoch no-ops atomically rather
     than half-applying (the two-verb alternative would need two ledger
-    slots per epoch and could crash between them).
+    slots per epoch and could crash between them). The epoch's input
+    questions — its change tags, duplicate keys, touched buckets and
+    upsert/delete counts — are one aggregate (``_probe_epoch``).
 
     The feed is trusted as already-resolved: rows apply unconditionally
     (the source's merge already ran the order_col competition — its
@@ -1549,92 +1616,92 @@ def apply_merge_changes(
         raise ValueError("changes must carry a change_type column")
     if batch_id is not None and batch_id in applied_batches(target_path):
         return {"applied": False, "batch_id": batch_id, "reason": "already_applied"}
-    live = changes.where(F.col("change_type") != "update_preimage")
-    tags = {
-        r["change_type"] for r in live.select("change_type").distinct().collect()
-    }
-    unknown = tags - {"insert", "update_postimage", "delete"}
-    if unknown:
-        raise ValueError(
-            f"unknown change_type values {sorted(unknown)} — cannot apply"
-        )
-    dup = (
-        live.groupBy(*key_cols).count().filter(F.col("count") > 1).isEmpty()
-    )
-    if not dup:
-        raise ValueError(
-            f"multiple live change rows per key on {key_cols} in one epoch "
-            "— the feed emits at most one; split the input by epoch"
-        )
-    payload_cols = [c for c in changes.columns if c != "change_type"]
-    ups = live.where(F.col("change_type") != "delete").select(*payload_cols)
-    del_keys = live.where(F.col("change_type") == "delete").select(*key_cols)
-
-    if not os.path.exists(target_path):
-        # first epoch: creation — mirror the additive/upsert staged
-        # creation so data, layout meta, and ledger commit in one rename
-        n_dels = del_keys.count()
-        if n_dels:
-            raise ValueError(
-                "cannot apply delete rows to a target that does not exist "
-                "yet — the first applied epoch must be insert-only"
-            )
-        upd = _with_bucket(ups, key_cols, n_buckets)
-        token = uuid.uuid4().hex[:8]
-        staging = f"{target_path}.__stage_{token}"
-        upd.write.partitionBy(BUCKET_COL).parquet(staging)
-        n = spark.read.parquet(staging).count()
-        _write_bucket_meta(staging, n_buckets, list(key_cols))
-        if batch_id is not None:
-            append_applied_batch(staging, batch_id)
-        os.rename(staging, target_path)
-        return {
-            "upserted": n,
-            "deleted": 0,
-            "touched_buckets": n_buckets,
-            "n_buckets": n_buckets,
-        }
-
-    if not is_bucketed(target_path):
-        raise ValueError(f"{target_path} is not a bucketed merge target")
-    recover_pending_commit(target_path)
-    if batch_id is not None and batch_id in applied_batches(target_path):
-        return {"applied": False, "batch_id": batch_id, "reason": "already_applied"}
-    meta = _read_bucket_meta(target_path)
-    if meta["n_buckets"] != n_buckets or meta["key_cols"] != list(key_cols):
-        raise ValueError(
-            f"bucket layout mismatch: target has n_buckets={meta['n_buckets']} "
-            f"key_cols={meta['key_cols']}, caller passed n_buckets={n_buckets} "
-            f"key_cols={list(key_cols)}"
-        )
-    target_schema = recorded_schema(spark, target_path)
-    tcols = [f.name for f in target_schema if f.name != BUCKET_COL]
-    extra = [c for c in payload_cols if c not in tcols]
-    if extra and not allow_evolution:
-        raise ValueError(
-            f"change rows carry columns the replica lacks: {extra} — "
-            "the source evolved; pass allow_evolution=True to follow it "
-            "(pre-evolution rows read as NULL), silently dropping them "
-            "would diverge the copy"
-        )
-    if extra:
-        # widen: the replica follows the source's ALTER TABLE. The
-        # widened schema reads pre-evolution files with the new columns
-        # as NULL and commits inside this epoch's manifest (below).
-        target_schema = _widened_schema(target_schema, changes.schema, extra)
-        tcols = tcols + extra
-    # change rows missing replica columns (an older-schema epoch applied
-    # to an already-evolved replica) null-fill, mirroring the upsert path
-    for c in (c for c in tcols if c not in ups.columns):
-        ups = ups.withColumn(c, F.lit(None).cast(target_schema[c].dataType))
-    all_keys = _with_bucket(
-        live.select(*key_cols).distinct(), key_cols, n_buckets
+    # persisted: the probe, the anti-join and the upserts must see the
+    # same rows, or a bucket the write stages could miss the manifest
+    live = _with_bucket(
+        changes.where(F.col("change_type") != "update_preimage"),
+        key_cols,
+        n_buckets,
     ).persist()
     try:
-        touched = sorted(
-            r[BUCKET_COL]
-            for r in all_keys.select(BUCKET_COL).distinct().collect()
+        probe = _probe_epoch(live, [*key_cols, BUCKET_COL], changes=True)
+        unknown = probe["tags"] - {"insert", "update_postimage", "delete"}
+        if unknown:
+            raise ValueError(
+                f"unknown change_type values {sorted(unknown)} — cannot apply"
+            )
+        if probe["max_per_group"] > 1:
+            raise ValueError(
+                f"multiple live change rows per key on {key_cols} in one epoch "
+                "— the feed emits at most one; split the input by epoch"
+            )
+        n_dels = probe["deletes"]
+        n_ups = probe["rows"] - n_dels
+        payload_cols = [c for c in live.columns if c not in ("change_type", BUCKET_COL)]
+        ups = live.where(F.col("change_type") != "delete").select(
+            *payload_cols, BUCKET_COL
         )
+
+        if not os.path.exists(target_path):
+            # first epoch: creation — mirror the additive/upsert staged
+            # creation so data, layout meta, and ledger commit in one rename
+            if n_dels:
+                raise ValueError(
+                    "cannot apply delete rows to a target that does not exist "
+                    "yet — the first applied epoch must be insert-only"
+                )
+            if not n_ups:
+                raise ValueError(
+                    "cannot create a target from an epoch with no rows — a "
+                    "bucketed target takes its schema from its first rows"
+                )
+            token = uuid.uuid4().hex[:8]
+            staging = f"{target_path}.__stage_{token}"
+            _stage_buckets(spark, ups, staging)
+            _write_bucket_meta(staging, n_buckets, list(key_cols))
+            if batch_id is not None:
+                append_applied_batch(staging, batch_id)
+            os.rename(staging, target_path)
+            return {
+                "upserted": n_ups,
+                "deleted": 0,
+                "touched_buckets": n_buckets,
+                "n_buckets": n_buckets,
+            }
+
+        if not is_bucketed(target_path):
+            raise ValueError(f"{target_path} is not a bucketed merge target")
+        recover_pending_commit(target_path)
+        if batch_id is not None and batch_id in applied_batches(target_path):
+            return {"applied": False, "batch_id": batch_id, "reason": "already_applied"}
+        meta = _read_bucket_meta(target_path)
+        if meta["n_buckets"] != n_buckets or meta["key_cols"] != list(key_cols):
+            raise ValueError(
+                f"bucket layout mismatch: target has n_buckets={meta['n_buckets']} "
+                f"key_cols={meta['key_cols']}, caller passed n_buckets={n_buckets} "
+                f"key_cols={list(key_cols)}"
+            )
+        target_schema = recorded_schema(spark, target_path)
+        tcols = [f.name for f in target_schema if f.name != BUCKET_COL]
+        extra = [c for c in payload_cols if c not in tcols]
+        if extra and not allow_evolution:
+            raise ValueError(
+                f"change rows carry columns the replica lacks: {extra} — "
+                "the source evolved; pass allow_evolution=True to follow it "
+                "(pre-evolution rows read as NULL), silently dropping them "
+                "would diverge the copy"
+            )
+        if extra:
+            # widen: the replica follows the source's ALTER TABLE. The
+            # widened schema reads pre-evolution files with the new columns
+            # as NULL and commits inside this epoch's manifest (below).
+            target_schema = _widened_schema(target_schema, live.schema, extra)
+            tcols = tcols + extra
+        # change rows missing replica columns (an older-schema epoch applied
+        # to an already-evolved replica) null-fill, mirroring the upsert path
+        for c in (c for c in tcols if c not in ups.columns):
+            ups = ups.withColumn(c, F.lit(None).cast(target_schema[c].dataType))
+        touched = probe["touched"]
         if not touched:
             if batch_id is not None:
                 append_applied_batch(target_path, batch_id)
@@ -1649,17 +1716,13 @@ def apply_merge_changes(
             .parquet(target_path)
             .filter(F.col(BUCKET_COL).isin(touched))
         )
-        kept = target.join(all_keys.select(*key_cols), key_cols, "left_anti")
-        merged = kept.unionByName(
-            _with_bucket(ups.select(*tcols), key_cols, n_buckets)
-        )
+        kept = target.join(live.select(*key_cols), key_cols, "left_anti")
+        merged = kept.unionByName(ups.select(*tcols, BUCKET_COL))
         token = uuid.uuid4().hex[:8]
         staging = f"{target_path}.__stage_{token}"
-        merged.write.partitionBy(BUCKET_COL).parquet(staging)
+        _stage_buckets(spark, merged, staging)
         for b in touched:
             os.makedirs(os.path.join(staging, f"{BUCKET_COL}={b}"), exist_ok=True)
-        n_ups = ups.count()
-        n_dels = del_keys.count()
         _commit_staged_buckets(
             target_path,
             token,
@@ -1668,14 +1731,15 @@ def apply_merge_changes(
             batch_id=batch_id,
             schema_json=target_schema.json(),
         )
+        return {
+            "upserted": n_ups,
+            "deleted": n_dels,
+            "touched_buckets": len(touched),
+            "n_buckets": n_buckets,
+        }
+
     finally:
-        all_keys.unpersist()
-    return {
-        "upserted": n_ups,
-        "deleted": n_dels,
-        "touched_buckets": len(touched),
-        "n_buckets": n_buckets,
-    }
+        live.unpersist()
 
 
 QUIESCE_FILE = "_quiesce.json"
@@ -2005,8 +2069,7 @@ def repair_replica(
     )
     token = uuid.uuid4().hex[:8]
     staging = f"{replica_path}.__stage_{token}"
-    rows.write.partitionBy(BUCKET_COL).parquet(staging)
-    n = spark.read.parquet(staging).count()
+    n = _stage_buckets(spark, rows, staging).count()
     for b in buckets:
         os.makedirs(
             os.path.join(staging, f"{BUCKET_COL}={int(b)}"), exist_ok=True
@@ -2620,8 +2683,12 @@ def merge_additive_bucketed(
         # the data, layout meta, and ledger land together.
         token = uuid.uuid4().hex[:8]
         staging = f"{target_path}.__stage_{token}"
-        upd.write.partitionBy(BUCKET_COL).parquet(staging)
-        n = spark.read.parquet(staging).count()
+        n = _stage_buckets(spark, upd, staging).count()
+        if not n:
+            # a bucketed target takes its schema from its files: an empty
+            # first write would publish one no later read can infer
+            shutil.rmtree(staging, ignore_errors=True)
+            raise ValueError("cannot create an additive view from an empty batch")
         _write_bucket_meta(staging, n_buckets, list(key_cols))
         if hist_cols:
             _write_hist_edges(staging, hist_cols)
@@ -2691,7 +2758,6 @@ def merge_additive_bucketed(
                 f"caller asked for {sorted(state_cols)} — sum/min/max specs must "
                 "be identical on every call to a given view"
             )
-        before = target.count()
         combined = target.select(*state_cols, BUCKET_COL).unionByName(upd)
         merged = combined.groupBy(*key_cols, BUCKET_COL).agg(
             *[F.sum(c).alias(c) for c in sum_cols],
@@ -2703,10 +2769,10 @@ def merge_additive_bucketed(
         )
         token = uuid.uuid4().hex[:8]
         staging = f"{target_path}.__stage_{token}"
-        merged.select(*state_cols, BUCKET_COL).write.partitionBy(
-            BUCKET_COL
-        ).parquet(staging)
-        after = spark.read.parquet(staging).count()
+        staged = _stage_buckets(
+            spark, merged.select(*state_cols, BUCKET_COL), staging
+        )
+        before, after = _count_pair(target, staged)
         _commit_staged_buckets(target_path, token, staging, touched, batch_id)
     finally:
         upd.unpersist()
@@ -2834,8 +2900,11 @@ def rebucket_target(
     if missing:
         raise ValueError(f"key columns {missing} not in target columns {df.columns}")
     tmp = f"{target_path}.__new_{uuid.uuid4().hex[:8]}"
-    _with_bucket(df, key_cols, n_buckets).write.partitionBy(BUCKET_COL).parquet(tmp)
-    n = spark.read.parquet(tmp).count()
+    n = _stage_buckets(spark, _with_bucket(df, key_cols, n_buckets), tmp).count()
+    if not n:
+        # no files, no schema: the bucketed copy could never be read back
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise ValueError(f"cannot rebucket the empty target {target_path}")
     _write_bucket_meta(tmp, n_buckets, list(key_cols))
     hw = _read_hw_sidecar(target_path)
     if hw is not None:

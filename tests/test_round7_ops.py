@@ -1124,21 +1124,21 @@ class TestBucketedCompaction:
 
         from database_clonev2_spark.pipeline.compact import compact_bucketed_target
         from database_clonev2_spark.pipeline.merge import (
+            incremental_append,
             merge_upsert_bucketed,
             read_merge_target,
         )
 
         target = str(tmp_path / "bt.parquet")
-        # many merges -> many file sets per bucket
+        # a merge writes one file per bucket; each bucket-aware append
+        # then adds a file set inside every bucket it touches
         for wave in range(6):
-            rows = [(i, f"v{wave}_{i}") for i in range(wave, 60, 3)]
-            merge_upsert_bucketed(
-                spark,
-                target,
-                spark.createDataFrame(rows, "id long, v string"),
-                ["id"],
-                n_buckets=4,
-            )
+            rows = [(i, f"v{wave}_{i}") for i in range(wave * 20, wave * 20 + 20)]
+            batch = spark.createDataFrame(rows, "id long, v string")
+            if wave == 0:
+                merge_upsert_bucketed(spark, target, batch, ["id"], n_buckets=4)
+            else:
+                incremental_append(spark, batch, target, "id")
         before = read_merge_target(spark, target).collect()
         fb = self._files_per_bucket(target)
         assert sum(fb.values()) > 4
@@ -1168,7 +1168,10 @@ class TestBucketedCompaction:
             compact_bucketed_target,
             compact_parquet,
         )
-        from database_clonev2_spark.pipeline.merge import merge_upsert_bucketed
+        from database_clonev2_spark.pipeline.merge import (
+            incremental_append,
+            merge_upsert_bucketed,
+        )
 
         flat = str(tmp_path / "flat.parquet")
         spark.range(10).write.parquet(flat)
@@ -1176,16 +1179,15 @@ class TestBucketedCompaction:
             compact_bucketed_target(spark, flat)
 
         target = str(tmp_path / "sub.parquet")
+        # one file per bucket from the merge, more from each append
         for wave in range(3):
-            merge_upsert_bucketed(
-                spark,
-                target,
-                spark.createDataFrame(
-                    [(i, wave) for i in range(40)], "id long, w long"
-                ),
-                ["id"],
-                n_buckets=4,
+            batch = spark.createDataFrame(
+                [(i, wave) for i in range(wave * 40, wave * 40 + 40)], "id long, w long"
             )
+            if wave == 0:
+                merge_upsert_bucketed(spark, target, batch, ["id"], n_buckets=4)
+            else:
+                incremental_append(spark, batch, target, "id")
         fb = self._files_per_bucket(target)
         some = sorted(fb)[:2]
         res = compact_bucketed_target(spark, target, buckets=some)

@@ -1,7 +1,8 @@
 """How on-disk state reaches disk — the ONE commit module for every JSON
 state file the pipelines and index extensions keep: commit manifests,
 applied-batch ledgers, bucket/join/index metadata and high-water
-sidecars, plus the ``epoch-<id>`` naming rule of the change feeds.
+sidecars, plus the ``epoch-<id>`` naming rule of the change feeds and
+the one advisory-lock guard (``flock_guard``) their writers serialize on.
 
 Why the fsync: an atomic same-dir rename is each state file's commit
 point, and on ext4/xfs a rename can become durable before the file's
@@ -13,8 +14,9 @@ directory-entry change that needs its own flush to survive power loss).
 FILESYSTEM CONTRACT for the whole commit protocol: it assumes POSIX
 single-filesystem semantics — atomic ``os.rename``/``os.replace`` within
 the parent directory (commit swaps, manifest publish), atomic
-``O_CREAT|O_EXCL`` (the recovery lock) and advisory ``fcntl.flock`` (its
-guard and the quiesce fence). Local filesystems and NFSv4 provide all
+``O_CREAT|O_EXCL`` (the recovery lock) and advisory ``fcntl.flock``
+(``flock_guard``: the recovery lock's guard, the quiesce fence and the
+index maintainers' guard). Local filesystems and NFSv4 provide all
 three. HDFS provides atomic create/rename but no flock — run recovery
 from a single coordinator there. Object stores provide none of the
 three; they need a lakehouse table format or a lease service instead.
@@ -26,6 +28,7 @@ import json
 import os
 import re
 import uuid
+from contextlib import contextmanager
 
 _BATCHES_FILE = "_applied_batches.json"
 _BATCHES_KEEP = 10_000  # replay-dedup horizon (foreachBatch epochs retained)
@@ -55,6 +58,39 @@ def write_json_atomic(path: str, obj) -> None:
                 os.remove(tmp)
             except OSError:
                 pass
+
+
+@contextmanager
+def flock_guard(guard_path: str):
+    """Best-effort exclusive flock on a never-unlinked sidecar guard
+    file — the ONE implementation of the open/flock-or-degrade/close
+    pattern shared by merge's recovery-lock release and quiesce fence
+    and the index maintainers' guard (round-10 review catch: three
+    hand-rolled copies of the degrade-on-flockless-FS policy). Yields
+    ``'locked'`` (critical section held), ``'nolock'`` (filesystem
+    without advisory locks — proceed best-effort, the callers'
+    documented degraded contract), or ``'noopen'`` (guard unreachable —
+    callers choose walk-away vs proceed). Not re-entrant: a second
+    open + flock of the same guard in one process blocks.
+    ``merge._acquire_recovery_lock`` keeps its own inline guard: its
+    degrade semantics differ per caller role (readers skip, writers
+    refuse loudly)."""
+    import fcntl
+
+    try:
+        fd = os.open(guard_path, os.O_CREAT | os.O_RDWR)
+    except OSError:
+        yield "noopen"
+        return
+    try:
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+        except OSError:
+            yield "nolock"
+            return
+        yield "locked"
+    finally:
+        os.close(fd)
 
 
 def applied_batches(dir_path: str) -> list:

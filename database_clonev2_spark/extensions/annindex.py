@@ -19,6 +19,13 @@ n_probe/k of the corpus regardless of corpus size. Layout:
     <path>/_ivf_meta.json      {k, seed, dim, n_vectors, vectors_dir,
                                 id_segments, bloom_params, ...}
 
+    The index is a layout over the segment store (``_segments``, whose
+    module docstring states the segment commit protocol): the ids
+    segments, their blooms, the append skeleton, the ids fold and the
+    retired/orphan sweeps are the store's; this module keeps the
+    quantizer, the cell-partitioned vectors tree and the membership
+    repair.
+
     MEMBERSHIP KIND (round 10, VERDICT r9 #2): the exactly-once append
     used to anti-join against the whole vectors tree — a column-pruned
     scan, but one that opens every cell's file footers and shuffles
@@ -55,34 +62,63 @@ Standard IVF lifecycle, matching the public FAISS/Milvus model:
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from .shingleindex import DEFAULT_MAX_SEGMENTS, _maintainer_locked
+from ._segments import (
+    BUILD_SEG,
+    DEFAULT_MAX_SEGMENTS,
+    SegmentLayout,
+    _add_segment,
+    _append_locked,
+    _append_maintained,
+    _bloom_candidate_segments as _segments_bloom_candidates,
+    _fold_pick,
+    _fold_segments,
+    _load_meta,
+    _maintainer_locked,
+    _min_collapse,
+    _read_kind,
+    _seal_build,
+    _store_meta,
+    _sweep,
+    _uncommitted_dirs,
+)
 from .similarity import _as_double, cosine
 
 _META_FILE = "_ivf_meta.json"
 
-
-def _meta_path(path: str) -> str:
-    return os.path.join(path, _META_FILE)
+#: the segment-store layout (``_segments.SegmentLayout``): ``ids`` is the
+#: membership kind and the torn-append sentinel; the vectors tree is a
+#: whole-tree artifact switched by ``vectors_dir``
+_LAYOUT = SegmentLayout(
+    owner=__name__,
+    reader="read_ivf_meta",
+    meta_file=_META_FILE,
+    kinds=("ids",),
+    member_kind="ids",
+    id_col="vec_id",
+    segments_key="id_segments",
+    retired_key="retired_id_segments",
+    count_key="n_vectors",
+    retired_ts_prefix="ids/",
+    tree="vectors",
+    tree_key="vectors_dir",
+    retired_trees_key="retired_dirs",
+    sentinel=True,
+)
 
 
 def read_ivf_meta(path: str) -> dict:
-    with open(_meta_path(path)) as fh:
-        return json.load(fh)
+    return _load_meta(_LAYOUT, path)
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    """Fsync'd atomic commit — ``_durable.write_json_atomic`` holds the
-    single implementation and the durability rationale."""
-    from .._durable import write_json_atomic
-
-    write_json_atomic(_meta_path(path), meta)
+    """The index's commit point (``_segments._store_meta``)."""
+    _store_meta(_LAYOUT, path, meta)
 
 
 def _vectors_path(path: str, meta: dict) -> str:
@@ -202,22 +238,20 @@ def build_ivf_index(
     Duplicate vec_ids in the build corpus COLLAPSE (round 10, VERDICT
     r9 #3 — parity with the append path's idempotence net): a vector
     indexed twice is a duplicate candidate occupying two top-k slots.
-    The pin makes the build single-fit single-layout over the source."""
+    The pin makes the build single-fit single-layout over the source.
+    Writes and commit run under the maintainer flock."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    src = (
+    # deterministic collapse (round-10 review catch): min over the
+    # orderable array pins the winner when duplicate ids carry DIFFERENT
+    # payloads; the pin feeds fit + assignment join + ids + count
+    src = _min_collapse(
         vectors.select(
             F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("vec")
-        )
-        # deterministic collapse (round-10 review catch): dropDuplicates
-        # keeps a shuffle-order-arbitrary row, which would break this
-        # function's determinism contract when duplicate ids carry
-        # DIFFERENT payloads — min over the (orderable) array is the
-        # same one shuffle with a pinned winner
-        .groupBy("vec_id")
-        .agg(F.min("vec").alias("vec"))
-        .localCheckpoint()  # feeds fit + assignment join + ids + count
+        ),
+        "vec_id",
+        "vec",
     )
     fit_input = src.select("vec_id", array_to_vector("vec").alias("features"))
     model = KMeans(k=k, seed=seed, maxIter=20).fit(fit_input)
@@ -227,57 +261,43 @@ def build_ivf_index(
         .select("vec_id", F.col("prediction").cast("int").alias("cell"))
         .join(src, "vec_id")
     )
-    os.makedirs(path, exist_ok=True)
-    n = src.count()
-    # mode-overwrite: a torn BUILD (crash before the meta commit) must
-    # be retryable over the same path (the segment indexes' contract).
-    # One shuffle (inside _write_cell_partitioned, round 12) buys the
-    # invariant the whole lifecycle assumes: one file per cell per
-    # write job — without it every shuffle partition writes its own
-    # file per cell it holds and the index is born fragmented. One task
-    # per cell is the right parallelism when cells are sized as probe
-    # units (fix = larger k); ``max_rows_per_file`` is the bounded
-    # worst case for when the DISTRIBUTION, not k, makes a cell hot
-    # (round 13, VERDICT r12 #4 — see the helper's docstring).
-    _write_cell_partitioned(
-        assigned.select("vec_id", "vec", "cell"),
-        os.path.join(path, "vectors"),
-        max_rows_per_file,
-        "overwrite",
-    )
-    src.select("vec_id").write.mode("overwrite").parquet(
-        os.path.join(path, "ids", "seg-build")
-    )
-    bloom = _write_segment_bloom(spark, path, "seg-build", src.select("vec_id"), n)
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centers)], "cell int, cvec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "centers.parquet")
-    )
-    meta = {
-        "k": k,
-        "seed": seed,
-        "dim": len(centers[0]),
-        "n_vectors": n,
-        "vectors_dir": "vectors",
-        "id_segments": ["seg-build"],
-        "segment_rows": {"seg-build": n},  # feeds the tiered fold pick
-        "bloom_params": {"seg-build": bloom},
-    }
-    if max_rows_per_file:
-        # the cap is an index-lifetime layout contract: appends and
-        # compact rewrites apply the same salting, and the frag gate
-        # measures files ABOVE each cell's recorded floor so a hot
-        # cell's split files read as layout, not fragmentation
-        meta["max_rows_per_file"] = int(max_rows_per_file)
-        meta["cell_file_floor"] = _cell_file_counts(
-            os.path.join(path, "vectors")
+    with _maintainer_locked(path):
+        # One shuffle (inside _write_cell_partitioned, round 12) buys the
+        # invariant the whole lifecycle assumes: one file per cell per
+        # write job — without it every shuffle partition writes its own
+        # file per cell it holds and the index is born fragmented. One
+        # task per cell is the right parallelism when cells are sized as
+        # probe units (fix = larger k); ``max_rows_per_file`` is the
+        # bounded worst case for when the DISTRIBUTION, not k, makes a
+        # cell hot (round 13, VERDICT r12 #4 — see the helper's
+        # docstring).
+        _write_cell_partitioned(
+            assigned.select("vec_id", "vec", "cell"),
+            os.path.join(path, "vectors"),
+            max_rows_per_file,
+            "overwrite",
         )
-    from .shingleindex import _write_index_bloom
-
-    _write_index_bloom(spark, path, meta, src.select("vec_id"), n, id_col="vec_id")
-    _write_meta(path, meta)
-    return meta
+        src.select("vec_id").write.mode("overwrite").parquet(
+            os.path.join(path, "ids", BUILD_SEG)
+        )
+        spark.createDataFrame(
+            [(i, c) for i, c in enumerate(centers)], "cell int, cvec array<double>"
+        ).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(path, "centers.parquet")
+        )
+        meta = {"k": k, "seed": seed, "dim": len(centers[0]), "vectors_dir": "vectors"}
+        if max_rows_per_file:
+            # the cap is an index-lifetime layout contract: appends and
+            # compact rewrites apply the same salting, and the frag gate
+            # measures files ABOVE each cell's recorded floor so a hot
+            # cell's split files read as layout, not fragmentation
+            meta["max_rows_per_file"] = int(max_rows_per_file)
+            meta["cell_file_floor"] = _cell_file_counts(
+                os.path.join(path, "vectors")
+            )
+        return _seal_build(
+            spark, path, _LAYOUT, meta, src.select("vec_id"), src.count()
+        )
 
 
 def _assign_cells(spark: SparkSession, path: str, vecs: DataFrame) -> DataFrame:
@@ -301,34 +321,17 @@ def _committed_ids(spark: SparkSession, path: str, meta: dict) -> DataFrame:
     """The committed membership frame — the union of the ``ids/<seg>/``
     dirs the meta has committed (uncommitted dirs are garbage/sentinels,
     never data — module docstring)."""
-    return spark.read.parquet(
-        *[os.path.join(path, "ids", s) for s in meta["id_segments"]]
-    )
-
-
-# --- bloom sidecar: the membership kind's next tier (round 10) ---------------
-#
-# The r9 verdict named it: "a bloom sidecar per segment skips the SHUFFLE
-# for disjoint batches". The primitives live in ``shingleindex`` (ONE
-# implementation across the three maintained indexes — the _judge_retired
-# precedent); these wrappers bind them to this index's layout
-# (vec_id ids under ``meta["id_segments"]``).
-
-
-def _write_segment_bloom(
-    spark: SparkSession, path: str, seg: str, ids: DataFrame, n: int
-) -> dict:
-    from .shingleindex import _write_segment_bloom as shared
-
-    return shared(spark, path, seg, ids, n, id_col="vec_id")
+    return _read_kind(spark, path, "ids", meta, "id_segments")
 
 
 def _bloom_candidate_segments(
     spark: SparkSession, path: str, meta: dict, batch_ids: DataFrame
 ) -> list[str]:
-    from .shingleindex import _bloom_candidate_segments as shared
-
-    return shared(
+    """The store's bloom pre-check over this index's committed ids
+    segments — the append runs it inside ``_segments._append_locked``;
+    ``bench.py``'s annindex experiment calls this form to report how
+    many membership segments a disjoint batch reads."""
+    return _segments_bloom_candidates(
         spark,
         path,
         meta.get("id_segments", []),
@@ -343,18 +346,7 @@ def _uncommitted_id_dirs(path: str, meta: dict) -> list[str]:
     """Segment dirs under ``ids/`` that no meta commit accounts for —
     each one is a torn-append (or torn-compact) sentinel demanding a
     membership repair before the next append can trust committed ids."""
-    try:
-        on_disk = [
-            d
-            for d in os.listdir(os.path.join(path, "ids"))
-            if not d.startswith((".", "_"))
-        ]
-    except FileNotFoundError:
-        return []
-    known = set(meta.get("id_segments", [])) | set(
-        meta.get("retired_id_segments", [])
-    )
-    return sorted(d for d in on_disk if d not in known)
+    return _uncommitted_dirs(path, _LAYOUT, meta, "ids")
 
 
 def _repair_membership(spark: SparkSession, path: str, meta: dict) -> int:
@@ -385,21 +377,14 @@ def _repair_membership(spark: SparkSession, path: str, meta: dict) -> int:
     missing = missing.localCheckpoint()  # feeds the write + the count
     n_missing = missing.count()
     if n_missing:
-        seg = f"seg-repair-{uuid.uuid4().hex[:16]}"
-        missing.write.mode("overwrite").parquet(os.path.join(path, "ids", seg))
-        meta.setdefault("bloom_params", {})[seg] = _write_segment_bloom(
-            spark, path, seg, missing.select("vec_id"), n_missing
+        # repair ids enter committed membership, so they enter the
+        # index-level bloom in the same commit (``_add_segment``) — a
+        # bloom that misses them would false-negative their next
+        # delivery (round 11)
+        _add_segment(
+            spark, path, _LAYOUT, meta, f"seg-repair-{uuid.uuid4().hex[:16]}",
+            missing, n_missing,
         )
-        # repair ids enter committed membership, so they MUST enter the
-        # index-level bloom in the same commit — a bloom that misses
-        # them would false-negative their next delivery (round 11)
-        from .shingleindex import _update_index_bloom
-
-        _update_index_bloom(
-            spark, path, meta, missing.select("vec_id"), n_missing, id_col="vec_id"
-        )
-        meta.setdefault("id_segments", []).append(seg)
-        meta.setdefault("segment_rows", {})[seg] = n_missing
         if legacy:
             # the scan just recounted the whole tree exactly — take it
             meta["n_vectors"] = n_missing
@@ -461,194 +446,51 @@ def append_ivf_index(
     files per cell), so micro-batch cadence neither accretes segments
     forever nor pays an O(corpus) rewrite every ``max_segments``
     appends. ``max_segments=None`` disables."""
-    with _maintainer_locked(path):
-        result = _append_ivf_locked(spark, path, vectors, id_col, vec_col, batch_id)
-    if max_segments is not None and result.pop("_n_segments", 0) > max_segments:
-        # tiered ids fold + fragmentation-gated vectors rewrite — the
-        # auto path must not pay an O(corpus) tree re-lay every
-        # max_segments appends (compact_ivf_index docstring)
-        result["auto_compact"] = compact_ivf_index(
+    def repair_if_torn(meta):
+        if "id_segments" not in meta or _uncommitted_id_dirs(path, meta):
+            _repair_membership(spark, path, meta)
+
+    # the auto hand-off is the tiered ids fold + a fragmentation-gated
+    # vectors rewrite — the auto path must not pay an O(corpus) tree
+    # re-lay every max_segments appends (compact_ivf_index docstring)
+    return _append_maintained(
+        path,
+        lambda: _append_locked(
+            spark,
+            path,
+            _LAYOUT,
+            vectors.select(
+                F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("vec")
+            ),
+            "vec",
+            batch_id,
+            ["vec_id"],
+            _write_vectors,
+            prepare=repair_if_torn,
+        ),
+        lambda: compact_ivf_index(
             spark, path, max_segments=max_segments, frag_factor=8
-        )
-    else:
-        result.pop("_n_segments", None)
-    return result
-
-
-def _append_ivf_locked(
-    spark: SparkSession,
-    path: str,
-    vectors: DataFrame,
-    id_col: str,
-    vec_col: str,
-    batch_id,
-) -> dict:
-    meta = read_ivf_meta(path)
-    if batch_id is not None and batch_id in meta.get("applied_batches", []):
-        return {
-            "appended": 0,
-            "n_vectors": meta["n_vectors"],
-            "reason": "already_applied",
-        }
-    if "id_segments" not in meta or _uncommitted_id_dirs(path, meta):
-        _repair_membership(spark, path, meta)
-    src = (
-        vectors.select(
-            F.col(id_col).alias("vec_id"), _as_double(F.col(vec_col)).alias("vec")
-        )
-        # deterministic intra-batch collapse (round 11, VERDICT r10 #3 —
-        # parity with the build path): min over the orderable array pins
-        # the winner independent of shuffle order, so a torn first
-        # delivery and its retry index the SAME payload
-        .groupBy("vec_id")
-        .agg(F.min("vec").alias("vec"))
-        .localCheckpoint()  # feeds bloom probe + anti-join + writes
+        ),
+        max_segments,
     )
-    # bloom pre-check: only segments that MIGHT contain a batch id feed
-    # the anti-join — a disjoint batch (the common ingest case) skips
-    # the membership read and its shuffle entirely; no false negatives,
-    # so exactly-once is untouched
-    cand_segs = _bloom_candidate_segments(spark, path, meta, src.select("vec_id"))
-    if cand_segs:
-        member = spark.read.parquet(
-            *[os.path.join(path, "ids", s) for s in cand_segs]
-        )
-        src = src.join(member, "vec_id", "left_anti").localCheckpoint()
-    added = src.count()
-    if added:
-        from .shingleindex import _segment_tag, _update_index_bloom
-
-        seg = _segment_tag(batch_id)
-        # intent + membership sentinel BEFORE the vectors append — the
-        # ordering that makes every crash window detectable (docstring);
-        # the bloom sidecar lands with it, its params committed only by
-        # the meta write (params-less segments are always-candidate)
-        src.select("vec_id").write.mode("overwrite").parquet(
-            os.path.join(path, "ids", seg)
-        )
-        bloom = _write_segment_bloom(spark, path, seg, src.select("vec_id"), added)
-        _update_index_bloom(
-            spark, path, meta, src.select("vec_id"), added, id_col="vec_id"
-        )
-        assigned = _assign_cells(spark, path, src)
-        # one file per touched cell per append (batch-sized shuffle):
-        # makes frag_factor mean "appends per cell since the last
-        # compact" instead of scaling with the writer's partition count;
-        # a capped index salts a hot cell's batch slice the same way
-        # every other write does (round 13, VERDICT r12 #4)
-        _write_cell_partitioned(
-            assigned,
-            _vectors_path(path, meta),
-            meta.get("max_rows_per_file"),
-            "append",
-        )
-        meta["id_segments"] = meta["id_segments"] + [seg]
-        meta.setdefault("segment_rows", {})[seg] = added
-        meta.setdefault("bloom_params", {})[seg] = bloom
-    meta["n_vectors"] += added
-    if batch_id is not None:
-        meta.setdefault("applied_batches", []).append(batch_id)
-    _write_meta(path, meta)
-    return {
-        "appended": added,
-        "n_vectors": meta["n_vectors"],
-        "_n_segments": len(meta["id_segments"]),
-    }
 
 
-def _sweep_ivf_retired(
-    path: str, meta: dict, remove_retired: bool, retire_age_s: float
-) -> bool:
-    """Apply the shared age-gate policy
-    (``shingleindex._judge_retired`` — one implementation across the
-    three indexes) to the IVF index's two retired-artifact shapes:
-    whole vectors trees (``retired_dirs``) and ids segments
-    (``retired_id_segments``). Timestamps live in ``meta['retired_ts']``
-    keyed by the dir's path-relative name. Returns True when the meta
-    changed and needs a commit."""
-    import shutil
-
-    from .shingleindex import _judge_retired, _sweep_retired_blooms
-
-    ts = meta.setdefault("retired_ts", {})
-    changed = False
-    for meta_key, rel in (("retired_dirs", ""), ("retired_id_segments", "ids")):
-        keep, collect, ch = _judge_retired(
-            ts,
-            meta.get(meta_key, []),
-            lambda n, rel=rel: f"{rel}/{n}" if rel else n,
-            remove_retired,
-            retire_age_s,
-        )
-        for name in collect:
-            shutil.rmtree(os.path.join(path, rel, name), ignore_errors=True)
-            if rel == "ids":  # the segment's bloom sidecar retires with it
-                shutil.rmtree(
-                    os.path.join(path, "blooms", name), ignore_errors=True
-                )
-        meta[meta_key] = keep
-        changed = changed or ch
-    # retired index-level bloom dirs age out under the same shared policy
-    changed = _sweep_retired_blooms(path, meta, remove_retired, retire_age_s) or changed
-    _sweep_orphan_ivf(path, meta, retire_age_s)
-    return changed
-
-
-def _sweep_orphan_ivf(path: str, meta: dict, retire_age_s: float) -> int:
-    """Age-gated sweep of ORPHAN IVF artifacts (round 12, the
-    ``shingleindex._sweep_orphan_dirs`` policy on this index's two
-    orphanable shapes): ``vectors.__v*`` trees no meta references (a
-    compact that crashed between its tree write and its meta switch —
-    previously "never-deleted orphans" by documentation) and bloom
-    sidecar dirs referenced by neither params nor pointer nor the
-    retired lists (torn ``_write_index_bloom`` attempts). Runs under
-    the maintainer flock via the compact path, so the only fresh
-    unreferenced tree would be the lock holder's own in-progress write
-    — and the age gate skips anything younger than ``retire_age_s``
-    regardless. ``ids/`` dirs are deliberately NOT swept here: an
-    uncommitted ids dir is the torn-append SENTINEL that routes the
-    next append through ``_repair_membership``, which is what removes
-    it. Returns the number of dirs removed."""
-    import shutil
-    import time as _time
-
-    now = _time.time()
-    removed = 0
-    tree_refs = {meta.get("vectors_dir", "vectors")} | set(
-        meta.get("retired_dirs", [])
+def _write_vectors(
+    spark: SparkSession, path: str, meta: dict, src: DataFrame, seg: str, _prepared
+) -> None:
+    """An append's vectors, after its ids sentinel: assigned to their
+    nearest stored centroid and appended into the active tree — one file
+    per touched cell per append (batch-sized shuffle), so frag_factor
+    means "appends per cell since the last compact" instead of scaling
+    with the writer's partition count; a capped index salts a hot
+    cell's batch slice the same way every other write does (round 13,
+    VERDICT r12 #4)."""
+    _write_cell_partitioned(
+        _assign_cells(spark, path, src),
+        _vectors_path(path, meta),
+        meta.get("max_rows_per_file"),
+        "append",
     )
-    bloom_refs = (
-        set(meta.get("bloom_params", {}))
-        | set(meta.get("id_segments", []))
-        | set(meta.get("retired_id_segments", []))
-        | set(meta.get("retired_blooms", []))
-        # an uncommitted ids sentinel's bloom belongs to the repair path,
-        # not this sweep — keep it until the sentinel resolves
-        | set(_uncommitted_id_dirs(path, meta))
-    )
-    ib = meta.get("index_bloom")
-    if ib is not None:
-        bloom_refs.add(ib["dir"])
-    for base, refs, match in (
-        (path, tree_refs, lambda n: n == "vectors" or n.startswith("vectors.__v")),
-        (os.path.join(path, "blooms"), bloom_refs, lambda n: True),
-    ):
-        try:
-            children = os.listdir(base)
-        except FileNotFoundError:
-            continue
-        for child in children:
-            if child.startswith((".", "_")) or child in refs or not match(child):
-                continue
-            p = os.path.join(base, child)
-            try:
-                if not os.path.isdir(p) or (now - os.stat(p).st_mtime) <= retire_age_s:
-                    continue
-            except OSError:
-                continue
-            shutil.rmtree(p, ignore_errors=True)
-            removed += 1
-    return removed
 
 
 def compact_ivf_index(
@@ -681,9 +523,9 @@ def compact_ivf_index(
     ``meta["retired_dirs"]`` — and folded-away ids segments under
     ``meta["retired_id_segments"]`` — for the sweep: age-gated by
     default (``retire_age_s``), immediate on ``remove_retired=True``
-    (``_sweep_ivf_retired``). The ``ids/<seg>/`` membership kind folds
-    into one segment in the SAME single meta switch, exactly as the
-    segment indexes' compaction folds their kinds. The
+    (``_segments._sweep``). The ``ids/<seg>/`` membership kind folds in
+    the SAME single meta switch through the segment indexes' own fold
+    (``_segments._fold_segments``). The
     ``applied_batches`` ledger is TRUNCATED on every COMMITTED compact
     — ids folds tiered included (round 12, VERDICT r11 #1) and
     vectors-only fires (round 13, VERDICT r12 #2): the membership
@@ -696,7 +538,7 @@ def compact_ivf_index(
 
     AUTO-TRIGGER SHAPE (round 11): the append path calls this with
     ``max_segments`` + ``frag_factor=8``. With ``max_segments`` set the
-    ids fold is SIZE-TIERED (``shingleindex._tiered_fold_pick`` —
+    ids fold is SIZE-TIERED (``_segments._tiered_fold_pick`` —
     smallest segments only, large settled segments never rewritten,
     amortized O(batch · log) per append instead of
     O(membership/max_segments)); the index-level bloom rebuilds re-sized
@@ -734,9 +576,8 @@ def compact_ivf_index(
     append churn hide behind the cap. Manual calls (defaults) keep
     full-fold + any-fragmentation semantics: one ids segment, one file
     set per cell (cells already at the floor carry as links)."""
+    import time as _time
     import uuid
-
-    from .shingleindex import _tiered_fold_pick, _write_index_bloom
 
     with _maintainer_locked(path):
         meta = read_ivf_meta(path)
@@ -764,35 +605,13 @@ def compact_ivf_index(
             ),
             key=int,
         )
-        id_segs = meta.get("id_segments", [])
-        if max_segments is None:
-            fold_ids = list(id_segs) if len(id_segs) > 1 else []
-        else:
-            fold_ids = _tiered_fold_pick(
-                id_segs, meta.get("segment_rows", {}), max_segments
-            )
+        fold_ids = _fold_pick(_LAYOUT, meta, max_segments)
         need_vectors = bool(frag_cells)
         need_ids = len(fold_ids) >= 2
-        full_ids = need_ids and len(fold_ids) == len(id_segs)
-        if not need_vectors and not need_ids:
-            if _sweep_ivf_retired(path, meta, remove_retired, retire_age_s):
-                _write_meta(path, meta)
-            return {
-                "compacted": False,
-                "files_before": n_files_before,
-                "files_after": n_files_before,
-                # same shape as the committed path (round 13, ADVICE r12
-                # low): consumers indexing the stats must not KeyError
-                # only on the no-op path
-                "cells_rewritten": 0,
-                "cells_carried": 0,
-                "bytes_rewritten": 0,
-            }
-        tag = uuid.uuid4().hex[:8]
         bytes_rewritten = 0
         carried_cells: list = []
         if need_vectors:
-            new_dir = f"vectors.__v{tag}"
+            new_dir = f"vectors.__v{uuid.uuid4().hex[:8]}"
             # rewrite ONLY the fragmented cells — partition pruning keeps
             # the read to exactly their files; one file per cell after
             # (ceil(rows/cap) files for a capped index's hot cells —
@@ -815,31 +634,9 @@ def compact_ivf_index(
                         for fn in os.listdir(cdir)
                         if not fn.startswith((".", "_"))
                     )
-        if need_ids:
-            new_id_seg = f"seg-compact-{tag}"
-            spark.read.parquet(
-                *[os.path.join(path, "ids", s) for s in fold_ids]
-            ).write.mode("overwrite").parquet(
-                os.path.join(path, "ids", new_id_seg)
-            )
-            # one fresh sidecar for the folded segment, built from the dir
-            # just written (single source of truth, no recompute of the
-            # union read); committed by the same meta switch below
-            folded_ids = spark.read.parquet(os.path.join(path, "ids", new_id_seg))
-            n_folded = folded_ids.count()
-            folded_bloom = _write_segment_bloom(
-                spark, path, new_id_seg, folded_ids, n_folded
-            )
-        # ONE meta switch commits the whole compaction — no unreadable
-        # window on either kind; torn attempts are never-deleted orphans
-        import time as _time
-
-        now = _time.time()
-        ts = meta.setdefault("retired_ts", {})
-        if need_vectors:
             old = os.path.basename(cur)
             meta["retired_dirs"] = meta.get("retired_dirs", []) + [old]
-            ts[old] = now
+            meta.setdefault("retired_ts", {})[old] = _time.time()
             meta["vectors_dir"] = new_dir
             if meta.get("max_rows_per_file"):
                 # re-record the rewritten cells' layout floors (a hot
@@ -852,53 +649,36 @@ def compact_ivf_index(
                 )
                 meta["cell_file_floor"] = floors
         if need_ids:
-            meta["retired_id_segments"] = (
-                meta.get("retired_id_segments", []) + list(fold_ids)
-            )
-            ts.update({f"ids/{s}": now for s in fold_ids})
-            meta["id_segments"] = [
-                s for s in id_segs if s not in fold_ids
-            ] + [new_id_seg]
-            bp = meta.setdefault("bloom_params", {})
-            rows = meta.setdefault("segment_rows", {})
-            for s in fold_ids:
-                bp.pop(s, None)  # dirs linger for in-flight readers until swept
-                rows.pop(s, None)
-            bp[new_id_seg] = folded_bloom
-            rows[new_id_seg] = n_folded
-            if full_ids:
-                # the index-LEVEL bloom rebuilds from the folded
-                # membership, re-sized with headroom — append-time fpp
-                # drift resets; a tiered fold leaves the committed id
-                # set (hence the pointer) untouched
-                _write_index_bloom(
-                    spark, path, meta, folded_ids, n_folded, id_col="vec_id"
-                )
-            else:
-                # tiered fold = the bloom's maintenance point: legacy
-                # indexes gain a pointer, saturated blooms rebuild
-                # re-sized from committed membership, oversized delta
-                # tails fold (shingleindex._maintain_index_bloom)
-                from .shingleindex import _maintain_index_bloom
-
-                _maintain_index_bloom(
-                    spark, path, meta,
-                    _committed_ids(spark, path, meta).select("vec_id"),
-                    id_col="vec_id",
-                )
-        # ledger truncation on ANY committed compact (round 12, VERDICT
-        # r11 #1; round 13, VERDICT r12 #2 closed the last latent gap —
-        # a bounded-mode VECTORS-ONLY fire used to commit a meta write
-        # without truncating): we are past the no-op early return, so
-        # need_ids or need_vectors holds and this commit proves the
-        # index is under maintenance. The membership anti-join's replay
-        # coverage is fold-type-independent — a replayed ledgered batch
-        # lands added == 0 with or without its ledger entry — so the
-        # truncation is safe regardless of WHICH kind folded.
-        meta["applied_batches"] = []
-        _write_meta(path, meta)
-        if _sweep_ivf_retired(path, meta, remove_retired, retire_age_s):
+            _fold_segments(spark, path, _LAYOUT, meta, fold_ids)
+        if need_vectors or need_ids:
+            # ONE meta switch commits the whole compaction — no
+            # unreadable window on either kind; torn attempts are
+            # orphans for the age-gated sweep. The ledger truncates on
+            # ANY committed compact (round 12, VERDICT r11 #1; round 13,
+            # VERDICT r12 #2 closed the last latent gap — a bounded-mode
+            # VECTORS-ONLY fire used to commit without truncating): the
+            # membership anti-join's replay coverage is
+            # fold-type-independent, so a replayed ledgered batch lands
+            # added == 0 with or without its ledger entry.
+            meta["applied_batches"] = []
             _write_meta(path, meta)
+        # a swept IVF meta carries both retired lists, empty or not
+        meta.setdefault("retired_dirs", [])
+        meta.setdefault("retired_id_segments", [])
+        if _sweep(path, _LAYOUT, meta, remove_retired, retire_age_s):
+            _write_meta(path, meta)
+        if not (need_vectors or need_ids):
+            return {
+                "compacted": False,
+                "files_before": n_files_before,
+                "files_after": n_files_before,
+                # same shape as the committed path (round 13, ADVICE r12
+                # low): consumers indexing the stats must not KeyError
+                # only on the no-op path
+                "cells_rewritten": 0,
+                "cells_carried": 0,
+                "bytes_rewritten": 0,
+            }
         n_files_after = len(
             spark.read.parquet(_vectors_path(path, meta)).inputFiles()
         )

@@ -7,8 +7,8 @@ the DF-capped inverted index is too wide: the corpus is stored as banded
 MinHash signatures, so a probe joins |batch bands| equality keys against
 the band table and never touches shingle sets at all. Reference parity:
 same shingle→minhash→band→bucket-join semantics as ``dedup_minhash_lsh``
-(SURVEY.md §7 dedup mandate), lifted into the annindex/shingleindex
-build / append / probe / compact lifecycle:
+(SURVEY.md §7 dedup mandate), lifted into the segment store's
+(``_segments``) build / append / probe / compact lifecycle:
 
     <path>/bands/<seg>/   (doc_id, band, bucket)  — banded signatures
     <path>/docs/<seg>/    (doc_id)                — membership, for the
@@ -16,11 +16,12 @@ build / append / probe / compact lifecycle:
     <path>/_minhash_meta.json
         {num_perm, bands, family, n_docs, segments, applied_batches}
 
-SEGMENT COMMIT PROTOCOL: identical to the shingle index (whose module
-docstring states it) — per-batch segment dirs, the atomic meta rename
-is the sole commit point, torn appends are invisible and replays
-overwrite their own dirs; ``compact_minhash_index`` folds committed
-segments into one. Single maintaining writer, same contract.
+SEGMENT COMMIT PROTOCOL: the index is a layout over the segment store
+(``_segments``, whose module docstring states the protocol) —
+per-batch segment dirs, the atomic meta rename is the sole commit
+point, torn appends are invisible and replays overwrite their own dirs;
+``compact_minhash_index`` folds committed segments. Build, append and
+compact serialize on the store's maintainer flock.
 
 HASH FAMILIES: ``family='xxhash64'`` is the production default —
 permutation k is seeded xxhash64(shingle, k), band buckets are the
@@ -42,38 +43,48 @@ capped-Jaccard path (or ``probe_shingle_index``) before acting.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import LSH_BANDS, NUM_PERM, minhash_band_frame
-from .shingleindex import (
+from ._segments import (
+    BUILD_SEG,
     DEFAULT_MAX_SEGMENTS,
-    _bloom_candidate_segments,
+    SegmentLayout,
+    _append_locked,
+    _append_maintained,
+    _compact_segments,
+    _load_meta,
     _maintainer_locked,
+    _min_collapse,
     _read_kind,
-    _segment_tag,
-    _update_index_bloom,
-    _write_index_bloom,
-    _write_segment_bloom,
+    _seal_build,
+    _store_meta,
 )
+from .dedup import LSH_BANDS, NUM_PERM, minhash_band_frame
 
 _META_FILE = "_minhash_meta.json"
 
+#: the segment-store layout (``_segments.SegmentLayout``); docs are the
+#: membership kind the append anti-join reads
+_LAYOUT = SegmentLayout(
+    owner=__name__,
+    reader="read_minhash_meta",
+    meta_file=_META_FILE,
+    kinds=("bands", "docs"),
+    member_kind="docs",
+    id_col="doc_id",
+)
+
 
 def read_minhash_meta(path: str) -> dict:
-    with open(os.path.join(path, _META_FILE)) as fh:
-        return json.load(fh)
+    return _load_meta(_LAYOUT, path)
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    """Fsync'd atomic commit — ``_durable.write_json_atomic`` holds the
-    single implementation and the durability rationale."""
-    from .._durable import write_json_atomic
-
-    write_json_atomic(os.path.join(path, _META_FILE), meta)
+    """The index's commit point (``_segments._store_meta``)."""
+    _store_meta(_LAYOUT, path, meta)
 
 
 # the banding + both hash families live in dedup.minhash_band_frame
@@ -98,38 +109,19 @@ def build_minhash_index(
     ``n_bands_matched`` against every later probe. Min-text winner, not
     dropDuplicates — a deterministic collapse (round-10 review catch,
     same as ``build_shingle_index``). Pin feeds bands + membership +
-    count."""
-    docs = (
-        docs.select("doc_id", "text")
-        .groupBy("doc_id")
-        .agg(F.min("text").alias("text"))
-        .localCheckpoint()
-    )
-    seg = "seg-build"
-    # mode-overwrite: a torn BUILD must be retryable over the same path
-    _band_frame(docs, num_perm, n_bands, family).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "bands", seg))
-    docs.select("doc_id").write.mode("overwrite").parquet(
-        os.path.join(path, "docs", seg)
-    )
-    n = docs.count()
-    bloom = _write_segment_bloom(
-        spark, path, seg, docs.select("doc_id"), n, id_col="doc_id"
-    )
-    meta = {
-        "num_perm": num_perm,
-        "bands": n_bands,
-        "family": family,
-        "n_docs": n,
-        "segments": [seg],
-        "segment_rows": {seg: n},  # feeds the tiered fold pick
-        "bloom_params": {seg: bloom},
-    }
-    os.makedirs(path, exist_ok=True)
-    _write_index_bloom(spark, path, meta, docs.select("doc_id"), n, id_col="doc_id")
-    _write_meta(path, meta)
-    return meta
+    count. Writes and commit run under the maintainer flock."""
+    docs = _min_collapse(docs.select("doc_id", "text"), "doc_id", "text")
+    with _maintainer_locked(path):
+        _band_frame(docs, num_perm, n_bands, family).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(path, "bands", BUILD_SEG))
+        docs.select("doc_id").write.mode("overwrite").parquet(
+            os.path.join(path, "docs", BUILD_SEG)
+        )
+        meta = {"num_perm": num_perm, "bands": n_bands, "family": family}
+        return _seal_build(
+            spark, path, _LAYOUT, meta, docs.select("doc_id"), docs.count()
+        )
 
 
 def append_minhash_index(
@@ -149,75 +141,24 @@ def append_minhash_index(
     replay-overwritable. Runs under the maintainer flock; more than
     ``max_segments`` committed segments after the commit triggers
     ``compact_minhash_index`` (round 11, VERDICT r10 #1 + #4)."""
-    with _maintainer_locked(path):
-        result = _append_minhash_locked(spark, path, docs, batch_id)
-    if max_segments is not None and result.pop("_n_segments", 0) > max_segments:
-        result["auto_compact"] = compact_minhash_index(
-            spark, path, max_segments=max_segments
-        )
-    else:
-        result.pop("_n_segments", None)
-    return result
-
-
-def _append_minhash_locked(
-    spark: SparkSession, path: str, docs: DataFrame, batch_id
-) -> dict:
-    meta = read_minhash_meta(path)
-    if batch_id is not None and batch_id in meta.get("applied_batches", []):
-        return {
-            "appended": 0,
-            "n_docs": meta["n_docs"],
-            "reason": "already_applied",
-        }
-    docs = (
-        docs.select("doc_id", "text")
-        .groupBy("doc_id")
-        .agg(F.min("text").alias("text"))
-        .localCheckpoint()
-    )
-    # bloom pre-check (round 10, shared primitives in shingleindex): a
-    # disjoint batch skips the membership read and its shuffle entirely
-    cand_segs = _bloom_candidate_segments(
-        spark,
+    return _append_maintained(
         path,
-        meta["segments"],
-        meta.get("bloom_params", {}),
-        docs.select("doc_id"),
-        id_col="doc_id",
-        index_bloom=meta.get("index_bloom"),
+        lambda: _append_locked(
+            spark, path, _LAYOUT, docs.select("doc_id", "text"), "text", batch_id,
+            ["doc_id"], _write_bands,
+        ),
+        lambda: compact_minhash_index(spark, path, max_segments=max_segments),
+        max_segments,
     )
-    if cand_segs:
-        existing = spark.read.parquet(
-            *[os.path.join(path, "docs", s) for s in cand_segs]
-        )
-        docs = docs.join(existing, "doc_id", "left_anti").localCheckpoint()
-    added = docs.count()
-    seg = _segment_tag(batch_id)
-    if added:
-        _band_frame(
-            docs, meta["num_perm"], meta["bands"], meta["family"]
-        ).write.mode("overwrite").parquet(os.path.join(path, "bands", seg))
-        docs.select("doc_id").write.mode("overwrite").parquet(
-            os.path.join(path, "docs", seg)
-        )
-        meta.setdefault("bloom_params", {})[seg] = _write_segment_bloom(
-            spark, path, seg, docs.select("doc_id"), added, id_col="doc_id"
-        )
-        _update_index_bloom(
-            spark, path, meta, docs.select("doc_id"), added, id_col="doc_id"
-        )
-        meta["segments"] = meta["segments"] + [seg]
-        meta.setdefault("segment_rows", {})[seg] = added
-    meta["n_docs"] += added
-    if batch_id is not None:
-        meta.setdefault("applied_batches", []).append(batch_id)
-    _write_meta(path, meta)
-    return {
-        "appended": added,
-        "n_docs": meta["n_docs"],
-        "_n_segments": len(meta["segments"]),
-    }
+
+
+def _write_bands(
+    spark: SparkSession, path: str, meta: dict, docs: DataFrame, seg: str, _prepared
+) -> None:
+    """An append's bands segment, signed under the RECORDED family."""
+    _band_frame(
+        docs, meta["num_perm"], meta["bands"], meta["family"]
+    ).write.mode("overwrite").parquet(os.path.join(path, "bands", seg))
 
 
 def probe_minhash_index(
@@ -270,20 +211,10 @@ def compact_minhash_index(
     smallest-half fold under the auto-trigger's bound. Rationale,
     protocol, retired-dir retention, the age-gated sweep, ledger
     truncation, and the enforced single-writer contract all live in
-    ``shingleindex._compact_segments`` (one protocol, one
+    ``_segments._compact_segments`` (one protocol, one
     implementation)."""
-    from .shingleindex import _compact_segments
-
     return _compact_segments(
-        spark,
-        path,
-        ("bands", "docs"),
-        read_minhash_meta,
-        _write_meta,
-        remove_retired,
-        retire_age_s,
-        membership_kind="docs",
-        max_segments=max_segments,
+        spark, path, _LAYOUT, remove_retired, retire_age_s, max_segments
     )
 
 

@@ -22,17 +22,12 @@ refit):
     <path>/_shingle_meta.json
         {shingle_width, df_cap, n_docs, segments, applied_batches}
 
-SEGMENT COMMIT PROTOCOL: the build and every append land their three
+SEGMENT COMMIT PROTOCOL (``_segments``, the store all three maintained
+indexes are layouts over): the build and every append land their three
 frames under a per-batch SEGMENT directory, and the atomic meta rename
 is the sole commit point — readers resolve each kind through
-``meta["segments"]``, so a torn append (crash between the three
-sub-writes, or after them but before the meta rename) is INVISIBLE to
-every probe, and a re-delivery overwrites the same segment dirs (the
-tag derives from the batch id) before committing once. This is the
-bucketed-merge manifest pattern applied to the index: uncommitted
-segment dirs are garbage, never data. Appends without a batch id get a
-random tag — there is no replay contract to key on, and an abandoned
-retry leaves only an invisible orphan dir.
+``meta["segments"]``, so a torn append is INVISIBLE to every probe and a
+re-delivery overwrites the same segment dirs before committing once.
 
 - ``build_shingle_index``: tokenize the corpus ONCE; shingles whose
   document frequency exceeds ``df_cap`` become the STOP LIST (they carry
@@ -61,56 +56,48 @@ house production semantics (``dedup.py`` DF_CAP note).
 
 from __future__ import annotations
 
-import json
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ._segments import (  # noqa: F401 — BLOOM_* etc. stay importable from here
+    BLOOM_BITS_PER_ID,
+    BLOOM_HASH_VERSION,
+    BLOOM_K,
+    BLOOM_PRECHECK_ROW_BUDGET,
+    BUILD_SEG,
+    DEFAULT_MAX_SEGMENTS,
+    INDEX_BLOOM_HEADROOM,
+    SegmentLayout,
+    _append_locked,
+    _append_maintained,
+    _compact_segments,
+    _load_meta,
+    _maintainer_locked,
+    _min_collapse,
+    _read_kind,
+    _seal_build,
+    _store_meta,
+)
 from .dedup import DF_CAP, JACCARD_THRESHOLD, SHINGLE_WIDTH, _doc_shingles
 
 _META_FILE = "_shingle_meta.json"
 
-#: Auto-compaction threshold (round 11, VERDICT r10 #1): an append that
-#: leaves more than this many committed segments triggers the index's
-#: own ``compact_*`` — without it the continuous-ingest paths grow one
-#: segment per micro-batch FOREVER, and per-append cost (bloom pre-check
-#: subtrees, membership file opens, meta size) grows O(#segments) — the
-#: exact degradation class the bloom tier was built to kill, re-entering
-#: through segment count. The compact is a union rewrite of the index —
-#: amortized O(index/N) per append; tune N up for huge indexes with slow
-#: ingest, or pass ``max_segments=None`` to manage compaction manually.
-DEFAULT_MAX_SEGMENTS = 16
-
-
-@contextmanager
-def _maintainer_locked(path: str):
-    """Exclusive flock on ``<path>/_maintainer.guard`` — the
-    single-writer contract ENFORCED instead of documented (round 11,
-    VERDICT r10 #4): a compact racing an append was a lost-update on the
-    meta segment list. Every maintainer (append / compact, all three
-    index families) runs its read-meta → write-artifacts → commit-meta
-    sequence under this guard, so concurrent maintainers serialize and
-    neither can clobber the other's meta commit. Probes never take it —
-    readers resolve whatever meta commit they observe, unchanged.
-    Degrades exactly like the recovery-lock guard it reuses
-    (``pipeline.merge._flock_guard``): on a flock-less filesystem the
-    documented single-writer contract is again the caller's job."""
-    from ..pipeline.merge import _flock_guard
-
-    os.makedirs(path, exist_ok=True)
-    with _flock_guard(os.path.join(path, "_maintainer.guard")) as g:
-        yield g
-
-
-def _meta_path(path: str) -> str:
-    return os.path.join(path, _META_FILE)
+#: the segment-store layout (``_segments.SegmentLayout``); digests are
+#: the membership kind the append anti-join reads
+_LAYOUT = SegmentLayout(
+    owner=__name__,
+    reader="read_shingle_meta",
+    meta_file=_META_FILE,
+    kinds=("shingles", "counts", "digests"),
+    member_kind="digests",
+    id_col="doc_id",
+)
 
 
 def read_shingle_meta(path: str) -> dict:
-    with open(_meta_path(path)) as fh:
-        meta = json.load(fh)
+    meta = _load_meta(_LAYOUT, path)
     if "segments" not in meta:
         raise RuntimeError(
             f"shingle index at {path!r} uses the pre-segment flat layout "
@@ -122,11 +109,8 @@ def read_shingle_meta(path: str) -> dict:
 
 
 def _write_meta(path: str, meta: dict) -> None:
-    """Fsync'd atomic commit — ``_durable.write_json_atomic`` holds the
-    single implementation and the durability rationale."""
-    from .._durable import write_json_atomic
-
-    write_json_atomic(_meta_path(path), meta)
+    """The index's commit point (``_segments._store_meta``)."""
+    _store_meta(_LAYOUT, path, meta)
 
 
 def _hashed_shingles(docs: DataFrame) -> DataFrame:
@@ -134,465 +118,6 @@ def _hashed_shingles(docs: DataFrame) -> DataFrame:
     the shared shuffle-thin representation (``dedup._capped_shingles``
     documents the 64-bit-collision argument)."""
     return _doc_shingles(docs).select("doc_id", F.xxhash64("shingle").alias("sh"))
-
-
-def _segment_tag(batch_id) -> str:
-    """Deterministic segment dir name from the batch id (same id →
-    same dir, so a replay OVERWRITES its own torn attempt); random for
-    ledger-less appends (no replay contract to key on)."""
-    import hashlib
-    import uuid
-
-    if batch_id is None:
-        return f"seg-{uuid.uuid4().hex[:16]}"
-    return "seg-" + hashlib.md5(str(batch_id).encode()).hexdigest()[:16]
-
-
-def _read_kind(spark: SparkSession, path: str, kind: str, meta: dict) -> DataFrame:
-    """One frame per index kind = the union of its COMMITTED segment
-    dirs (module docstring: uncommitted dirs are garbage, not data)."""
-    return spark.read.parquet(
-        *[os.path.join(path, kind, seg) for seg in meta["segments"]]
-    )
-
-
-# --- bloom sidecar primitives (round 10) --------------------------------------
-#
-# ONE implementation for all three maintained indexes (the _judge_retired
-# precedent — policy code that must not drift between families): the
-# append-side membership anti-join is already O(committed ids) I/O, but it
-# is a JOIN — both sides shuffle on the id. A per-segment bloom filter
-# turns the common ingest case (a batch of genuinely NEW ids) into a
-# shuffle-free pre-check: the batch's bit positions broadcast against each
-# segment's word table (scan + filter, nothing repartitions), and only
-# segments the bloom says MIGHT contain a batch id are read into the
-# anti-join. No false negatives by construction (a present id's bits are
-# all set; segments without recorded params are always-candidate), so the
-# exactly-once contract is untouched; a false positive merely reads one
-# segment needlessly.
-
-BLOOM_BITS_PER_ID = 16  # m = 16·n bits; with k=8 probes fpp ≈ 6e-4
-BLOOM_K = 8
-#: Index-level blooms are sized for this many× the ids they fold, so the
-#: appends that land before the next compaction only degrade fpp
-#: gracefully (at 2× occupancy the effective 8 bits/id with k=8 is still
-#: ≈ 2.5% fpp — a needless segment read, never a correctness issue).
-INDEX_BLOOM_HEADROOM = 2
-#: The pre-check broadcasts the batch's (|batch| × k)-row position frame
-#: per bloom read — bounded here so a backfill-sized append can never
-#: become a multi-GB broadcast (round 11, ADVICE r10 medium — the
-#: ivf_index_search bytes-budget hazard on a different surface). Over
-#: budget the pre-check is SKIPPED (all segments candidate): the
-#: anti-join is then cheap relative to the batch itself, and skipping is
-#: fail-open so exactly-once is untouched. 100k ids × 8 probes × ~24 B
-#: ≈ 19 MB broadcast worst case.
-BLOOM_PRECHECK_ROW_BUDGET = 100_000
-#: Hash-canonicalization version recorded in every bloom's params
-#: (round 12, ADVICE r11 low). Version 2 = the round-11 bigint
-#: canonicalization for fractional/decimal id columns
-#: (``_bloom_hash_input``); version 1 / absent = the raw-string form
-#: pre-r11 blooms were built with. The two forms agree for the
-#: integral-or-string id contract, but a DOUBLE id hashes differently
-#: ('5.0' vs '5') — probing an unversioned bloom with the new form
-#: would be a silent false NEGATIVE (a double-append, the one broken
-#: direction). Probes over fractional-typed id columns therefore treat
-#: params that lack the current version as always-candidate; the drift
-#: is detectable instead of silent.
-BLOOM_HASH_VERSION = 2
-
-
-def _bloom_hash_input(ids: DataFrame, id_col: str):
-    """The canonical string form of the id column that both the write
-    and the probe side hash — ONE function so they can never disagree.
-    Integer widths normalize via the string cast (xxhash64 hashes an INT
-    5 and a BIGINT 5 to DIFFERENT values — round 10); fractional /
-    decimal columns normalize through a BIGINT cast first (round 11,
-    ADVICE r10 low: DOUBLE 5.0 stringifies as '5.0' vs the indexed
-    BIGINT's '5' — a bloom false negative the anti-join's coercion would
-    have matched, i.e. a double-append). The bigint truncation is safe
-    in the only direction that matters: a genuinely fractional id (5.5)
-    hashes like 5 on BOTH sides, so it can only produce a false
-    POSITIVE (a needless segment read), never a false negative. The id
-    contract remains integral-or-string; this makes drift across that
-    contract fail toward extra reads instead of broken exactly-once."""
-    c = F.col(id_col)
-    if _fractional_id_col(ids, id_col):
-        c = c.cast("bigint")
-    return c.cast("string")
-
-
-def _fractional_id_col(ids: DataFrame, id_col: str) -> bool:
-    """True for the id dtypes whose canonical hash form CHANGED at
-    ``BLOOM_HASH_VERSION`` 2 — the types for which an unversioned bloom
-    cannot be probed safely (params comment at the constant)."""
-    dt = dict(ids.dtypes)[id_col]
-    return dt in ("float", "double") or dt.startswith("decimal")
-
-
-def _bloom_positions(ids: DataFrame, m: int, id_col: str, k: int) -> DataFrame:
-    """(id) → (id, word_idx, mask): each id's ``k`` bit positions in an
-    m-bit filter, as 64-bit word coordinates. The hash family is
-    xxhash64(canonical-string-id, probe-index) — deterministic across
-    partitionings and retries, so build and probe can never disagree;
-    ``_bloom_hash_input`` holds the canonicalization contract. ``k`` is
-    a PARAMETER, not the module constant (round 11, ADVICE r10 medium):
-    the probe side must generate exactly the hash count a segment was
-    BUILT with (recorded in its params) — probing old segments with a
-    changed BLOOM_K would make the all-k-bits-set check unsatisfiable
-    and silently false-negative every id."""
-    pos = F.explode(
-        F.array(
-            *[
-                F.pmod(F.xxhash64(_bloom_hash_input(ids, id_col), F.lit(h)), F.lit(m))
-                for h in range(k)
-            ]
-        )
-    ).alias("pos")
-    return ids.select(id_col, pos).select(
-        id_col,
-        F.expr("pos DIV 64").alias("word_idx"),
-        F.expr("shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))").alias("mask"),
-    )
-
-
-def _write_segment_bloom(
-    spark: SparkSession, path: str, seg: str, ids: DataFrame, n: int, id_col: str
-) -> dict:
-    """Build and write ``blooms/<seg>/`` for a membership segment of
-    ``n`` ids: (word_idx, word) rows via a bit_or fold of the ids'
-    position masks — at most m/64 ≈ n/4 rows, one slim parquet.
-    mode-overwrite so a replayed append rewrites its own sidecar
-    byte-equivalently. Returns the {m, k} params the caller's meta
-    commit records — a segment without recorded params is treated as
-    always-candidate, so a torn write before the meta commit can never
-    cause a false negative."""
-    m = int(max(1024, n * BLOOM_BITS_PER_ID))
-    (
-        _bloom_positions(ids, m, id_col, BLOOM_K)
-        .groupBy("word_idx")
-        .agg(F.expr("bit_or(mask)").alias("word"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "blooms", seg))
-    )
-    return {"m": m, "k": BLOOM_K, "h": BLOOM_HASH_VERSION}
-
-
-# --- index-level bloom (round 11, VERDICT r10 #5) -----------------------------
-#
-# One sidecar covering ALL committed ids, so the pre-check's common case
-# (a disjoint ingest batch) is ONE bloom read instead of one subtree per
-# segment. Write path is LSM-shaped so no append ever rewrites the
-# sidecar (the rewrite would be O(index/4) rows per append — the exact
-# write-amplification class this module exists to kill):
-#
-# - build / full compact write a FOLDED base (unique word_idx, bit_or'd
-#   words) into a FRESH versioned ``blooms/bloom-index-<tag>/`` dir; the
-#   meta pointer commits atomically with the segment list, so pointer
-#   and membership can never disagree (a crash leaves old-pointer +
-#   old-list — consistent; a torn new dir is an orphan no reader
-#   resolves).
-# - every append (and membership repair) APPENDS its batch's raw
-#   position rows into the SAME dir — O(|batch|·k) rows written, never a
-#   rewrite. A torn delta write (rows landed, meta commit lost) leaves
-#   EXTRA bits for ids that never committed: false positives only, the
-#   safe direction; the replay re-appends its rows (duplicates — also
-#   false-positive-only). The maintainer flock serializes all writers.
-# - the READER tolerates duplicate word_idx rows by construction
-#   (``_index_bloom_any_hit``): a probed position is set iff ANY row for
-#   its word has the bit; an id might-hit iff every DISTINCT probed
-#   position is set. A naive per-row count would let a duplicate row
-#   inflate n_set past k and flip a true hit into a false NEGATIVE —
-#   the one direction that breaks exactly-once.
-# - compaction (tiered included) runs ``_maintain_index_bloom``:
-#   saturated blooms (n past the sized capacity) REBUILD re-sized from
-#   the committed membership union — one O(membership) read, geometric
-#   cadence; oversized delta tails FOLD into a fresh base — one
-#   O(sidecar) rewrite, gated on the tail outgrowing the base. Either
-#   way amortized O(1) rows per appended id.
-#
-# An absent pointer (pre-round-11 index) just skips the gate —
-# fail-open, per-segment blooms still apply — until the next compact
-# creates one via the same maintenance hook.
-
-
-def _write_index_bloom(
-    spark: SparkSession, path: str, meta: dict, ids: DataFrame, n: int, id_col: str
-) -> None:
-    """(Re)build the index-level bloom from scratch over ``ids`` —
-    build/compact call this with the full membership; sized with
-    ``INDEX_BLOOM_HEADROOM`` so appends before the next rebuild only
-    degrade fpp, never correctness. Mutates ``meta`` (pointer + params +
-    retired old dir); the CALLER's meta commit publishes it."""
-    import uuid
-
-    m = int(max(1024, n * BLOOM_BITS_PER_ID * INDEX_BLOOM_HEADROOM))
-    new_dir = f"bloom-index-{uuid.uuid4().hex[:16]}"
-    (
-        _bloom_positions(ids, m, id_col, BLOOM_K)
-        .groupBy("word_idx")
-        .agg(F.expr("bit_or(mask)").alias("word"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "blooms", new_dir))
-    )
-    # base row count recorded at the fold point (round 12, VERDICT r11
-    # #4): the fold gate measures the delta tail as actual-rows − base,
-    # a footer-metadata count that stays exact when a torn delta append
-    # is replayed (rows land twice, the meta counter sees them once)
-    n_base = spark.read.parquet(os.path.join(path, "blooms", new_dir)).count()
-    _retire_index_bloom(meta)
-    meta["index_bloom"] = {
-        "dir": new_dir, "m": m, "k": BLOOM_K, "h": BLOOM_HASH_VERSION,
-        "n": n, "delta_rows": 0, "base_rows": n_base,
-    }
-
-
-def _update_index_bloom(
-    spark: SparkSession, path: str, meta: dict, ids: DataFrame, n_new: int, id_col: str
-) -> None:
-    """OR a batch's bits into the index-level bloom by APPENDING its raw
-    position rows — O(|batch|·k) rows written, the sidecar is never
-    rewritten on the append path (module comment has the LSM shape and
-    the torn-write safety argument). No-op when the index has no
-    pointer yet (legacy; the next compact creates one). MUST be called
-    for every id set that enters committed membership — appends AND
-    membership repairs — or the gate would false-negative those ids and
-    double-append them."""
-    ib = meta.get("index_bloom")
-    if ib is None:
-        return
-    (
-        _bloom_positions(ids, ib["m"], id_col, ib["k"])
-        .select("word_idx", F.col("mask").alias("word"))
-        .write.mode("append")
-        .parquet(os.path.join(path, "blooms", ib["dir"]))
-    )
-    ib["n"] = ib.get("n", 0) + n_new
-    ib["delta_rows"] = ib.get("delta_rows", 0) + n_new * ib["k"]
-
-
-def _index_bloom_any_hit(
-    spark: SparkSession, path: str, ib: dict, batch_ids: DataFrame, id_col: str
-) -> bool:
-    """True iff ANY batch id might be in the index per the index-level
-    bloom. Duplicate-row tolerant (module comment): per id, the DISTINCT
-    probed positions must all be set, where a position is set iff any
-    word row carries its bit — so delta duplicates can only add false
-    positives, never flip a hit into a miss."""
-    words = spark.read.parquet(os.path.join(path, "blooms", ib["dir"]))
-    pos = (
-        _bloom_positions(batch_ids, ib["m"], id_col, ib["k"])
-        .dropDuplicates([id_col, "word_idx", "mask"])
-        .localCheckpoint()  # feeds the need count + the hit join
-    )
-    need = pos.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_need"))
-    hit = (
-        F.broadcast(pos)
-        .join(words, "word_idx")
-        .where(F.expr("(word & mask) <> 0"))
-        .dropDuplicates([id_col, "word_idx", "mask"])
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_set"))
-    )
-    return bool(
-        need.join(hit, id_col)
-        .where(F.col("n_set") == F.col("n_need"))
-        .limit(1)
-        .count()
-    )
-
-
-def _maintain_index_bloom(
-    spark: SparkSession,
-    path: str,
-    meta: dict,
-    membership_ids: DataFrame,
-    id_col: str,
-) -> None:
-    """The compaction-time health step for the index-level bloom (every
-    compact calls it, tiered included — mutates ``meta``; the caller's
-    commit publishes):
-
-    - ABSENT pointer (legacy index): build one from the committed
-      membership — pre-round-11 indexes gain the gate at their first
-      compact.
-    - SATURATED (ids past the sized capacity — the gate would degrade
-      toward always-hit, safe but useless): rebuild re-sized from the
-      membership. One O(membership) read on a geometric cadence (the
-      trigger needs n to double past the 2× headroom), amortized O(1)
-      per appended id.
-    - OVERSIZED DELTA TAIL (append rows outgrew the folded base):
-      fold the dir into a fresh base — one O(sidecar) rewrite, gated on
-      tail > base so it too amortizes O(1) per appended row.
-    """
-    import uuid
-
-    ib = meta.get("index_bloom")
-    if ib is None or ib.get("n", 0) * BLOOM_BITS_PER_ID > ib["m"]:
-        n = membership_ids.count()
-        _write_index_bloom(spark, path, meta, membership_ids, n, id_col=id_col)
-        return
-    # the delta tail is MEASURED from the sidecar, not trusted from the
-    # meta counter (round 12, VERDICT r11 #4): a torn delta append whose
-    # replay was absorbed by membership (added == 0) re-appended its
-    # position rows but never re-counted them, so the counter undercounts
-    # and the fold trigger under-fires forever. actual-rows − base_rows
-    # is exact under any replay history; the count is a parquet footer
-    # metadata read, O(#files). Pre-round-12 pointers (no base_rows)
-    # fall back to the counter until their next fold records one.
-    dirp = os.path.join(path, "blooms", ib["dir"])
-    if "base_rows" in ib:
-        delta = spark.read.parquet(dirp).count() - ib["base_rows"]
-    else:
-        delta = ib.get("delta_rows", 0)
-    if delta > ib["m"] // 64:
-        old = spark.read.parquet(dirp)
-        new_dir = f"bloom-index-{uuid.uuid4().hex[:16]}"
-        (
-            old.groupBy("word_idx")
-            .agg(F.expr("bit_or(word)").alias("word"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "blooms", new_dir))
-        )
-        n_base = spark.read.parquet(
-            os.path.join(path, "blooms", new_dir)
-        ).count()
-        _retire_index_bloom(meta)
-        meta["index_bloom"] = {
-            **ib, "dir": new_dir, "delta_rows": 0, "base_rows": n_base,
-        }
-
-
-def _retire_index_bloom(meta: dict) -> None:
-    """Record the current index-bloom dir for the age-gated sweep (an
-    in-flight pre-check that resolved the old pointer keeps reading it
-    until collected — the retired-segment contract, applied to the
-    sidecar). Timestamps share ``meta['retired_ts']``."""
-    import time as _time
-
-    ib = meta.get("index_bloom")
-    if ib is None:
-        return
-    meta.setdefault("retired_blooms", []).append(ib["dir"])
-    meta.setdefault("retired_ts", {})[ib["dir"]] = _time.time()
-
-
-def _sweep_retired_blooms(
-    path: str, meta: dict, remove_retired: bool, retire_age_s: float
-) -> bool:
-    """Apply the shared ``_judge_retired`` policy to retired index-bloom
-    dirs — same gate, same override, shared by all three index families'
-    sweeps. Returns True when the meta changed."""
-    import shutil
-
-    retired = meta.get("retired_blooms", [])
-    if not retired:
-        return False
-    keep, collect, changed = _judge_retired(
-        meta.setdefault("retired_ts", {}),
-        retired,
-        lambda d: d,
-        remove_retired,
-        retire_age_s,
-    )
-    for d in collect:
-        shutil.rmtree(os.path.join(path, "blooms", d), ignore_errors=True)
-    meta["retired_blooms"] = keep
-    return changed
-
-
-def _bloom_candidate_segments(
-    spark: SparkSession,
-    path: str,
-    segs: list,
-    params: dict,
-    batch_ids: DataFrame,
-    id_col: str,
-    index_bloom: dict | None = None,
-) -> list:
-    """The sublist of committed membership segments that MIGHT contain
-    any of ``batch_ids`` — the segments the anti-join must read.
-    Segments without recorded bloom params (legacy, or params lost) are
-    candidates unconditionally.
-
-    Three tiers, each fail-open so exactly-once never rests on this:
-    1. BUDGET (round 11, ADVICE r10 medium): the pre-check broadcasts
-       the batch's position frame, so a batch over
-       ``BLOOM_PRECHECK_ROW_BUDGET`` ids skips the pre-check entirely —
-       all segments candidate; the anti-join is then cheap relative to
-       the batch. One limit-bounded count, never a full count.
-    2. INDEX-LEVEL gate (round 11, VERDICT r10 #5): when the meta
-       carries an ``index_bloom`` pointer, the batch probes that ONE
-       sidecar first — a batch disjoint from the whole index (the
-       common ingest case) resolves in one read, O(1) frames however
-       many segments exist.
-    3. PER-SEGMENT: one Spark action for all bloomed segments: per
-       segment, the batch's positions (|batch|·k rows, broadcast) join
-       the segment's word table on word_idx — an id is a might-hit iff
-       all k of its probed bits are set (an absent word row is an
-       all-zero word, so the inner join dropping it is the unset case);
-       the per-segment frames union and collect at most one row per
-       segment. Positions are generated with the SEGMENT'S recorded
-       (m, k) — probing with the current module constants would
-       silently false-negative every segment built under older ones
-       (round 11, ADVICE r10 medium).
-
-    HASH-VERSION GUARD (round 12, ADVICE r11 low): for fractional /
-    decimal id columns the canonical hash form changed at
-    ``BLOOM_HASH_VERSION`` 2 (bigint truncation — '5' vs the raw-string
-    '5.0' an unversioned bloom was built from), so probing an
-    unversioned bloom with the new form is a silent false negative = a
-    double-append. Blooms whose params lack the current version are
-    therefore treated exactly like params-less segments — candidates
-    unconditionally — and an unversioned index-level pointer skips the
-    whole-index gate; integral/string id columns (the documented
-    contract) hash identically under both versions and probe every
-    bloom as before."""
-    if _fractional_id_col(batch_ids, id_col):
-        params = {
-            s: p
-            for s, p in params.items()
-            if p.get("h", 1) >= BLOOM_HASH_VERSION
-        }
-        if index_bloom is not None and (
-            index_bloom.get("h", 1) < BLOOM_HASH_VERSION
-        ):
-            index_bloom = None
-    bloomed = [s for s in segs if s in params]
-    if not bloomed and index_bloom is None:
-        return list(segs)
-    over_budget = (
-        batch_ids.limit(BLOOM_PRECHECK_ROW_BUDGET + 1).count()
-        > BLOOM_PRECHECK_ROW_BUDGET
-    )
-    if over_budget:
-        return list(segs)
-    if index_bloom is not None:
-        if not _index_bloom_any_hit(spark, path, index_bloom, batch_ids, id_col):
-            # the gate may only prune segments WITH recorded params —
-            # params-less segments stay unconditional candidates even on
-            # a whole-index miss (their ids' presence in the index bloom
-            # is exactly what "params lost/legacy" casts doubt on)
-            return [s for s in segs if s not in params]
-    if not bloomed:
-        return list(segs)
-    hits = None
-    for s in bloomed:
-        words = spark.read.parquet(os.path.join(path, "blooms", s))
-        hit = (
-            F.broadcast(
-                _bloom_positions(batch_ids, params[s]["m"], id_col, params[s]["k"])
-            )
-            .join(words, "word_idx")
-            .where(F.expr("(word & mask) <> 0"))
-            .groupBy(id_col)
-            .agg(F.count("*").alias("n_set"))
-            .where(F.col("n_set") == params[s]["k"])
-            .select(F.lit(s).alias("seg"))
-            .limit(1)
-        )
-        hits = hit if hits is None else hits.unionAll(hit)
-    found = {r["seg"] for r in hits.collect()}
-    return [s for s in segs if s not in params or s in found]
 
 
 def build_shingle_index(
@@ -612,46 +137,30 @@ def build_shingle_index(
     over the source (digests write + count previously re-scanned).
     The collapse keeps the MIN text per id — dropDuplicates keeps a
     shuffle-order-arbitrary row, so two builds over identical input
-    could index different payloads (round-10 review catch)."""
-    docs = (
-        docs.select("doc_id", "text")
-        .groupBy("doc_id")
-        .agg(F.min("text").alias("text"))
-        .localCheckpoint()
-    )
+    could index different payloads (round-10 review catch). The writes
+    and the commit run under the maintainer flock, so a rebuild cannot
+    interleave with an append and commit next to its stale segment
+    list."""
+    docs = _min_collapse(docs.select("doc_id", "text"), "doc_id", "text")
     sh = _hashed_shingles(docs).localCheckpoint()  # feeds df agg + anti-join
     df_counts = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     stop = df_counts.filter(F.col("df") > df_cap).select("sh")
-    os.makedirs(path, exist_ok=True)
-    # mode-overwrite throughout: a torn BUILD (crash before the meta
-    # commit) must be retryable over the same path, same as appends
-    stop.write.mode("overwrite").parquet(os.path.join(path, "stop"))
-    stop_disk = spark.read.parquet(os.path.join(path, "stop"))
-    seg = "seg-build"
-    kept = sh.join(stop_disk, "sh", "left_anti")
-    kept.write.mode("overwrite").parquet(os.path.join(path, "shingles", seg))
-    kept_disk = spark.read.parquet(os.path.join(path, "shingles", seg))
-    kept_disk.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    ).write.mode("overwrite").parquet(os.path.join(path, "counts", seg))
-    docs.select("doc_id", F.md5("text").alias("text_md5")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "digests", seg))
-    n = docs.count()
-    bloom = _write_segment_bloom(
-        spark, path, seg, docs.select("doc_id"), n, id_col="doc_id"
-    )
-    meta = {
-        "shingle_width": SHINGLE_WIDTH,
-        "df_cap": df_cap,
-        "n_docs": n,
-        "segments": [seg],
-        "segment_rows": {seg: n},  # feeds the tiered fold pick
-        "bloom_params": {seg: bloom},
-    }
-    _write_index_bloom(spark, path, meta, docs.select("doc_id"), n, id_col="doc_id")
-    _write_meta(path, meta)
-    return meta
+    with _maintainer_locked(path):
+        stop.write.mode("overwrite").parquet(os.path.join(path, "stop"))
+        stop_disk = spark.read.parquet(os.path.join(path, "stop"))
+        kept = sh.join(stop_disk, "sh", "left_anti")
+        kept.write.mode("overwrite").parquet(os.path.join(path, "shingles", BUILD_SEG))
+        kept_disk = spark.read.parquet(os.path.join(path, "shingles", BUILD_SEG))
+        kept_disk.groupBy("doc_id").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n")
+        ).write.mode("overwrite").parquet(os.path.join(path, "counts", BUILD_SEG))
+        docs.select("doc_id", F.md5("text").alias("text_md5")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(path, "digests", BUILD_SEG))
+        meta = {"shingle_width": SHINGLE_WIDTH, "df_cap": df_cap}
+        return _seal_build(
+            spark, path, _LAYOUT, meta, docs.select("doc_id"), docs.count()
+        )
 
 
 def append_shingle_index(
@@ -691,86 +200,30 @@ def append_shingle_index(
     Filesystem contract: POSIX/HDFS atomic same-dir rename for the
     meta file (stated in ``_durable``); object stores need the usual
     manifest service."""
-    with _maintainer_locked(path):
-        result = _append_shingle_locked(spark, path, docs, batch_id)
-    if max_segments is not None and result.pop("_n_segments", 0) > max_segments:
-        result["auto_compact"] = compact_shingle_index(
-            spark, path, max_segments=max_segments
-        )
-    else:
-        result.pop("_n_segments", None)
-    return result
-
-
-def _append_shingle_locked(
-    spark: SparkSession, path: str, docs: DataFrame, batch_id
-) -> dict:
-    meta = read_shingle_meta(path)
-    if batch_id is not None and batch_id in meta.get("applied_batches", []):
-        return {
-            "appended": 0,
-            "n_docs": meta["n_docs"],
-            "reason": "already_applied",
-        }
-    stop = spark.read.parquet(os.path.join(path, "stop"))
-    # intra-batch duplicate ids collapse DETERMINISTICALLY (round 11,
-    # VERDICT r10 #3 — parity with the build path): dropDuplicates keeps
-    # a shuffle-order-arbitrary row, so a torn first delivery and its
-    # retry could index DIFFERENT payloads for the same id; min-text is
-    # the same single shuffle with a pinned winner
-    docs = (
-        docs.select("doc_id", "text")
-        .groupBy("doc_id")
-        .agg(F.min("text").alias("text"))
-        .localCheckpoint()
-    )
-    # bloom pre-check (round 10, shared with the sibling indexes): only
-    # segments that MIGHT contain a batch doc_id feed the anti-join — a
-    # disjoint batch (the common ingest case) skips the membership read
-    # and its shuffle; fail-open, so exactly-once is untouched
-    cand_segs = _bloom_candidate_segments(
-        spark,
+    return _append_maintained(
         path,
-        meta["segments"],
-        meta.get("bloom_params", {}),
-        docs.select("doc_id"),
-        id_col="doc_id",
-        index_bloom=meta.get("index_bloom"),
+        lambda: _append_locked(
+            spark, path, _LAYOUT, docs.select("doc_id", "text"), "text", batch_id,
+            ["doc_id", F.md5("text").alias("text_md5")],
+            _write_shingles,
+            prepare=lambda meta: spark.read.parquet(os.path.join(path, "stop")),
+        ),
+        lambda: compact_shingle_index(spark, path, max_segments=max_segments),
+        max_segments,
     )
-    if cand_segs:
-        existing = spark.read.parquet(
-            *[os.path.join(path, "digests", s) for s in cand_segs]
-        ).select("doc_id")
-        docs = docs.join(existing, "doc_id", "left_anti").localCheckpoint()
-    added = docs.count()
-    seg = _segment_tag(batch_id)
-    if added:
-        sh = _hashed_shingles(docs).localCheckpoint()  # feeds kept + counts
-        kept = sh.join(stop, "sh", "left_anti").localCheckpoint()
-        kept.write.mode("overwrite").parquet(os.path.join(path, "shingles", seg))
-        kept.groupBy("doc_id").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n")
-        ).write.mode("overwrite").parquet(os.path.join(path, "counts", seg))
-        docs.select("doc_id", F.md5("text").alias("text_md5")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(path, "digests", seg))
-        meta.setdefault("bloom_params", {})[seg] = _write_segment_bloom(
-            spark, path, seg, docs.select("doc_id"), added, id_col="doc_id"
-        )
-        _update_index_bloom(
-            spark, path, meta, docs.select("doc_id"), added, id_col="doc_id"
-        )
-        meta["segments"] = meta["segments"] + [seg]
-        meta.setdefault("segment_rows", {})[seg] = added
-    meta["n_docs"] += added
-    if batch_id is not None:
-        meta.setdefault("applied_batches", []).append(batch_id)
-    _write_meta(path, meta)
-    return {
-        "appended": added,
-        "n_docs": meta["n_docs"],
-        "_n_segments": len(meta["segments"]),
-    }
+
+
+def _write_shingles(
+    spark: SparkSession, path: str, meta: dict, docs: DataFrame, seg: str, stop: DataFrame
+) -> None:
+    """An append's shingles + counts segments, tokenized against the
+    PINNED build-time stop list (``stop``, read before the batch)."""
+    sh = _hashed_shingles(docs).localCheckpoint()  # feeds kept + counts
+    kept = sh.join(stop, "sh", "left_anti").localCheckpoint()
+    kept.write.mode("overwrite").parquet(os.path.join(path, "shingles", seg))
+    kept.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    ).write.mode("overwrite").parquet(os.path.join(path, "counts", seg))
 
 
 def probe_shingle_index(
@@ -869,301 +322,6 @@ def probe_shingle_index(
     )
 
 
-def _judge_retired(
-    ts: dict, entries: list, key_of, remove_retired: bool, retire_age_s: float
-) -> tuple[list, list, bool]:
-    """The ONE age-gate policy for retired index artifacts (round 10,
-    VERDICT r9 minor — the honor-system "only when no probe is in
-    flight" contract made safe-by-default): an in-flight probe resolved
-    its artifact list from a meta younger than its own runtime, so an
-    age gate well above the longest probe bounds the race the explicit
-    flag used to leave to the caller (the quiesce-marker age-sweep
-    precedent); ``remove_retired=True`` stays the immediate override.
-    Unstamped (pre-round-10) entries are stamped NOW — never swept
-    early. Shared by this module / ``minhashindex`` (via
-    ``_compact_segments``) AND ``annindex`` so the policy cannot drift
-    between index families; only the DELETION path shapes stay with
-    each caller (per-kind segment dirs here, whole vectors trees and
-    ids segments there). Returns (keep, collect, meta_changed)."""
-    import time as _time
-
-    now = _time.time()
-    keep: list = []
-    collect: list = []
-    changed = False
-    for name in entries:
-        k = key_of(name)
-        if k not in ts:
-            ts[k] = now
-            changed = True
-        if remove_retired or (now - ts[k]) > retire_age_s:
-            collect.append(name)
-            ts.pop(k, None)
-            changed = True
-        else:
-            keep.append(name)
-    return keep, collect, changed
-
-
-def _sweep_retired_segments(
-    path: str, kinds: tuple, meta: dict, remove_retired: bool, retire_age_s: float
-) -> bool:
-    """Apply ``_judge_retired`` to a segment index's retired dirs —
-    each collected segment is removed under every kind. Returns True
-    when the meta changed and needs a commit."""
-    import shutil
-
-    retired = meta.get("retired", [])
-    if not retired:
-        return False
-    keep, collect, changed = _judge_retired(
-        meta.setdefault("retired_ts", {}),
-        retired,
-        lambda s: s,
-        remove_retired,
-        retire_age_s,
-    )
-    for seg in collect:
-        for kind in kinds:
-            shutil.rmtree(os.path.join(path, kind, seg), ignore_errors=True)
-        # the segment's bloom sidecar retires with it (absent for
-        # pre-round-10 segments — ignore_errors covers that)
-        shutil.rmtree(os.path.join(path, "blooms", seg), ignore_errors=True)
-    meta["retired"] = keep
-    return changed
-
-
-def _sweep_orphan_dirs(path: str, kinds: tuple, meta: dict, retire_age_s: float) -> int:
-    """Age-gated sweep of ORPHAN artifact dirs — segment dirs no meta
-    commit references (round 12): a crashed ledger-less append, an
-    abandoned retry, or a torn compact/index-bloom write leaves
-    uniquely-named dirs that are invisible to every reader but were
-    previously never deleted — the unbounded-growth class (VERDICT r11
-    #1's theme) surviving as a disk leak. Orphan = a child of a kind
-    dir (or ``blooms/``) that is neither committed nor retired; swept
-    only once older than ``retire_age_s`` (same gate as retired dirs),
-    and only under the maintainer flock (every caller holds it), so a
-    LIVE append's pre-commit dirs can never race it — the only fresh
-    unreferenced dirs belong to the lock holder, which is us, and we
-    create none. A swept torn batch loses nothing: its at-least-once
-    re-delivery rewrites its own segment dirs from the batch source
-    before committing. Purely filesystem — never touches the meta.
-    Returns the number of dirs removed."""
-    import shutil
-    import time as _time
-
-    now = _time.time()
-    committed = set(meta["segments"]) | set(meta.get("retired", []))
-    bloom_refs = (
-        committed
-        | set(meta.get("bloom_params", {}))
-        | set(meta.get("retired_blooms", []))
-    )
-    ib = meta.get("index_bloom")
-    if ib is not None:
-        bloom_refs.add(ib["dir"])
-    removed = 0
-    for kind, refs in [(k, committed) for k in kinds] + [("blooms", bloom_refs)]:
-        base = os.path.join(path, kind)
-        try:
-            children = os.listdir(base)
-        except FileNotFoundError:
-            continue
-        for child in children:
-            if child.startswith((".", "_")) or child in refs:
-                continue
-            p = os.path.join(base, child)
-            try:
-                if (now - os.stat(p).st_mtime) <= retire_age_s:
-                    continue
-            except OSError:
-                continue
-            shutil.rmtree(p, ignore_errors=True)
-            removed += 1
-    return removed
-
-
-def _tiered_fold_pick(segs: list, sizes: dict, max_segments: int) -> list:
-    """SIZE-TIERED fold selection (round 11): which segments to merge
-    when the committed count exceeds ``max_segments``. Folding ALL
-    segments every trigger costs O(index) per fold — amortized
-    O(index/max_segments) per append, which GROWS with the index
-    forever. Folding the smallest half instead (the LSM/logarithmic-
-    method shape) re-folds a document only when its segment is again
-    among the smallest — under steady ingest, segment sizes stratify
-    geometrically and each document participates in O(log #batches)
-    folds total, so per-append amortized cost is O(batch · log), index-
-    size-independent. The pick takes enough smallest segments to land
-    back under the bound (``len - k + 1 ≤ max_segments``) and at least
-    half, so repeated triggers cannot thrash on two tiny segments while
-    a long tail accretes. Unknown sizes (legacy metas without
-    ``segment_rows``) sort first — folded early, measured from then on;
-    ties break on the segment name so the pick is deterministic."""
-    import math
-
-    if len(segs) <= max_segments:
-        return []
-    k = max(2, len(segs) - max_segments + 1, math.ceil(len(segs) / 2))
-    return sorted(segs, key=lambda s: (sizes.get(s, 0), s))[:k]
-
-
-def _compact_segments(
-    spark: SparkSession,
-    path: str,
-    kinds: tuple,
-    read_meta,
-    write_meta,
-    remove_retired: bool = False,
-    retire_age_s: float = 3600.0,
-    membership_kind: str | None = None,
-    membership_id_col: str = "doc_id",
-    max_segments: int | None = None,
-) -> dict:
-    """Shared compaction engine for the segment-committed indexes (this
-    module and ``minhashindex`` — one protocol, one implementation, so
-    a fix here cannot drift between them): merge committed segments
-    into ONE new segment per kind and commit it with the same atomic
-    meta rename. Correct as a pure union rewrite because per-doc frames
-    are disjoint across segments (the append anti-join's guarantee).
-
-    ``max_segments=None`` (manual compaction) folds EVERYTHING — one
-    segment per kind, full defrag. With ``max_segments`` set (the
-    auto-trigger's path), the fold is SIZE-TIERED
-    (``_tiered_fold_pick``): only the smallest segments merge, large
-    settled segments are never rewritten, and per-append amortized cost
-    stays O(batch · log) instead of O(index/max_segments). A tiered
-    fold does not change the committed id SET, so the index-level bloom
-    pointer is untouched (it rebuilds re-sized only on full folds).
-
-    Readers that resolved the OLD meta keep reading the old dirs, which
-    stay on disk after the commit; they are recorded under
-    ``meta["retired"]`` for the sweep: ``remove_retired=True`` deletes
-    everything recorded NOW (the caller asserts no probe is in flight),
-    and by default dirs retired longer than ``retire_age_s`` are
-    collected on every compact call (``_sweep_retired_segments`` — the
-    age gate makes the sweep safe-by-default against in-flight probes).
-    The ``applied_batches`` ledger is TRUNCATED at
-    compaction — on EVERY fold, tiered included (round 12, VERDICT r11
-    #1: the auto-trigger's tiered fold is essentially never full, so an
-    only-on-full-folds truncation left the ledger growing one id per
-    micro-batch FOREVER on exactly the continuous-ingest paths the
-    bound exists for — O(#batches) meta rewritten per append plus an
-    O(#batches) list scan per ledger check). Truncation is safe
-    independent of fold type: the committed-membership anti-join fully
-    covers a replay of any ledgered batch (its docs are already in the
-    index → added = 0), so the per-batch ids are dead weight the moment
-    a fold proves the index is under maintenance — without this the
-    manifest grows one id per micro-batch forever and every append
-    rewrites it. The single-writer
-    contract is ENFORCED by the maintainer flock (round 11, VERDICT r10
-    #4): compact and append serialize on ``_maintainer.guard``, so a
-    compact can no longer lose an append's meta commit (or vice
-    versa)."""
-    import time as _time
-    import uuid
-
-    with _maintainer_locked(path):
-        meta = read_meta(path)
-        segs = meta["segments"]
-        if max_segments is None:
-            fold = list(segs) if len(segs) > 1 else []
-        else:
-            fold = _tiered_fold_pick(segs, meta.get("segment_rows", {}), max_segments)
-        if len(fold) < 2:
-            # still honor the sweeps — an already-compact index can carry
-            # retired dirs from an earlier fold (annindex precedent) and
-            # orphan dirs from crashed maintainers (round 12)
-            changed = _sweep_retired_segments(
-                path, kinds, meta, remove_retired, retire_age_s
-            )
-            changed = (
-                _sweep_retired_blooms(path, meta, remove_retired, retire_age_s)
-                or changed
-            )
-            _sweep_orphan_dirs(path, kinds, meta, retire_age_s)
-            if changed:
-                write_meta(path, meta)
-            return {"compacted": 0, "segments": len(segs)}
-        full = len(fold) == len(segs)
-        new_seg = f"seg-compact-{uuid.uuid4().hex[:16]}"
-        for kind in kinds:
-            spark.read.parquet(
-                *[os.path.join(path, kind, s) for s in fold]
-            ).write.mode("overwrite").parquet(os.path.join(path, kind, new_seg))
-        retired = list(fold)
-        now = _time.time()
-        meta["segments"] = [s for s in segs if s not in fold] + [new_seg]
-        rows = meta.setdefault("segment_rows", {})
-        if membership_kind is not None:
-            # blooms don't fold by union (each segment has its own m) — one
-            # fresh sidecar recomputes from the folded membership dir just
-            # written (single source of truth) and commits with the same
-            # meta write below; retired segments' params drop now, their
-            # dirs linger for in-flight readers until the sweep. The
-            # INDEX-LEVEL bloom rebuilds only on a FULL fold (round 11) —
-            # re-sized from the folded count with headroom so append-time
-            # fpp drift resets; a tiered fold leaves the committed id set
-            # (hence the pointer) untouched.
-            folded_ids = spark.read.parquet(
-                os.path.join(path, membership_kind, new_seg)
-            ).select(membership_id_col)
-            n_folded = folded_ids.count()
-            bp = meta.setdefault("bloom_params", {})
-            for s in retired:
-                bp.pop(s, None)
-            bp[new_seg] = _write_segment_bloom(
-                spark,
-                path,
-                new_seg,
-                folded_ids,
-                n_folded,
-                id_col=membership_id_col,
-            )
-            if full:
-                _write_index_bloom(
-                    spark, path, meta, folded_ids, n_folded,
-                    id_col=membership_id_col,
-                )
-            else:
-                # tiered fold: the id set is unchanged, but this is the
-                # bloom's maintenance point — legacy indexes gain a
-                # pointer, saturated blooms rebuild re-sized from the
-                # (post-fold) membership union, oversized delta tails
-                # fold into a fresh base (_maintain_index_bloom)
-                all_member = spark.read.parquet(
-                    *[
-                        os.path.join(path, membership_kind, s)
-                        for s in meta["segments"]
-                    ]
-                ).select(membership_id_col)
-                _maintain_index_bloom(
-                    spark, path, meta, all_member, id_col=membership_id_col
-                )
-        else:
-            n_folded = sum(rows.get(s, 0) for s in fold)
-        for s in retired:
-            rows.pop(s, None)
-        rows[new_seg] = n_folded
-        meta["retired"] = meta.get("retired", []) + retired
-        meta.setdefault("retired_ts", {}).update({seg: now for seg in retired})
-        # ledger truncation on ANY fold, tiered included (round 12,
-        # VERDICT r11 #1) — the membership anti-join's replay coverage
-        # is fold-type-independent; docstring has the growth argument
-        meta["applied_batches"] = []
-        write_meta(path, meta)
-        changed = _sweep_retired_segments(
-            path, kinds, meta, remove_retired, retire_age_s
-        )
-        changed = (
-            _sweep_retired_blooms(path, meta, remove_retired, retire_age_s)
-            or changed
-        )
-        _sweep_orphan_dirs(path, kinds, meta, retire_age_s)
-        if changed:
-            write_meta(path, meta)
-        return {"compacted": len(retired), "segments": len(meta["segments"])}
-
-
 def compact_shingle_index(
     spark: SparkSession,
     path: str,
@@ -1180,17 +338,9 @@ def compact_shingle_index(
     SIZE-TIERED fold (smallest segments only — large settled segments
     are never rewritten, amortized O(batch · log) per append).
     Semantics, retired-dir retention, ledger truncation, and the
-    enforced single-writer contract: ``_compact_segments``."""
+    enforced single-writer contract: ``_segments._compact_segments``."""
     return _compact_segments(
-        spark,
-        path,
-        ("shingles", "counts", "digests"),
-        read_shingle_meta,
-        _write_meta,
-        remove_retired,
-        retire_age_s,
-        membership_kind="digests",
-        max_segments=max_segments,
+        spark, path, _LAYOUT, remove_retired, retire_age_s, max_segments
     )
 
 

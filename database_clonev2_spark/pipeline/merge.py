@@ -37,6 +37,7 @@ import json
 import os
 import shutil
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,6 +49,7 @@ from .._durable import (
     applied_batches,
     epoch_dir_name,
     epoch_sort_key,
+    flock_guard,
     write_json_atomic,
 )
 
@@ -737,40 +739,6 @@ def _acquire_recovery_lock(lock: str, only_if_stale: bool):
         _time.sleep(0.1)
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _flock_guard(guard_path: str):
-    """Best-effort exclusive flock on a never-unlinked sidecar guard
-    file — the ONE implementation of the open/flock-or-degrade/close
-    pattern shared by the recovery-lock release and the quiesce fence
-    (round-10 review catch: three hand-rolled copies of the
-    degrade-on-flockless-FS policy). Yields ``'locked'`` (critical
-    section held), ``'nolock'`` (filesystem without advisory locks —
-    proceed best-effort, the callers' documented degraded contract), or
-    ``'noopen'`` (guard unreachable — callers choose walk-away vs
-    proceed). ``_acquire_recovery_lock`` keeps its own inline guard: its
-    degrade semantics differ per caller role (readers skip, writers
-    refuse loudly)."""
-    import fcntl
-
-    try:
-        fd = os.open(guard_path, os.O_CREAT | os.O_RDWR)
-    except OSError:
-        yield "noopen"
-        return
-    try:
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-        except OSError:
-            yield "nolock"
-            return
-        yield "locked"
-    finally:
-        os.close(fd)
-
-
 def _release_recovery_lock(lock: str, fd: int, token: str) -> None:
     """Release the lock ONLY if we still own it (the body carries our
     token). After a backstop reclaim, the dethroned holder's release
@@ -789,7 +757,7 @@ def _release_recovery_lock(lock: str, fd: int, token: str) -> None:
     refuse — so no concurrent recoverer exists to race); an unreachable
     guard walks away and leaves the lock to abandonment."""
     os.close(fd)
-    with _flock_guard(lock + _GUARD_SUFFIX) as g:
+    with flock_guard(lock + _GUARD_SUFFIX) as g:
         if g == "noopen":
             return  # cannot reach the guard: leave the lock to abandonment
         try:
@@ -1776,12 +1744,12 @@ def _quiesce_fenced(target_path: str):
     is already visible to the snapshot's in-flight check. The fence is
     held around one json write / one stat — never across swaps, so no
     writer ever blocks mid-commit. Degrades (unreachable guard or a
-    flock-less filesystem, via ``_flock_guard``) to the pre-fence
+    flock-less filesystem, via ``_durable.flock_guard``) to the pre-fence
     best-effort contract: the capture-window validation stays the
     correctness arbiter for materialized snapshots; lazy snapshots
     there keep the documented single-coordinator caveat. Like the
     recovery-lock guard, the fence file is never unlinked."""
-    with _flock_guard(os.path.join(target_path, _QUIESCE_FENCE_FILE)):
+    with flock_guard(os.path.join(target_path, _QUIESCE_FENCE_FILE)):
         yield
 
 

@@ -15,6 +15,7 @@ import pytest
 pytestmark = pytest.mark.slowops
 from pyspark.sql import functions as F
 
+from database_clonev2_spark.extensions import _segments as store
 from database_clonev2_spark.extensions import minhashindex as mi
 
 
@@ -90,7 +91,7 @@ class TestMinhashIndex:
         meta = mi.read_minhash_meta(path)
         assert meta["n_docs"] == 4
         n_rows = (
-            mi._read_kind(spark, path, "bands", meta)
+            store._read_kind(spark, path, "bands", meta)
             .where(F.col("doc_id") == 4)
             .count()
         )
@@ -122,7 +123,7 @@ class TestMinhashIndex:
 
         # torn segment exists on disk but no reader resolves it
         assert os.path.exists(
-            os.path.join(path, "bands", mi._segment_tag("torn"))
+            os.path.join(path, "bands", store._segment_tag("torn"))
         )
         assert mi.read_minhash_meta(path)["n_docs"] == 3
         probe = mi.probe_minhash_index(
@@ -138,7 +139,7 @@ class TestMinhashIndex:
         meta = mi.read_minhash_meta(path)
         assert meta["n_docs"] == 4
         n_rows = (
-            mi._read_kind(spark, path, "bands", meta)
+            store._read_kind(spark, path, "bands", meta)
             .where(F.col("doc_id") == 4)
             .count()
         )

@@ -28,6 +28,7 @@ import pytest
 pytestmark = pytest.mark.slowops
 from pyspark.sql import functions as F
 
+from database_clonev2_spark.extensions import _segments as store
 from database_clonev2_spark.extensions import annindex as ai
 from database_clonev2_spark.io import load
 
@@ -271,8 +272,8 @@ class TestSegmentIndexBuildHardening:
         rows while its count row still said n — corrupting every later
         Jaccard denominator against it (the exact class the append path
         was hardened against in r9)."""
+        from database_clonev2_spark.extensions._segments import _read_kind
         from database_clonev2_spark.extensions.shingleindex import (
-            _read_kind,
             build_shingle_index,
             probe_shingle_index,
             read_shingle_meta,
@@ -308,7 +309,7 @@ class TestSegmentIndexBuildHardening:
             build_minhash_index,
             read_minhash_meta,
         )
-        from database_clonev2_spark.extensions.shingleindex import _read_kind
+        from database_clonev2_spark.extensions._segments import _read_kind
 
         idx = str(tmp_path / "idx")
         d = _docs(spark, _CORPUS)
@@ -324,8 +325,8 @@ class TestSegmentIndexBuildHardening:
         """The r9 honor-system contract made safe-by-default: fresh
         retirement survives (an in-flight probe over the OLD meta still
         reads), aged retirement is collected without the flag."""
+        from database_clonev2_spark.extensions._segments import _read_kind
         from database_clonev2_spark.extensions.shingleindex import (
-            _read_kind,
             append_shingle_index,
             build_shingle_index,
             compact_shingle_index,
@@ -852,7 +853,7 @@ class TestSegmentIndexBloomSidecar:
         meta = si.read_shingle_meta(path)
         new = _docs(spark, [(10, "entirely new content never indexed yet")])
         assert (
-            si._bloom_candidate_segments(
+            store._bloom_candidate_segments(
                 spark, path, meta["segments"], meta["bloom_params"],
                 new.select("doc_id"), id_col="doc_id",
             )
@@ -891,7 +892,7 @@ class TestSegmentIndexBloomSidecar:
         mi.build_minhash_index(spark, _docs(spark, _CORPUS), path)
         meta = mi.read_minhash_meta(path)
         new = _docs(spark, [(10, "entirely new content never signed yet")])
-        from database_clonev2_spark.extensions.shingleindex import (
+        from database_clonev2_spark.extensions._segments import (
             _bloom_candidate_segments,
         )
 
@@ -937,7 +938,7 @@ class TestSegmentIndexBloomSidecar:
         narrow = spark.createDataFrame(
             [(1, _CORPUS[0][1])], "doc_id int, text string"
         )
-        assert si._bloom_candidate_segments(
+        assert store._bloom_candidate_segments(
             spark, path, meta["segments"], meta["bloom_params"],
             narrow.select("doc_id"), id_col="doc_id",
         ) == ["seg-build"]

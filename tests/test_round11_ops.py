@@ -33,6 +33,7 @@ import pytest
 pytestmark = pytest.mark.slowops
 from pyspark.sql import functions as F
 
+from database_clonev2_spark.extensions import _segments as store
 from database_clonev2_spark.extensions import annindex as ai
 from database_clonev2_spark.extensions import minhashindex as mi
 from database_clonev2_spark.extensions import shingleindex as si
@@ -295,7 +296,7 @@ class TestMaintainerFlock:
         assert meta["n_docs"] == 35
         committed = {
             r["doc_id"]
-            for r in si._read_kind(spark, path, "digests", meta).collect()
+            for r in store._read_kind(spark, path, "digests", meta).collect()
         }
         assert committed == set(range(35)), sorted(set(range(35)) - committed)
         # every committed segment resolves under every kind (no torn meta)
@@ -371,7 +372,7 @@ class TestAppendDeterministicCollapse:
         si.append_shingle_index(spark, path, dup)
         meta = si.read_shingle_meta(path)
         row = (
-            si._read_kind(spark, path, "digests", meta)
+            store._read_kind(spark, path, "digests", meta)
             .filter("doc_id = 99")
             .collect()
         )
@@ -416,9 +417,9 @@ class TestBloomHardening:
         double-append)."""
         path = str(tmp_path / "idx")
         si.build_shingle_index(spark, _docs(spark, 0, 10), path)
-        monkeypatch.setattr(si, "BLOOM_K", 3)
+        monkeypatch.setattr(store, "BLOOM_K", 3)
         meta = si.read_shingle_meta(path)
-        cand = si._bloom_candidate_segments(
+        cand = store._bloom_candidate_segments(
             spark,
             path,
             meta["segments"],
@@ -436,9 +437,9 @@ class TestBloomHardening:
         broadcast."""
         path = str(tmp_path / "idx")
         si.build_shingle_index(spark, _docs(spark, 0, 10), path)
-        monkeypatch.setattr(si, "BLOOM_PRECHECK_ROW_BUDGET", 3)
+        monkeypatch.setattr(store, "BLOOM_PRECHECK_ROW_BUDGET", 3)
         meta = si.read_shingle_meta(path)
-        cand = si._bloom_candidate_segments(
+        cand = store._bloom_candidate_segments(
             spark,
             path,
             meta["segments"],
@@ -458,7 +459,7 @@ class TestBloomHardening:
         si.build_shingle_index(spark, _docs(spark, 0, 10), path)
         meta = si.read_shingle_meta(path)
         dbl = spark.createDataFrame([(5.0,)], "doc_id double")
-        cand = si._bloom_candidate_segments(
+        cand = store._bloom_candidate_segments(
             spark,
             path,
             meta["segments"],
@@ -496,7 +497,7 @@ class TestBloomHardening:
             return real(reader, *paths, **kw)
 
         monkeypatch.setattr(DataFrameReader, "parquet", spy)
-        cand = si._bloom_candidate_segments(
+        cand = store._bloom_candidate_segments(
             spark,
             path,
             meta["segments"],
@@ -533,18 +534,18 @@ class TestBloomHardening:
         assert ib["delta_rows"] == 15 * si.BLOOM_K and ib["n"] == 25
         assert len(os.listdir(os.path.join(path, "blooms", ib["dir"]))) > files0
         # an id from the LAST append (bits only in delta rows) must hit
-        cand = si._bloom_candidate_segments(
+        cand = store._bloom_candidate_segments(
             spark, path, meta["segments"], meta["bloom_params"],
             _docs(spark, 24, 25).select("doc_id"), id_col="doc_id",
             index_bloom=ib,
         )
         assert cand, "delta-row bits were invisible to the gate"
         # duplicate deltas: simulate a replayed torn attempt's rows
-        si._update_index_bloom(
+        store._update_index_bloom(
             spark, path, meta, _docs(spark, 24, 25).select("doc_id"), 0,
             id_col="doc_id",
         )
-        still = si._bloom_candidate_segments(
+        still = store._bloom_candidate_segments(
             spark, path, meta["segments"], meta["bloom_params"],
             _docs(spark, 24, 25).select("doc_id"), id_col="doc_id",
             index_bloom=meta["index_bloom"],
@@ -569,13 +570,13 @@ class TestBloomHardening:
             )
         meta = si.read_shingle_meta(path)
         assert "index_bloom" in meta, "maintenance never rebuilt the pointer"
-        cand = si._bloom_candidate_segments(
+        cand = store._bloom_candidate_segments(
             spark, path, meta["segments"], meta["bloom_params"],
             _docs(spark, 12, 13).select("doc_id"), id_col="doc_id",
             index_bloom=meta["index_bloom"],
         )
         assert cand, "rebuilt pointer misses an id appended while absent"
-        assert si._bloom_candidate_segments(
+        assert store._bloom_candidate_segments(
             spark, path, meta["segments"], meta["bloom_params"],
             _docs(spark, 900, 901).select("doc_id"), id_col="doc_id",
             index_bloom=meta["index_bloom"],

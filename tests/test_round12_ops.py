@@ -37,6 +37,7 @@ import pytest
 pytestmark = pytest.mark.slowops
 from pyspark.sql import functions as F
 
+from database_clonev2_spark.extensions import _segments as store
 from database_clonev2_spark.extensions import annindex as ai
 from database_clonev2_spark.extensions import minhashindex as mi
 from database_clonev2_spark.extensions import shingleindex as si
@@ -302,11 +303,11 @@ class TestIndexBloomDeltaMeasured:
         # not (scratch meta copy discarded) — enough to cross m//64
         ids = _docs(spark, 500, 560).select("doc_id")
         scratch = {"index_bloom": dict(ib)}
-        si._update_index_bloom(spark, path, scratch, ids, 60, id_col="doc_id")
+        store._update_index_bloom(spark, path, scratch, ids, 60, id_col="doc_id")
         assert ib["delta_rows"] == 0  # the durable counter never moved
         assert spark.read.parquet(dirp).count() > ib["m"] // 64 + base_actual
-        members = si._read_kind(spark, path, "digests", meta).select("doc_id")
-        si._maintain_index_bloom(spark, path, meta, members, id_col="doc_id")
+        members = store._read_kind(spark, path, "digests", meta).select("doc_id")
+        store._maintain_index_bloom(spark, path, meta, members, id_col="doc_id")
         ib2 = meta["index_bloom"]
         assert ib2["dir"] != ib["dir"], "fold did not fire off actual rows"
         assert ib2["delta_rows"] == 0
@@ -314,7 +315,7 @@ class TestIndexBloomDeltaMeasured:
         assert spark.read.parquet(folded).count() == ib2["base_rows"]
         # the folded bloom still hits every committed id (no false
         # negative through the fold)
-        assert si._index_bloom_any_hit(
+        assert store._index_bloom_any_hit(
             spark, path, ib2, _docs(spark, 0, 5).select("doc_id"), "doc_id"
         )
 
@@ -369,7 +370,7 @@ class TestBloomHashVersion:
             [(float(i),) for i in range(3, 6)], "doc_id double"
         )
         unversioned = {"s1": {"m": m, "k": si.BLOOM_K}}  # no "h"
-        cand = si._bloom_candidate_segments(
+        cand = store._bloom_candidate_segments(
             spark, path, ["s1"], unversioned, batch, id_col="doc_id"
         )
         assert cand == ["s1"], "unversioned bloom probed with new form"
@@ -379,7 +380,7 @@ class TestBloomHashVersion:
         ibatch = spark.createDataFrame(
             [(i,) for i in range(100, 103)], "doc_id bigint"
         )
-        dvs = si._write_segment_bloom(
+        dvs = store._write_segment_bloom(
             spark,
             path,
             "s2",
@@ -388,7 +389,7 @@ class TestBloomHashVersion:
             id_col="doc_id",
         )
         dvs.pop("h")
-        cand2 = si._bloom_candidate_segments(
+        cand2 = store._bloom_candidate_segments(
             spark, path, ["s2"], {"s2": dvs}, ibatch, id_col="doc_id"
         )
         assert cand2 == [], "disjoint integral batch should prune"

@@ -907,7 +907,7 @@ class TestShingleIndex:
         )
         assert r4["reason"] == "already_applied"
         assert read_shingle_meta(path)["n_docs"] == 4
-        from database_clonev2_spark.extensions.shingleindex import _read_kind
+        from database_clonev2_spark.extensions._segments import _read_kind
 
         n_rows = (
             _read_kind(spark, path, "shingles", read_shingle_meta(path))
@@ -958,6 +958,7 @@ class TestShingleIndex:
         must overwrite the torn dirs and store every row exactly once
         (the old mode-append layout double-counted here, corrupting
         Jaccard denominators)."""
+        from database_clonev2_spark.extensions import _segments as store
         from database_clonev2_spark.extensions import shingleindex as si
 
         path = str(tmp_path / "idx")
@@ -982,7 +983,7 @@ class TestShingleIndex:
         monkeypatch.setattr(si, "_write_meta", real_write_meta)
 
         # the torn segment dirs exist on disk but no reader resolves them
-        assert os.path.exists(os.path.join(path, "shingles", si._segment_tag("torn")))
+        assert os.path.exists(os.path.join(path, "shingles", store._segment_tag("torn")))
         assert si.read_shingle_meta(path)["n_docs"] == 3
         got = probe = si.probe_shingle_index(
             spark, path, _docs(spark, [(99, new_doc[1])])
@@ -998,7 +999,7 @@ class TestShingleIndex:
         meta = si.read_shingle_meta(path)
         assert meta["n_docs"] == 4
         n_rows = (
-            si._read_kind(spark, path, "shingles", meta)
+            store._read_kind(spark, path, "shingles", meta)
             .where(F.col("doc_id") == 4)
             .count()
         )

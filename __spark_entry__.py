@@ -216,7 +216,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # dedup_minhash_index_probe changed r10 (build-path duplicate-id
 # collapse + single-scan pin, VERDICT r9 #3) and were already
 # in-window, as are every mv_/cdc_/db_/scd2 consistency row whose
-# closure includes _commit_staged_buckets (quiesce fence at the commit
+# closure includes commit_staged_buckets (quiesce fence at the commit
 # point, ADVICE r9 high) and read_database_snapshot (lazy revalidation
 # + held-marker heartbeat). dedup_simhash_md5_pairs (NEW r10: SimHash
 # under the cross-engine md5 family — 60-bit fingerprints + exact

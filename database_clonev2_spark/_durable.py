@@ -64,17 +64,17 @@ def write_json_atomic(path: str, obj) -> None:
 def flock_guard(guard_path: str):
     """Best-effort exclusive flock on a never-unlinked sidecar guard
     file — the ONE implementation of the open/flock-or-degrade/close
-    pattern shared by merge's recovery-lock release and quiesce fence
-    and the index maintainers' guard (round-10 review catch: three
-    hand-rolled copies of the degrade-on-flockless-FS policy). Yields
-    ``'locked'`` (critical section held), ``'nolock'`` (filesystem
-    without advisory locks — proceed best-effort, the callers'
-    documented degraded contract), or ``'noopen'`` (guard unreachable —
-    callers choose walk-away vs proceed). Not re-entrant: a second
-    open + flock of the same guard in one process blocks.
-    ``merge._acquire_recovery_lock`` keeps its own inline guard: its
-    degrade semantics differ per caller role (readers skip, writers
-    refuse loudly)."""
+    pattern shared by the bucketed store's recovery-lock release and
+    quiesce fence and the index maintainers' guard (round-10 review
+    catch: three hand-rolled copies of the degrade-on-flockless-FS
+    policy). Yields ``'locked'`` (critical section held), ``'nolock'``
+    (filesystem without advisory locks — proceed best-effort, the
+    callers' documented degraded contract), or ``'noopen'`` (guard
+    unreachable — callers choose walk-away vs proceed). Not re-entrant:
+    a second open + flock of the same guard in one process blocks.
+    ``pipeline._buckets._acquire_recovery_lock`` keeps its own inline
+    guard: its degrade semantics differ per caller role (readers skip,
+    writers refuse loudly)."""
     import fcntl
 
     try:

@@ -876,6 +876,7 @@ def db_snapshot_expiry_consistency(spark: SparkSession, sf_dir: str) -> DataFram
     import shutil
     import time as _time
 
+    from ..pipeline import _buckets as bk
     from ..pipeline import merge as mg
 
     c = load(spark, sf_dir, "customer").select(
@@ -904,8 +905,8 @@ def db_snapshot_expiry_consistency(spark: SparkSession, sf_dir: str) -> DataFram
     # heartbeat fast enough to tick several times FIRST (the r11 bug
     # hid exactly here: a deadline shorter than the first tick never
     # exercised the refresh); module globals restore in the finally
-    old_hold, old_beat = mg._QUIESCE_MAX_HOLD_S, mg._QUIESCE_HEARTBEAT_S
-    mg._QUIESCE_MAX_HOLD_S, mg._QUIESCE_HEARTBEAT_S = 0.4, 0.05
+    old_hold, old_beat = bk._QUIESCE_MAX_HOLD_S, bk._QUIESCE_HEARTBEAT_S
+    bk._QUIESCE_MAX_HOLD_S, bk._QUIESCE_HEARTBEAT_S = 0.4, 0.05
     try:
         snap = mg.read_database_snapshot(
             spark, {"customer": crep}, materialize=False, quiesce=True
@@ -913,7 +914,7 @@ def db_snapshot_expiry_consistency(spark: SparkSession, sf_dir: str) -> DataFram
         _time.sleep(1.0)  # several ticks, then outlive the deadline
         res = snap["release_quiesce"]()
     finally:
-        mg._QUIESCE_MAX_HOLD_S, mg._QUIESCE_HEARTBEAT_S = old_hold, old_beat
+        bk._QUIESCE_MAX_HOLD_S, bk._QUIESCE_HEARTBEAT_S = old_hold, old_beat
     if snap["epoch_vector"] != {"customer": "epoch-1"}:
         raise RuntimeError(f"torn epoch vector: {snap['epoch_vector']}")
     if res != {"expired": True, "torn": False}:

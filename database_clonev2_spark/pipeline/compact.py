@@ -21,7 +21,15 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .merge import _HW_FILE, _swap_write
+from ._buckets import (
+    BUCKET_COL,
+    HW_FILE,
+    commit_staged_buckets,
+    is_bucketed,
+    new_staging,
+    recover_pending,
+    swap_write,
+)
 
 # Default target: a modest multiple of a row-group, small enough for the
 # local fixtures to exercise multi-file outputs, large enough that the
@@ -128,7 +136,7 @@ def compact_parquet(
     near-atomic swap: new files are fully written beside the target
     before two renames publish them, so readers never observe a
     half-compacted table (the crash window is the documented
-    ``_swap_write`` one).
+    ``swap_write`` one).
 
     Scale notes: ``coalesce`` (not ``repartition``) avoids a shuffle —
     compaction is pure I/O re-binning, and the narrow dependency lets
@@ -217,7 +225,7 @@ def compact_parquet(
     # (copied into the new directory before the renames), so no crash
     # position can produce a compacted table that lost its mark — losing
     # it silently demotes the next sync to the O(|target|) legacy scan
-    rows = _swap_write(spark, df, path, preserve_files=(_HW_FILE,))
+    rows = swap_write(spark, df, path, preserve_files=(HW_FILE,))
     files_after, _ = _dir_stats(path)
     return {
         "files_before": files_before,
@@ -264,21 +272,13 @@ def compact_bucketed_target(
     Returns {buckets_compacted, buckets_skipped, files_before,
     files_after}.
     """
-    from .merge import (
-        BUCKET_COL,
-        _commit_staged_buckets,
-        _read_bucket_meta,
-        recover_pending_commit,
-    )
-
     path_str = str(target_path)
-    if not os.path.exists(os.path.join(path_str, "_merge_buckets.json")):
+    if not is_bucketed(path_str):
         raise ValueError(
             "not a bucketed merge target (no _merge_buckets.json); use "
             "compact_parquet for flat parquet directories"
         )
-    recover_pending_commit(path_str)
-    meta = _read_bucket_meta(path_str)
+    recover_pending(path_str)
     existing = sorted(
         int(d.split("=", 1)[1])
         for d in os.listdir(path_str)
@@ -289,10 +289,7 @@ def compact_bucketed_target(
     if bad:
         raise ValueError(f"buckets {bad} do not exist in the target (has {existing})")
 
-    import uuid as _uuid
-
-    token = _uuid.uuid4().hex[:8]
-    staging = f"{path_str}.__stage_{token}"
+    token, staging = new_staging(path_str)
     touched: list[int] = []
     files_before_total = files_after_total = skipped = 0
     for b in selected:
@@ -314,7 +311,7 @@ def compact_bucketed_target(
         files_before_total += n_files
         files_after_total += _dir_stats(os.path.join(staging, f"{BUCKET_COL}={b}"))[0]
     if touched:
-        _commit_staged_buckets(path_str, token, staging, touched)
+        commit_staged_buckets(path_str, token, staging, touched)
     else:
         shutil.rmtree(staging, ignore_errors=True)
     return {

@@ -23,11 +23,12 @@ key-updates on either side would require retracting previously-emitted
 pairs, which an append-only view cannot express. A deleting source needs
 the upsert sink + full recompute semantics.
 
-Crash atomicity spans THREE stores, so the commit generalizes the
-single-target manifest: all three stores' new buckets are staged under
-one ``.__stage_`` dir, ONE manifest records the full (store, bucket)
-swap set plus the batch id, the swaps run, the replay ledger is
-appended, the manifest is removed. Any crash inside the sequence is
+Crash atomicity spans THREE stores, so the commit uses the bucketed
+store's named-stores manifest (``_buckets``): all three stores' new
+buckets are staged under one ``.__stage_`` dir, ONE manifest records
+the full (store, bucket) swap set plus the batch id, the swaps run,
+the replay ledger is appended, the manifest is removed. Any crash
+inside the sequence is
 rolled forward idempotently by ``recover_pending_join_commit`` — there
 is no crash position where one store reflects the batch and another
 does not once recovery has run, and the ledger guarantees a replayed
@@ -38,7 +39,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,21 +49,28 @@ from .._durable import (
     append_applied_batch,
     applied_batches,
     epoch_dir_name,
-    epoch_sort_key,
     write_json_atomic,
 )
-from .merge import (
-    _RECOVERY_LOCK_FILE,
+from ._buckets import (
     BUCKET_COL,
-    _acquire_recovery_lock,
-    _manifest_is_stale,
-    _release_recovery_lock,
-    _with_bucket,
+    commit_staged_buckets,
+    create_store,
+    list_changes,
+    new_staging,
+    probe_epoch,
+    prune_changes,
+    read_changes,
+    recover_pending,
+    stage_buckets,
+    with_bucket,
 )
 
 _META_FILE = "_join_meta.json"
-_COMMIT_FILE = "_commit.json"
 _STORES = ("left", "right", "view")
+
+# the change feed's list and prune are the bucketed store's
+list_join_change_epochs = list_changes
+prune_join_changes = prune_changes
 
 
 def _meta_path(root: str) -> str:
@@ -75,105 +82,15 @@ def _read_meta(root: str) -> dict:
         return json.load(fh)
 
 
-def _commit_path(root: str) -> str:
-    return os.path.join(root, _COMMIT_FILE)
-
-
-def _write_manifest(
-    root: str, token: str, staged: dict, batch_id, change_dir: str | None = None
-) -> dict:
-    import time
-
-    man = {
-        "token": token,
-        "staged": staged,  # {store: [bucket ids]}
-        "batch_id": batch_id,
-        "change_dir": change_dir,
-        "pid": os.getpid(),
-        "wall_ts": time.time(),
-    }
-    write_json_atomic(_commit_path(root), man)
-    return man
-
-
-def _roll_forward(root: str, man: dict) -> None:
-    """Replay the commit sequence idempotently from the manifest: every
-    step either happened already (skip) or happens now."""
-    token = man["token"]
-    staging = os.path.join(root, f".__stage_{token}")
-    for store, buckets in man["staged"].items():
-        for b in buckets:
-            src = os.path.join(staging, store, f"{BUCKET_COL}={b}")
-            dst = os.path.join(root, store, f"{BUCKET_COL}={b}")
-            old = os.path.join(root, f".__old_{store}_b{b}_{token}")
-            if os.path.exists(src):
-                if os.path.exists(dst):
-                    os.rename(dst, old)
-                os.rename(src, dst)
-            # src gone + dst present = this swap already completed
-    for store, buckets in man["staged"].items():
-        for b in buckets:
-            old = os.path.join(root, f".__old_{store}_b{b}_{token}")
-            if os.path.exists(old):
-                shutil.rmtree(old)
-    if man.get("change_dir"):
-        # the epoch's ΔV rides the same commit: publish it under
-        # _changes/<dir> (no dst-strand step — change dirs are
-        # epoch-unique, so dst existing means this step already ran)
-        src = os.path.join(staging, "changes")
-        dst = os.path.join(root, "_changes", man["change_dir"])
-        if os.path.exists(src) and not os.path.exists(dst):
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.rename(src, dst)
-    shutil.rmtree(staging, ignore_errors=True)
-    if man.get("batch_id") is not None:
-        append_applied_batch(root, man["batch_id"])
-    try:
-        os.remove(_commit_path(root))
-    except FileNotFoundError:
-        pass
-
-
 def recover_pending_join_commit(root: str, only_if_stale: bool = False) -> dict:
-    """Roll a dangling join-view commit forward. Writer-path calls (the
-    next maintenance call; writers are serialized per view) recover
-    unconditionally; reader-path calls pass ``only_if_stale=True`` and
-    recover only when the recorded writer is provably dead — the same
-    reader/writer discipline as ``pipeline.merge`` (a reader replaying
-    the renames under a live writer would race it). Manifest-less
-    staging dirs are swept on the writer path only, for the same
-    reason. Concurrent recoverers are serialized by merge's recovery
-    lock (``_acquire_recovery_lock``): two readers replaying one stale
-    manifest could otherwise strand the winner's new bucket to
-    ``.__old_`` and delete it. Readers skip while the lock is held;
-    writers wait."""
-    report: dict = {}
-    cp = _commit_path(root)
-    if os.path.exists(cp):
-        lock = os.path.join(root, _RECOVERY_LOCK_FILE)
-        held = _acquire_recovery_lock(lock, only_if_stale)
-        if held is None:
-            return {"skipped": "recovery lock held"}
-        try:
-            try:
-                with open(cp) as fh:
-                    man = json.load(fh)
-            except FileNotFoundError:
-                man = None  # another recoverer finished before we got the lock
-            if man is not None:
-                if only_if_stale and not _manifest_is_stale(man):
-                    return {"skipped": "manifest writer alive"}
-                _roll_forward(root, man)
-                report = {"rolled_forward": man["token"]}
-        finally:
-            _release_recovery_lock(lock, *held)
-    if only_if_stale:
-        return report
-    if os.path.isdir(root):
-        for name in os.listdir(root):
-            if name.startswith(".__stage_") or name.startswith(".__old_"):
-                shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-    return report
+    """Roll a dangling join-view commit forward through the bucketed
+    store's one recovery (``_buckets.recover_pending``): writer-path
+    calls (the next maintenance call; writers are serialized per view)
+    recover unconditionally and sweep unreferenced staging; reader-path
+    calls pass ``only_if_stale=True`` and recover only when the recorded
+    writer is provably dead, under the recovery lock (readers skip while
+    it is held, writers wait). Returns the recovery report, or ``{}``."""
+    return recover_pending(root, only_if_stale) or {}
 
 
 def _store_schema(meta: dict, store: str) -> StructType:
@@ -189,11 +106,6 @@ def _read_store(
     return spark.read.schema(_store_schema(meta, store)).parquet(
         os.path.join(root, store)
     )
-
-
-def _delta_buckets(delta: DataFrame) -> list[int]:
-    # ≤ n_buckets small ints — metadata, not data
-    return sorted(r[BUCKET_COL] for r in delta.select(BUCKET_COL).distinct().collect())
 
 
 def maintain_join_view(
@@ -252,39 +164,35 @@ def maintain_join_view(
                 "rename before maintaining (the view schema is key + left "
                 "columns + right columns)"
             )
-        token = uuid.uuid4().hex[:8]
-        change_dir = epoch_dir_name(token if batch_id is None else batch_id)
-        staging = f"{root}.__create_{token}"
-        os.makedirs(staging)
-        a = _with_bucket(batch_left, key_cols, n_buckets)
-        b = _with_bucket(batch_right, key_cols, n_buckets)
+        change_dir = epoch_dir_name(
+            uuid.uuid4().hex[:8] if batch_id is None else batch_id
+        )
+        a = with_bucket(batch_left, key_cols, n_buckets)
+        b = with_bucket(batch_right, key_cols, n_buckets)
         # creation may be a BACKFILL (full initial tables), so unlike the
         # delta folds no broadcast is forced here — AQE picks by size
-        dv = _with_bucket(
-            batch_left.join(batch_right, key_cols), key_cols, n_buckets
-        )
-        a.write.partitionBy(BUCKET_COL).parquet(os.path.join(staging, "left"))
-        b.write.partitionBy(BUCKET_COL).parquet(os.path.join(staging, "right"))
-        dv.write.partitionBy(BUCKET_COL).parquet(os.path.join(staging, "view"))
-        if change_feed:
-            dv.drop(BUCKET_COL).write.parquet(
-                os.path.join(staging, "_changes", change_dir)
-            )
-        meta = {
-            "n_buckets": n_buckets,
-            "key_cols": list(key_cols),
-            "left_schema": a.schema.json(),
-            "right_schema": b.schema.json(),
-            "view_schema": dv.schema.json(),
-        }
-        write_json_atomic(_meta_path(staging), meta)
-        if batch_id is not None:
-            append_applied_batch(staging, batch_id)
-        n_dv = spark.read.schema(dv.schema).parquet(
-            os.path.join(staging, "view")
-        ).count()
-        # single rename = the whole creation commit (data + meta + ledger)
-        os.rename(staging, root)
+        dv = with_bucket(batch_left.join(batch_right, key_cols), key_cols, n_buckets)
+
+        def fill(staging):
+            stage_buckets(spark, a, os.path.join(staging, "left"))
+            stage_buckets(spark, b, os.path.join(staging, "right"))
+            n = stage_buckets(spark, dv, os.path.join(staging, "view")).count()
+            if change_feed:
+                dv.drop(BUCKET_COL).write.parquet(
+                    os.path.join(staging, "_changes", change_dir)
+                )
+            meta = {
+                "n_buckets": n_buckets,
+                "key_cols": list(key_cols),
+                "left_schema": a.schema.json(),
+                "right_schema": b.schema.json(),
+                "view_schema": dv.schema.json(),
+            }
+            write_json_atomic(_meta_path(staging), meta)
+            return n
+
+        # one rename = the whole creation commit (data + meta + ledger)
+        n_dv = create_store(root, fill, batch_id)
         return {
             "applied": True,
             "batch_id": batch_id,
@@ -322,11 +230,12 @@ def maintain_join_view(
             f"{sorted(empty_right.columns)}"
         )
 
-    da = _with_bucket(da, key_cols, n_buckets).persist()
-    db = _with_bucket(db, key_cols, n_buckets).persist()
+    da = with_bucket(da, key_cols, n_buckets).persist()
+    db = with_bucket(db, key_cols, n_buckets).persist()
+    dv = None
     try:
-        buckets_a = _delta_buckets(da)
-        buckets_b = _delta_buckets(db)
+        buckets_a = probe_epoch(da, [BUCKET_COL])["touched"]
+        buckets_b = probe_epoch(db, [BUCKET_COL])["touched"]
         a_old = _read_store(spark, root, meta, "left")
         b_old = _read_store(spark, root, meta, "right")
 
@@ -345,27 +254,24 @@ def maintain_join_view(
         view_schema_cols = [
             f.name for f in _store_schema(meta, "view") if f.name != BUCKET_COL
         ]
-        dv = _with_bucket(
+        dv = with_bucket(
             term1.select(*view_schema_cols).unionByName(
                 term2.select(*view_schema_cols)
             ),
             key_cols,
             n_buckets,
         ).persist()
-        buckets_v = _delta_buckets(dv)
-        n_dv = dv.count()
+        probe_v = probe_epoch(dv, [BUCKET_COL])
+        buckets_v, n_dv = probe_v["touched"], probe_v["rows"]
 
-        token = uuid.uuid4().hex[:8]
-        staging = os.path.join(root, f".__stage_{token}")
+        token, staging = new_staging(root, inside=True)
         staged: dict[str, list[int]] = {}
 
         def stage(store: str, old: DataFrame, delta: DataFrame, buckets: list[int]):
             if not buckets:
                 return
             merged = old.where(F.col(BUCKET_COL).isin(buckets)).unionByName(delta)
-            merged.write.partitionBy(BUCKET_COL).parquet(
-                os.path.join(staging, store)
-            )
+            stage_buckets(spark, merged, os.path.join(staging, store))
             staged[store] = buckets
 
         stage("left", a_old, da, buckets_a)
@@ -378,18 +284,16 @@ def maintain_join_view(
             change_dir = epoch_dir_name(token if batch_id is None else batch_id)
             dv.drop(BUCKET_COL).write.parquet(os.path.join(staging, "changes"))
         if staged or change_dir:
-            _roll_forward(
-                root, _write_manifest(root, token, staged, batch_id, change_dir)
+            commit_staged_buckets(
+                root, token, staging, staged, batch_id, change_dir=change_dir
             )
         elif batch_id is not None:
             append_applied_batch(root, batch_id)
     finally:
         da.unpersist()
         db.unpersist()
-        try:
+        if dv is not None:
             dv.unpersist()
-        except Exception:
-            pass
     return {
         "applied": True,
         "batch_id": batch_id,
@@ -407,18 +311,6 @@ def read_join_view(spark: SparkSession, root: str) -> DataFrame:
     return _read_store(spark, root, meta, "view").drop(BUCKET_COL)
 
 
-def list_join_change_epochs(root: str) -> list[str]:
-    """Published change-feed epoch dirs in natural (numeric-aware) epoch
-    order — the order they were committed in for integer foreachBatch
-    epoch ids."""
-    d = os.path.join(root, "_changes")
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        (n for n in os.listdir(d) if n.startswith("epoch-")), key=epoch_sort_key
-    )
-
-
 def read_join_changes(
     spark: SparkSession, root: str, epochs: list[str] | None = None
 ) -> DataFrame:
@@ -426,28 +318,7 @@ def read_join_changes(
     Schema is the pinned view schema (layout column dropped), so empty
     change sets read cleanly."""
     recover_pending_join_commit(root, only_if_stale=True)
-    meta = _read_meta(root)
-    names = list_join_change_epochs(root) if epochs is None else list(epochs)
-    missing = [n for n in names if not os.path.isdir(os.path.join(root, "_changes", n))]
-    if missing:
-        raise ValueError(f"unknown change epochs {missing}")
     schema = StructType(
-        [f for f in _store_schema(meta, "view") if f.name != BUCKET_COL]
+        [f for f in _store_schema(_read_meta(root), "view") if f.name != BUCKET_COL]
     )
-    if not names:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(
-        *[os.path.join(root, "_changes", n) for n in names]
-    )
-
-
-def prune_join_changes(root: str, consumed: list[str]) -> int:
-    """Drop consumed change epochs (the retention knob — the feed
-    otherwise grows with history). Returns the number removed."""
-    n = 0
-    for name in consumed:
-        d = os.path.join(root, "_changes", name)
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-            n += 1
-    return n
+    return read_changes(spark, root, epochs, schema)

@@ -51,14 +51,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .._durable import append_applied_batch, applied_batches, epoch_number
+from ._buckets import BUCKET_COL, probe_epoch, read_bucket_meta, with_bucket
 from .merge import (
-    BUCKET_COL,
-    _read_bucket_meta,
-    _with_bucket,
     list_merge_changes,
     merge_delete_bucketed,
     merge_upsert_bucketed,
     read_merge_changes,
+    read_merge_target,
 )
 
 PAIR_EPOCH_COL = "_pair_epoch"
@@ -83,7 +82,7 @@ def maintain_join_view_from_changes(
         if c not in changes.columns:
             raise ValueError(f"changes must carry {c!r}")
     right = spark.read.parquet(right_path)
-    rmeta = _read_bucket_meta(right_path)
+    rmeta = read_bucket_meta(right_path)
     if rmeta["key_cols"] != [join_key]:
         raise ValueError(
             f"right store must be keyed on the join key [{join_key!r}], "
@@ -108,9 +107,8 @@ def maintain_join_view_from_changes(
     ).select(*left_cols)
 
     def prune_right(keys: DataFrame) -> DataFrame:
-        bk = _with_bucket(keys.select(join_key).distinct(), [join_key],
-                          rmeta["n_buckets"])
-        touched = [r[BUCKET_COL] for r in bk.select(BUCKET_COL).distinct().collect()]
+        bk = with_bucket(keys.select(join_key), [join_key], rmeta["n_buckets"])
+        touched = probe_epoch(bk, [BUCKET_COL])["touched"]
         if not touched:
             return right.limit(0)
         return right.filter(F.col(BUCKET_COL).isin(touched)).drop(BUCKET_COL)
@@ -180,6 +178,4 @@ def sync_join_view_from_changes(
 
 def read_pair_view(spark: SparkSession, view_path: str) -> DataFrame:
     """The view as its logical table (layout + version columns dropped)."""
-    from .merge import read_merge_target
-
     return read_merge_target(spark, view_path).drop(PAIR_EPOCH_COL)

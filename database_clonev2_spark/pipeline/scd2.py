@@ -25,23 +25,29 @@ single-shot copy cannot express.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .._durable import append_applied_batch, applied_batches, epoch_number
-from .merge import (
+from ._buckets import (
     BUCKET_COL,
-    _commit_staged_buckets,
-    _read_bucket_meta,
-    _widened_schema,
-    _with_bucket,
-    _write_bucket_meta,
+    checked_meta,
+    commit_staged_buckets,
+    create_store,
     is_bucketed,
+    new_staging,
+    probe_epoch,
+    recorded_schema,
+    stage_buckets,
+    widened_schema,
+    with_bucket,
+    write_bucket_meta,
+)
+from .merge import (
     list_merge_changes,
     read_merge_changes,
-    recorded_schema,
+    read_merge_target,
     recover_pending_commit,
 )
 
@@ -108,77 +114,68 @@ def _fold_one_epoch(
     allow_evolution: bool = False,
 ) -> dict:
     payload_cols = [c for c in ch.columns if c != "change_type"]
+    opens = F.col("change_type").isin("insert", "update_postimage")
+    closes = F.col("change_type").isin("update_preimage", "delete")
+    # persisted: the probe, the staged rows and the closing join must see
+    # the same epoch; ONE aggregate answers its touched buckets and its
+    # opening/closing row counts
+    chb = with_bucket(ch, key_cols, n_buckets).persist()
     opening = (
-        ch.where(F.col("change_type").isin("insert", "update_postimage"))
+        chb.where(opens)
         .select(*payload_cols)
         .withColumn(FROM_COL, F.lit(epoch_num).cast("long"))
         .withColumn(TO_COL, F.lit(None).cast("long"))
     )
-    closing_keys = ch.where(
-        F.col("change_type").isin("update_preimage", "delete")
-    ).select(*key_cols)
-
-    if not os.path.exists(history_path):
-        n_close = closing_keys.count()
-        if n_close:
-            raise ValueError(
-                "first folded epoch closes versions that cannot exist yet — "
-                "start the history from the feed's first epoch"
-            )
-        if opening.isEmpty():
-            # an empty first epoch: creating from it would write a
-            # schemaless parquet dir (poisoned path); skip — the sync
-            # loop revisits it until a non-empty epoch creates the store
-            return {"opened": 0, "closed": 0, "touched_buckets": 0}
-        upd = _with_bucket(opening, key_cols, n_buckets)
-        token = uuid.uuid4().hex[:8]
-        staging = f"{history_path}.__stage_{token}"
-        upd.write.partitionBy(BUCKET_COL).parquet(staging)
-        n = spark.read.parquet(staging).count()
-        _write_bucket_meta(staging, n_buckets, list(key_cols))
-        append_applied_batch(staging, epoch_name)
-        os.rename(staging, history_path)
-        return {"opened": n, "closed": 0, "touched_buckets": n_buckets}
-
-    if not is_bucketed(history_path):
-        raise ValueError(f"{history_path} is not a bucketed SCD-2 history")
-    recover_pending_commit(history_path)
-    if epoch_name in applied_batches(history_path):
-        return {"applied": False, "batch_id": epoch_name, "reason": "already_applied"}
-    meta = _read_bucket_meta(history_path)
-    if meta["n_buckets"] != n_buckets or meta["key_cols"] != list(key_cols):
-        raise ValueError(
-            f"bucket layout mismatch: history has n_buckets={meta['n_buckets']} "
-            f"key_cols={meta['key_cols']}, caller passed n_buckets={n_buckets} "
-            f"key_cols={list(key_cols)}"
-        )
-    # an evolved history MUST read through its recorded schema — a bare
-    # parquet read samples one footer and would nondeterministically
-    # drop the evolved column from this fold's rewritten buckets
-    hist_schema = recorded_schema(spark, history_path)
-    hcols = [f.name for f in hist_schema if f.name != BUCKET_COL]
-    extra = [c for c in payload_cols if c not in hcols]
-    if extra and not allow_evolution:
-        raise ValueError(
-            f"epoch payload carries columns the history lacks: {extra} — "
-            "the source evolved; pass allow_evolution=True to widen the "
-            "history (versions closed before the column existed read as "
-            "NULL)"
-        )
-    if extra:
-        hist_schema = _widened_schema(hist_schema, ch.schema, extra)
-        hcols = hcols + extra
-    # opening rows missing history columns (an older-schema epoch folded
-    # into an already-evolved history) null-fill
-    for c in (c for c in hcols if c not in opening.columns):
-        opening = opening.withColumn(c, F.lit(None).cast(hist_schema[c].dataType))
-    all_keys = _with_bucket(
-        ch.select(*key_cols).distinct(), key_cols, n_buckets
-    ).persist()
     try:
-        touched = sorted(
-            r[BUCKET_COL] for r in all_keys.select(BUCKET_COL).distinct().collect()
+        probe = probe_epoch(
+            chb, [BUCKET_COL], count_if={"opened": opens, "closed": closes}
         )
+        n_open, n_close, touched = probe["opened"], probe["closed"], probe["touched"]
+        if not os.path.exists(history_path):
+            if n_close:
+                raise ValueError(
+                    "first folded epoch closes versions that cannot exist yet — "
+                    "start the history from the feed's first epoch"
+                )
+            if not n_open:
+                # an empty first epoch: creating from it would write a
+                # schemaless parquet dir (poisoned path); skip — the sync
+                # loop revisits it until a non-empty epoch creates the store
+                return {"opened": 0, "closed": 0, "touched_buckets": 0}
+
+            def fill(staging):
+                stage_buckets(spark, with_bucket(opening, key_cols, n_buckets), staging)
+                write_bucket_meta(staging, n_buckets, list(key_cols))
+
+            create_store(history_path, fill, epoch_name)
+            return {"opened": n_open, "closed": 0, "touched_buckets": n_buckets}
+
+        if not is_bucketed(history_path):
+            raise ValueError(f"{history_path} is not a bucketed SCD-2 history")
+        recover_pending_commit(history_path)
+        if epoch_name in applied_batches(history_path):
+            return {"applied": False, "batch_id": epoch_name, "reason": "already_applied"}
+        checked_meta(history_path, n_buckets, key_cols, what="history")
+        # an evolved history MUST read through its recorded schema — a bare
+        # parquet read samples one footer and would nondeterministically
+        # drop the evolved column from this fold's rewritten buckets
+        hist_schema = recorded_schema(spark, history_path)
+        hcols = [f.name for f in hist_schema if f.name != BUCKET_COL]
+        extra = [c for c in payload_cols if c not in hcols]
+        if extra and not allow_evolution:
+            raise ValueError(
+                f"epoch payload carries columns the history lacks: {extra} — "
+                "the source evolved; pass allow_evolution=True to widen the "
+                "history (versions closed before the column existed read as "
+                "NULL)"
+            )
+        if extra:
+            hist_schema = widened_schema(hist_schema, ch.schema, extra)
+            hcols = hcols + extra
+        # opening rows missing history columns (an older-schema epoch folded
+        # into an already-evolved history) null-fill
+        for c in (c for c in hcols if c not in opening.columns):
+            opening = opening.withColumn(c, F.lit(None).cast(hist_schema[c].dataType))
         if not touched:
             append_applied_batch(history_path, epoch_name)
             return {"opened": 0, "closed": 0, "touched_buckets": 0}
@@ -187,7 +184,7 @@ def _fold_one_epoch(
         )
         # close the open version of every closing key; all other history
         # rows in the touched buckets pass through unchanged
-        closing = closing_keys.withColumn("_close", F.lit(True))
+        closing = chb.where(closes).select(*key_cols).withColumn("_close", F.lit(True))
         rewritten = (
             hist.join(F.broadcast(closing), key_cols, "left")
             .withColumn(
@@ -199,20 +196,15 @@ def _fold_one_epoch(
             )
             .drop("_close")
         )
-        merged = rewritten.unionByName(_with_bucket(opening, key_cols, n_buckets))
-        token = uuid.uuid4().hex[:8]
-        staging = f"{history_path}.__stage_{token}"
-        merged.write.partitionBy(BUCKET_COL).parquet(staging)
-        for b in touched:
-            os.makedirs(os.path.join(staging, f"{BUCKET_COL}={b}"), exist_ok=True)
-        n_open = opening.count()
-        n_close = closing_keys.count()
-        _commit_staged_buckets(
+        merged = rewritten.unionByName(with_bucket(opening, key_cols, n_buckets))
+        token, staging = new_staging(history_path)
+        stage_buckets(spark, merged, staging, touched)
+        commit_staged_buckets(
             history_path, token, staging, touched, batch_id=epoch_name,
             schema_json=hist_schema.json(),
         )
     finally:
-        all_keys.unpersist()
+        chb.unpersist()
     return {"opened": n_open, "closed": n_close, "touched_buckets": len(touched)}
 
 
@@ -245,8 +237,6 @@ def scd2_asof_join(
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     if epoch_col not in facts.columns:
         raise ValueError(f"facts lack the epoch column {epoch_col!r}")
-    from .merge import read_merge_target
-
     hist = read_merge_target(spark, history_path)
     clash = [
         c
@@ -285,8 +275,6 @@ def read_scd2_history(
     ``as_of_epoch=e`` reconstructs the state AFTER epoch e committed:
     versions with ``_from_epoch <= e`` and (open or ``_to_epoch > e``).
     ``current_only`` is the open slice — the source's current state."""
-    from .merge import read_merge_target
-
     df = read_merge_target(spark, history_path)
     if as_of_epoch is not None:
         df = df.where(

@@ -36,8 +36,9 @@ import os
 
 from pyspark.sql import DataFrame
 
+from .._durable import epoch_dir_name
+from ..pipeline._buckets import read_bucket_meta, swap_write
 from ..pipeline.merge import (
-    _swap_write,
     is_bucketed,
     merge_additive_bucketed,
     merge_upsert,
@@ -153,7 +154,7 @@ def _merge_batch(
         # up to merge_upsert_bucketed's documented crash window: a
         # crash between a bucket's two swap renames strands that
         # bucket's old data under a recoverable .__old_b<i> suffix
-        # (same class as _swap_write on the flat path, scoped to 1/N).
+        # (same class as swap_write on the flat path, scoped to 1/N).
         merge_upsert_bucketed(
             spark,
             target_path,
@@ -191,7 +192,7 @@ def _merge_batch(
                 .agg(F.max_by(F.struct(*non_key), F.col(order_col)).alias("_s"))
                 .select(*key_cols, *[F.col(f"_s.{c}").alias(c) for c in non_key])
             )
-            _swap_write(spark, merged, target_path)
+            swap_write(spark, merged, target_path)
     finally:
         deduped.unpersist()
 
@@ -247,7 +248,7 @@ def stream_merge_validated(
             (
                 bad.withColumn("_batch_id", F.lit(batch_id))
                 .write.mode("overwrite")
-                .parquet(os.path.join(quarantine_path, f"epoch-{batch_id}"))
+                .parquet(os.path.join(quarantine_path, epoch_dir_name(batch_id)))
             )
         good = checked.filter(F.col("_violation").isNull()).drop("_violation")
         _merge_batch(
@@ -675,9 +676,9 @@ def stream_apply_cdc(
             # in-flight evolution guard (docstring): fail BEFORE anything
             # commits so the checkpoint never advances past files whose
             # evolved columns this stream's pinned schema would drop
-            from ..pipeline.merge import BUCKET_COL, _read_bucket_meta
+            from ..pipeline.merge import BUCKET_COL
 
-            meta = _read_bucket_meta(source_path)
+            meta = read_bucket_meta(source_path)
             if meta.get("schema_json"):
                 import json as _json
 
@@ -844,7 +845,7 @@ def stream_scd2_maintain(
                 "non-numeric epoch directory"
             )
         for e in epochs:
-            name = f"epoch-{e}"
+            name = epoch_dir_name(e)
             if name in applied_batches(history_path):
                 continue
             ch = batch_df.where(F.col("_epoch") == e).drop("_epoch")
@@ -904,7 +905,7 @@ def stream_join_view_cdc(
                 "carries a non-numeric epoch directory"
             )
         for e in epochs:
-            name = f"epoch-{e}"
+            name = epoch_dir_name(e)
             if name in applied_batches(view_path):
                 continue
             ch = batch_df.where(F.col("_epoch") == e).drop("_epoch")

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from database_clonev2_spark.io import FIXTURE_TABLES, load
+from database_clonev2_spark.pipeline import _buckets as bk
 from database_clonev2_spark.pipeline.clone import (
     align_columns,
     clone_database,
@@ -686,7 +687,7 @@ class TestMergeUpsertBucketed:
         def dying_manifest(*args, **kwargs):
             raise RuntimeError("simulated crash before commit point")
 
-        monkeypatch.setattr(merge_mod, "_write_commit_manifest", dying_manifest)
+        monkeypatch.setattr(bk, "_write_commit_manifest", dying_manifest)
         upd = spark.createDataFrame([(1, "X"), (2, "Y")], ["id", "name"])
         with pytest.raises(RuntimeError, match="before commit point"):
             merge_upsert_bucketed(spark, target, upd, ["id"], n_buckets=4)
@@ -1421,7 +1422,7 @@ class TestDeleteCrashWindows:
         )
         # every key in ONE bucket, plus a few elsewhere → the swap loop
         # moves one emptied bucket and >=1 rewritten bucket
-        bucketed = merge_mod._with_bucket(base, ["id"], 4)
+        bucketed = bk.with_bucket(base, ["id"], 4)
         b0 = [r["id"] for r in bucketed.where(f"{BUCKET_COL} = 0").collect()]
         others = [
             r["id"] for r in bucketed.where(f"{BUCKET_COL} = 1").collect()

@@ -2,11 +2,13 @@
 
 - ``_durable.write_json_atomic`` leaves the old JSON or the new JSON,
   never a torn file or a ``.tmp.*`` sibling, whichever step raises;
-- the bucketed-merge and join-view commits recover to exactly the
-  pre-state or the post-state from a crash at every rename/replace;
+- the bucketed-merge and join-view commits, both run by the bucketed
+  store's one ``_roll_forward``, recover to exactly the pre-state or the
+  post-state from a crash at every rename/replace;
 - reader-side join-view recovery honours merge's recovery lock;
 - every JSON state write and every rename outside ``_durable.py`` is a
-  named, reasoned exception (AST guard).
+  named, reasoned exception, and only ``_durable.py`` spells an
+  ``epoch-`` name (AST guards).
 
 The commit sequences are pure directory surgery, so marker files stand
 in for parquet bucket dirs.
@@ -29,6 +31,7 @@ from hypothesis import strategies as st
 
 from database_clonev2_spark import _durable
 from database_clonev2_spark._durable import applied_batches, write_json_atomic
+from database_clonev2_spark.pipeline import _buckets as bk
 from database_clonev2_spark.pipeline import joinview as jv
 from database_clonev2_spark.pipeline import merge as mg
 
@@ -195,11 +198,12 @@ def _join_snapshot(root: str) -> dict:
 
 def test_join_roll_forward_recovers_from_every_crash_position(tmp_path, monkeypatch):
     """Exhaustive crash-position sweep over the tri-store commit: kill
-    _roll_forward at EVERY rename step, then recover; the final state
+    the shared _roll_forward at EVERY rename step over a manifest in the
+    shape join views have always written, then recover; the final state
     must be identical regardless of where the crash landed."""
     ref_root = str(tmp_path / "ref")
     man = _build_join_root(ref_root)
-    jv._roll_forward(ref_root, man)
+    bk._roll_forward(ref_root, man)
     want = _join_snapshot(ref_root)
     assert want == {
         (s, b): ("new" if b in _JV_STAGED[s] else "old")
@@ -213,10 +217,10 @@ def test_join_roll_forward_recovers_from_every_crash_position(tmp_path, monkeypa
         root = str(tmp_path / f"crash{k}")
         man = _build_join_root(root)
         monkeypatch.setattr(
-            jv.os, "rename", _crash_on_call(os.rename, k, {"n": 0})
+            bk.os, "rename", _crash_on_call(os.rename, k, {"n": 0})
         )
         try:
-            jv._roll_forward(root, man)
+            bk._roll_forward(root, man)
             crashed = False
         except RuntimeError:
             crashed = True
@@ -224,7 +228,7 @@ def test_join_roll_forward_recovers_from_every_crash_position(tmp_path, monkeypa
             monkeypatch.undo()
         # recovery = replay the same manifest
         if crashed:
-            jv._roll_forward(root, man)
+            bk._roll_forward(root, man)
         assert _join_snapshot(root) == want, f"divergence after crash at rename {k}"
         assert Path(root, "_changes", "epoch-7", "marker").read_text() == "delta", k
         assert applied_batches(root) == [7], k
@@ -241,7 +245,7 @@ def test_join_reader_recovery_waits_for_the_recovery_lock(tmp_path):
     leaving every bucket dir and the manifest untouched."""
     root = str(tmp_path / "jv")
     _build_join_root(root, pid=_dead_pid())
-    lock = os.path.join(root, mg._RECOVERY_LOCK_FILE)
+    lock = os.path.join(root, bk._RECOVERY_LOCK_FILE)
     Path(lock).write_text(f"{os.getpid()}\nlive-holder\n")
     cp = os.path.join(root, "_commit.json")
     manifest_before = Path(cp).read_text()
@@ -331,7 +335,7 @@ def _merge_state(target: str) -> dict:
 
 
 def _commit(target: str, staging: str) -> None:
-    mg._commit_staged_buckets(
+    bk.commit_staged_buckets(
         target,
         _MG_TOKEN,
         staging,
@@ -351,7 +355,7 @@ def _count_calls(target: str, staging: str, monkeypatch) -> dict:
             counts[_name] += 1
             return _real(*a, **kw)
 
-        monkeypatch.setattr(mg.os, name, counting)
+        monkeypatch.setattr(bk.os, name, counting)
     _commit(target, staging)
     monkeypatch.undo()
     return counts
@@ -360,7 +364,7 @@ def _count_calls(target: str, staging: str, monkeypatch) -> dict:
 def test_merge_commit_recovers_from_every_crash_position(tmp_path, monkeypatch):
     """Exhaustive crash-position sweep over the single-store merge
     commit (the tri-store sibling is swept above): kill
-    _commit_staged_buckets at EVERY os.rename (bucket swaps, change-dir
+    commit_staged_buckets at EVERY os.rename (bucket swaps, change-dir
     publish) and EVERY os.replace (manifest publish, ledger append, meta
     write), recover via recover_pending_commit, and require exactly the
     pre-state or the post-state."""
@@ -385,7 +389,7 @@ def test_merge_commit_recovers_from_every_crash_position(tmp_path, monkeypatch):
             target = str(tmp_path / f"crash_{name}{k}.parquet")
             staging = _build_merge_target(target)
             monkeypatch.setattr(
-                mg.os, name, _crash_on_call(getattr(os, name), k, {"n": 0})
+                bk.os, name, _crash_on_call(getattr(os, name), k, {"n": 0})
             )
             try:
                 with pytest.raises(RuntimeError, match="crash"):
@@ -417,18 +421,12 @@ _LEASE = "quiesce lease: renamed inside _quiesce_fenced after its check; a sweep
 #: writers may json.dump, because their rename must happen inside the
 #: fence.
 ALLOWED = {
-    ("pipeline/merge.py", "_swap_write"): (_RENAME, "flat-layout directory swap"),
+    ("pipeline/_buckets.py", "swap_write"): (_RENAME, "flat-layout directory swap"),
     ("pipeline/merge.py", "rebucket_target"): (_RENAME, "whole-layout directory swap"),
-    ("pipeline/merge.py", "_roll_forward"): (_RENAME, "manifest-guarded bucket-dir swaps"),
-    ("pipeline/merge.py", "_publish_change_dir"): (_RENAME, "moves a staged change-epoch dir under _changes/"),
-    ("pipeline/merge.py", "merge_upsert_bucketed"): (_RENAME, _CREATION),
-    ("pipeline/merge.py", "apply_merge_changes"): (_RENAME, _CREATION),
-    ("pipeline/merge.py", "merge_additive_bucketed"): (_RENAME, _CREATION),
-    ("pipeline/merge.py", "request_quiesce"): ({"json.dump", "os.rename"}, _LEASE),
-    ("pipeline/merge.py", "_refresh_quiesce_marker"): ({"json.dump", "os.replace"}, _LEASE),
-    ("pipeline/joinview.py", "_roll_forward"): (_RENAME, "manifest-guarded tri-store bucket-dir swaps and change-dir publish"),
-    ("pipeline/joinview.py", "maintain_join_view"): (_RENAME, _CREATION),
-    ("pipeline/scd2.py", "_fold_one_epoch"): (_RENAME, _CREATION),
+    ("pipeline/_buckets.py", "_roll_forward"): (_RENAME, "manifest-guarded bucket-dir swaps and change-dir publish, for one store or named stores"),
+    ("pipeline/_buckets.py", "create_store"): (_RENAME, _CREATION),
+    ("pipeline/_buckets.py", "request_quiesce"): ({"json.dump", "os.rename"}, _LEASE),
+    ("pipeline/_buckets.py", "_refresh_quiesce_marker"): ({"json.dump", "os.replace"}, _LEASE),
 }
 
 
@@ -477,3 +475,23 @@ def test_state_writes_go_through_durable():
     )
     stale = sorted(set(ALLOWED) - set(hits))
     assert stale == [], f"allowlisted functions no longer rename: {stale}"
+
+
+def test_epoch_names_come_from_durable():
+    """Only ``_durable.epoch_dir_name`` spells an ``epoch-<id>`` name: an
+    f-string building one elsewhere skips its sanitising and drifts from
+    the name every feed reader parses."""
+    hits = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        if rel == "_durable.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.JoinedStr)
+                and node.values
+                and isinstance(node.values[0], ast.Constant)
+                and str(node.values[0].value).startswith("epoch-")
+            ):
+                hits.append(f"{rel}:{node.lineno}")
+    assert hits == [], f"build epoch names with _durable.epoch_dir_name: {hits}"

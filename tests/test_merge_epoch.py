@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from database_clonev2_spark._durable import applied_batches
+from database_clonev2_spark.pipeline import _buckets as bk
 from database_clonev2_spark.pipeline import merge as mg
 
 N = 8
@@ -38,7 +39,7 @@ def _bucket_of(spark, keys):
     rows = spark.createDataFrame([(k,) for k in keys], "k long")
     return {
         r["k"]: r[mg.BUCKET_COL]
-        for r in mg._with_bucket(rows, KEY, N).collect()
+        for r in bk.with_bucket(rows, KEY, N).collect()
     }
 
 
@@ -309,22 +310,22 @@ def test_replay_after_crashed_commit_is_already_applied(
     with pytest.raises(RuntimeError, match="crash"):
         run()
     monkeypatch.undo()
-    assert os.path.exists(mg._commit_path(target))
+    assert os.path.exists(bk._commit_path(target))
     assert 1 not in applied_batches(target)
 
     # the inodes each bucket dir must end with: roll-forward moves the
     # staged dirs in, and nothing may rewrite them after that
-    with open(mg._commit_path(target)) as fh:
+    with open(bk._commit_path(target)) as fh:
         man = json.load(fh)
     want = {b: os.stat(d).st_ino for b, d in _bucket_dirs(target).items()}
     for b, d in _bucket_dirs(man["staging"]).items():
         want[b] = os.stat(d).st_ino
 
-    monkeypatch.setattr(mg, "_stage_buckets", lambda *a: pytest.fail("re-staged"))
+    monkeypatch.setattr(mg, "stage_buckets", lambda *a: pytest.fail("re-staged"))
     res = run()
     monkeypatch.undo()
     assert res == {"applied": False, "batch_id": 1, "reason": "already_applied"}
     assert not glob.glob(f"{target}.__stage_*")
-    assert not os.path.exists(mg._commit_path(target))
+    assert not os.path.exists(bk._commit_path(target))
     assert {b: os.stat(d).st_ino for b, d in _bucket_dirs(target).items()} == want
     assert applied_batches(target) == [0, 1]

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from database_clonev2_spark.extensions import _segments as store
 from database_clonev2_spark.extensions import annindex as ai
 from database_clonev2_spark.io import load
+from database_clonev2_spark.pipeline import _buckets as bk
 
 K = 4
 
@@ -376,7 +377,7 @@ class TestReleaseLockUnderGuard:
         away, leaving exactly one lock."""
         import fcntl
 
-        from database_clonev2_spark.pipeline.merge import (
+        from database_clonev2_spark.pipeline._buckets import (
             _release_recovery_lock,
         )
 
@@ -441,7 +442,7 @@ class TestQuiesceFence:
 
         tgt = _bucketed_table(spark, tmp_path, "t", [(1, "a"), (2, "b")])
         held_polls = {"n": 0}
-        real_q = merge_mod._quiesce_requested
+        real_q = bk._quiesce_requested
 
         def counting(p):
             r = real_q(p)
@@ -449,7 +450,7 @@ class TestQuiesceFence:
                 held_polls["n"] += 1
             return r
 
-        monkeypatch.setattr(merge_mod, "_quiesce_requested", counting)
+        monkeypatch.setattr(bk, "_quiesce_requested", counting)
         merge_mod.request_quiesce(tgt)
         committed = threading.Event()
 
@@ -530,7 +531,7 @@ class TestQuiesceFence:
 
         from database_clonev2_spark.pipeline import merge as merge_mod
 
-        monkeypatch.setattr(merge_mod, "_QUIESCE_HEARTBEAT_S", 0.05)
+        monkeypatch.setattr(bk, "_QUIESCE_HEARTBEAT_S", 0.05)
         tgt = _bucketed_table(spark, tmp_path, "t", [(1, "a")])
         snap = merge_mod.read_database_snapshot(
             spark, {"t": tgt}, materialize=False, quiesce=True

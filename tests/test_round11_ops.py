@@ -37,6 +37,7 @@ from database_clonev2_spark.extensions import _segments as store
 from database_clonev2_spark.extensions import annindex as ai
 from database_clonev2_spark.extensions import minhashindex as mi
 from database_clonev2_spark.extensions import shingleindex as si
+from database_clonev2_spark.pipeline import _buckets as bk
 
 
 def _docs(spark, lo, hi):
@@ -665,7 +666,7 @@ class TestQuiesceExpiryLoud:
 
         src, rep = str(tmp_path / "src"), str(tmp_path / "rep")
         self._seed_replica(spark, src, rep)
-        monkeypatch.setattr(mg, "_QUIESCE_MAX_HOLD_S", 0.05)
+        monkeypatch.setattr(bk, "_QUIESCE_MAX_HOLD_S", 0.05)
         snap = mg.read_database_snapshot(
             spark, {"t": rep}, materialize=False, quiesce=True
         )
@@ -673,7 +674,7 @@ class TestQuiesceExpiryLoud:
         time.sleep(0.2)  # outlive the shrunken deadline
         res = snap["release_quiesce"]()
         assert res == {"expired": True, "torn": False}
-        assert not os.path.exists(mg._quiesce_path(rep))
+        assert not os.path.exists(bk._quiesce_path(rep))
 
     def test_expired_hold_with_commit_raises(self, spark, tmp_path, monkeypatch):
         """…and the torn half: protection lapsed, the marker swept, a
@@ -683,7 +684,7 @@ class TestQuiesceExpiryLoud:
 
         src, rep = str(tmp_path / "src"), str(tmp_path / "rep")
         self._seed_replica(spark, src, rep)
-        monkeypatch.setattr(mg, "_QUIESCE_MAX_HOLD_S", 0.05)
+        monkeypatch.setattr(bk, "_QUIESCE_MAX_HOLD_S", 0.05)
         snap = mg.read_database_snapshot(
             spark, {"t": rep}, materialize=False, quiesce=True
         )
@@ -691,7 +692,7 @@ class TestQuiesceExpiryLoud:
         # simulate the age sweep collecting the no-longer-beating marker,
         # then a resumed writer committing a new epoch
         try:
-            os.remove(mg._quiesce_path(rep))
+            os.remove(bk._quiesce_path(rep))
         except FileNotFoundError:
             pass
         batch = spark.createDataFrame(
@@ -705,7 +706,7 @@ class TestQuiesceExpiryLoud:
         with pytest.raises(RuntimeError, match=r"\[QUIESCE_EXPIRED\]"):
             snap["release_quiesce"]()
         # cleanup still happened before the raise
-        assert not os.path.exists(mg._quiesce_path(rep))
+        assert not os.path.exists(bk._quiesce_path(rep))
 
     def test_unexpired_release_reports_clean(self, spark, tmp_path):
         from database_clonev2_spark.pipeline import merge as mg

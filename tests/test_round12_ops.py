@@ -41,6 +41,7 @@ from database_clonev2_spark.extensions import _segments as store
 from database_clonev2_spark.extensions import annindex as ai
 from database_clonev2_spark.extensions import minhashindex as mi
 from database_clonev2_spark.extensions import shingleindex as si
+from database_clonev2_spark.pipeline import _buckets as bk
 
 
 def _docs(spark, lo, hi):
@@ -432,19 +433,19 @@ class TestQuiesceRound12:
         mg.request_quiesce(rep)
         try:
             baseline = mg._commit_state({"t": rep})
-            with open(mg._quiesce_path(rep)) as fh:
+            with open(bk._quiesce_path(rep)) as fh:
                 ts0 = json.load(fh)["wall_ts"]
             time.sleep(0.05)
-            mg._refresh_quiesce_marker(rep)
+            bk._refresh_quiesce_marker(rep)
             assert mg._commit_state({"t": rep}) == baseline
             assert not [e for e in os.listdir(rep) if ".tmp." in e]
-            with open(mg._quiesce_path(rep)) as fh:
+            with open(bk._quiesce_path(rep)) as fh:
                 assert json.load(fh)["wall_ts"] > ts0
         finally:
             mg.release_quiesce(rep)
         # a swept marker is not resurrected by the heartbeat refresh
-        mg._refresh_quiesce_marker(rep)
-        assert not os.path.exists(mg._quiesce_path(rep))
+        bk._refresh_quiesce_marker(rep)
+        assert not os.path.exists(bk._quiesce_path(rep))
 
     def test_interrupted_heartbeat_never_tears_the_marker(
         self, spark, tmp_path, monkeypatch
@@ -462,7 +463,7 @@ class TestQuiesceRound12:
         self._seed_replica(spark, src, rep)
         mg.request_quiesce(rep)
         try:
-            with open(mg._quiesce_path(rep)) as fh:
+            with open(bk._quiesce_path(rep)) as fh:
                 before = json.load(fh)
 
             def _dies_midwrite(obj, fh, *a, **kw):
@@ -471,12 +472,12 @@ class TestQuiesceRound12:
 
             monkeypatch.setattr(mg.json, "dump", _dies_midwrite)
             with pytest.raises(OSError):
-                mg._refresh_quiesce_marker(rep)
+                bk._refresh_quiesce_marker(rep)
             monkeypatch.undo()
             # the live marker is untouched, parseable, and still HELD
-            with open(mg._quiesce_path(rep)) as fh:
+            with open(bk._quiesce_path(rep)) as fh:
                 assert json.load(fh) == before
-            assert mg._quiesce_requested(rep) is True
+            assert bk._quiesce_requested(rep) is True
             assert not [e for e in os.listdir(rep) if ".tmp." in e]
         finally:
             mg.release_quiesce(rep)
@@ -493,15 +494,15 @@ class TestQuiesceRound12:
 
         src, rep = str(tmp_path / "src"), str(tmp_path / "rep")
         self._seed_replica(spark, src, rep)
-        monkeypatch.setattr(mg, "_QUIESCE_HEARTBEAT_S", 0.02)
-        monkeypatch.setattr(mg, "_QUIESCE_MAX_HOLD_S", 0.3)
+        monkeypatch.setattr(bk, "_QUIESCE_HEARTBEAT_S", 0.02)
+        monkeypatch.setattr(bk, "_QUIESCE_MAX_HOLD_S", 0.3)
         snap = mg.read_database_snapshot(
             spark, {"t": rep}, materialize=False, quiesce=True
         )
         time.sleep(0.6)  # several ticks, then outlive the deadline
         res = snap["release_quiesce"]()
         assert res == {"expired": True, "torn": False}
-        assert not os.path.exists(mg._quiesce_path(rep))
+        assert not os.path.exists(bk._quiesce_path(rep))
 
     def test_release_is_idempotent_clean(self, spark, tmp_path, monkeypatch):
         """ADVICE r11 low: a second release must replay the first
@@ -511,7 +512,7 @@ class TestQuiesceRound12:
 
         src, rep = str(tmp_path / "src"), str(tmp_path / "rep")
         self._seed_replica(spark, src, rep)
-        monkeypatch.setattr(mg, "_QUIESCE_MAX_HOLD_S", 0.05)
+        monkeypatch.setattr(bk, "_QUIESCE_MAX_HOLD_S", 0.05)
         snap = mg.read_database_snapshot(
             spark, {"t": rep}, materialize=False, quiesce=True
         )
@@ -541,13 +542,13 @@ class TestQuiesceRound12:
 
         src, rep = str(tmp_path / "src"), str(tmp_path / "rep")
         self._seed_replica(spark, src, rep)
-        monkeypatch.setattr(mg, "_QUIESCE_MAX_HOLD_S", 0.05)
+        monkeypatch.setattr(bk, "_QUIESCE_MAX_HOLD_S", 0.05)
         snap = mg.read_database_snapshot(
             spark, {"t": rep}, materialize=False, quiesce=True
         )
         time.sleep(0.2)
         try:
-            os.remove(mg._quiesce_path(rep))
+            os.remove(bk._quiesce_path(rep))
         except FileNotFoundError:
             pass
         # a NON-ledgered commit: divergence-repair copies bucket 0
@@ -562,13 +563,13 @@ class TestQuiesceRound12:
 
         src, rep = str(tmp_path / "src"), str(tmp_path / "rep")
         self._seed_replica(spark, src, rep)
-        monkeypatch.setattr(mg, "_QUIESCE_MAX_HOLD_S", 0.05)
+        monkeypatch.setattr(bk, "_QUIESCE_MAX_HOLD_S", 0.05)
         snap = mg.read_database_snapshot(
             spark, {"t": rep}, materialize=False, quiesce=True
         )
         time.sleep(0.2)
         try:
-            os.remove(mg._quiesce_path(rep))
+            os.remove(bk._quiesce_path(rep))
         except FileNotFoundError:
             pass
         batch = spark.createDataFrame(

@@ -33,6 +33,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from database_clonev2_spark.extensions import annindex as ai
+from database_clonev2_spark.pipeline import _buckets as bk
 
 
 def _vecs(spark, lo, hi, dim=6):
@@ -265,7 +266,7 @@ class TestReleaseLatchesBeforeRemoval:
 
         src, rep = str(tmp_path / "src"), str(tmp_path / "rep")
         self._seed_replica(spark, src, rep)
-        monkeypatch.setattr(mg, "_QUIESCE_MAX_HOLD_S", 0.05)
+        monkeypatch.setattr(bk, "_QUIESCE_MAX_HOLD_S", 0.05)
         snap = mg.read_database_snapshot(
             spark, {"t": rep}, materialize=False, quiesce=True
         )
@@ -284,7 +285,7 @@ class TestReleaseLatchesBeforeRemoval:
         # the age sweep clears it — simulate by removing it and
         # committing, exactly the world a retried release re-enters
         try:
-            os.remove(mg._quiesce_path(rep))
+            os.remove(bk._quiesce_path(rep))
         except FileNotFoundError:
             pass
         batch = spark.createDataFrame(
@@ -297,7 +298,7 @@ class TestReleaseLatchesBeforeRemoval:
         mg.sync_replica_from_changes(spark, rep, src, ["k"], 2)
         res = snap["release_quiesce"]()
         assert res == {"expired": True, "torn": False}
-        assert not os.path.exists(mg._quiesce_path(rep))
+        assert not os.path.exists(bk._quiesce_path(rep))
 
 
 # ---------------------------------------------------------------------------

@@ -2418,8 +2418,8 @@ def test_stream_scd2_maintain_folds_epochs_in_order(spark, tmp_path):
 def test_verify_replica_localizes_divergence(spark, tmp_path):
     """Round 7: per-bucket checksum verification — a synced replica
     matches; corrupting one key diverges EXACTLY its bucket."""
+    from database_clonev2_spark.pipeline._buckets import with_bucket
     from database_clonev2_spark.pipeline.merge import (
-        _with_bucket,
         merge_delete_bucketed,
         merge_upsert_bucketed,
         sync_replica_from_changes,
@@ -2443,7 +2443,7 @@ def test_verify_replica_localizes_divergence(spark, tmp_path):
         spark, rep, spark.createDataFrame([(victim,)], "id long"), ["id"],
         n_buckets=4,
     )
-    want_bucket = _with_bucket(
+    want_bucket = with_bucket(
         spark.createDataFrame([(victim,)], "id long"), ["id"], 4
     ).first()["_bucket"]
     res = verify_replica(spark, src, rep)
@@ -2626,12 +2626,15 @@ def test_feed_stream_starts_before_first_epoch(spark, tmp_path):
 
 def test_scd2_history_compacts_with_bucketed_compaction(spark, tmp_path):
     """Round 7 loop-closer: the SCD-2 history is a standard bucketed
-    store, so per-bucket compaction applies as-is — epoch folds fragment
+    store, so per-bucket compaction applies as-is — appends fragment
     files, compaction re-bins them, content and layout survive."""
     import glob
 
     from database_clonev2_spark.pipeline.compact import compact_bucketed_target
-    from database_clonev2_spark.pipeline.merge import merge_upsert_bucketed
+    from database_clonev2_spark.pipeline.merge import (
+        incremental_append,
+        merge_upsert_bucketed,
+    )
     from database_clonev2_spark.pipeline.scd2 import (
         fold_changes_scd2,
         read_scd2_history,
@@ -2646,6 +2649,19 @@ def test_scd2_history_compacts_with_bucketed_compaction(spark, tmp_path):
             n_buckets=2, order_col="ver", change_feed=True, batch_id=e,
         )
     fold_changes_scd2(spark, hist, src, ["id"], n_buckets=2)
+    # a fold writes one file per touched bucket, so fragment the history
+    # the way appends do: bucket-aware incremental_append batches of
+    # open versions of keys the feed never touches (disjoint ids)
+    for i in range(3):
+        incremental_append(
+            spark,
+            spark.createDataFrame(
+                [(100 + 10 * i + j, f"a{i}{j}", 0, 0, None) for j in range(4)],
+                "id long, v string, ver long, _from_epoch long, _to_epoch long",
+            ),
+            hist,
+            "id",
+        )
     before = sorted(
         tuple(r) for r in read_scd2_history(spark, hist).collect()
     )

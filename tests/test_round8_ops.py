@@ -527,10 +527,8 @@ class TestDatabaseSnapshot:
         import json as _json
         import os as _os
 
-        from database_clonev2_spark.pipeline.merge import (
-            _commit_path,
-            read_database_snapshot,
-        )
+        from database_clonev2_spark.pipeline._buckets import _commit_path
+        from database_clonev2_spark.pipeline.merge import read_database_snapshot
 
         paths = self._database(spark, tmp_path)
         reps = {t: rep for t, (_s, rep) in paths.items()}

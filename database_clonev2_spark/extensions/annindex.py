@@ -846,11 +846,9 @@ def stream_ann_ingest(
     ``max_segments`` flows to every append, so micro-batch cadence
     auto-compacts instead of accreting ids segments and cell-partition
     file sets forever."""
-    import hashlib
+    from ..streaming.sync import checkpoint_namespace, start_batches
 
-    ck_ns = hashlib.md5(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:12]
+    ck_ns = checkpoint_namespace(checkpoint_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -863,12 +861,7 @@ def stream_ann_ingest(
             max_segments=max_segments,
         )
 
-    writer = batch_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(batch_stream, apply_batch, checkpoint_dir, available_now)
 
 
 ANN_BUILD_MODS = (1, 2, 3)  # vec_id % 4 slices that seed the index at build

@@ -403,11 +403,9 @@ def stream_dedup_incremental(
     every append, so at micro-batch cadence the index auto-compacts
     instead of accreting one segment per batch forever — per-append
     cost stays O(batch + bounded segments), not O(#batches ever)."""
-    import hashlib
+    from ..streaming.sync import checkpoint_namespace, start_batches
 
-    ck_ns = hashlib.md5(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:12]
+    ck_ns = checkpoint_namespace(checkpoint_dir)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -453,12 +451,7 @@ def stream_dedup_incremental(
                 max_segments=max_segments,
             )
 
-    writer = batch_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(batch_stream, apply_batch, checkpoint_dir, available_now)
 
 
 # --- registered driver query -------------------------------------------------

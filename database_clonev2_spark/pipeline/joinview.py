@@ -77,7 +77,9 @@ def _meta_path(root: str) -> str:
     return os.path.join(root, _META_FILE)
 
 
-def _read_meta(root: str) -> dict:
+def read_join_meta(root: str) -> dict:
+    """The view's meta sidecar: pinned n_buckets, key columns and the
+    three stores' schemas (raises if the view does not exist yet)."""
     with open(_meta_path(root)) as fh:
         return json.load(fh)
 
@@ -93,7 +95,9 @@ def recover_pending_join_commit(root: str, only_if_stale: bool = False) -> dict:
     return recover_pending(root, only_if_stale) or {}
 
 
-def _store_schema(meta: dict, store: str) -> StructType:
+def join_store_schema(meta: dict, store: str) -> StructType:
+    """The pinned schema of ``store`` ('left'/'right'/'view'), layout
+    column included."""
     return StructType.fromJson(json.loads(meta[f"{store}_schema"]))
 
 
@@ -103,7 +107,7 @@ def _read_store(
     """Bucket-partitioned store read with the PINNED schema (explicit
     schema keeps empty/missing buckets readable and makes reads
     independent of any single parquet footer)."""
-    return spark.read.schema(_store_schema(meta, store)).parquet(
+    return spark.read.schema(join_store_schema(meta, store)).parquet(
         os.path.join(root, store)
     )
 
@@ -204,17 +208,17 @@ def maintain_join_view(
     recover_pending_join_commit(root)
     if batch_id is not None and batch_id in applied_batches(root):
         return {"applied": False, "batch_id": batch_id, "reason": "already_applied"}
-    meta = _read_meta(root)
+    meta = read_join_meta(root)
     if meta["n_buckets"] != n_buckets or meta["key_cols"] != list(key_cols):
         raise ValueError(
             f"layout mismatch: view has n_buckets={meta['n_buckets']} "
             f"key_cols={meta['key_cols']}, caller passed {n_buckets}/{list(key_cols)}"
         )
 
-    empty_left = spark.createDataFrame([], _store_schema(meta, "left")).drop(
+    empty_left = spark.createDataFrame([], join_store_schema(meta, "left")).drop(
         BUCKET_COL
     )
-    empty_right = spark.createDataFrame([], _store_schema(meta, "right")).drop(
+    empty_right = spark.createDataFrame([], join_store_schema(meta, "right")).drop(
         BUCKET_COL
     )
     da = batch_left if batch_left is not None else empty_left
@@ -252,7 +256,7 @@ def maintain_join_view(
             BUCKET_COL
         ).join(F.broadcast(db.drop(BUCKET_COL)), key_cols)
         view_schema_cols = [
-            f.name for f in _store_schema(meta, "view") if f.name != BUCKET_COL
+            f.name for f in join_store_schema(meta, "view") if f.name != BUCKET_COL
         ]
         dv = with_bucket(
             term1.select(*view_schema_cols).unionByName(
@@ -307,7 +311,7 @@ def read_join_view(spark: SparkSession, root: str) -> DataFrame:
     """The maintained view as its logical table (no layout column).
     Reader-side recovery only fires when the recorded writer is dead."""
     recover_pending_join_commit(root, only_if_stale=True)
-    meta = _read_meta(root)
+    meta = read_join_meta(root)
     return _read_store(spark, root, meta, "view").drop(BUCKET_COL)
 
 
@@ -318,7 +322,6 @@ def read_join_changes(
     Schema is the pinned view schema (layout column dropped), so empty
     change sets read cleanly."""
     recover_pending_join_commit(root, only_if_stale=True)
-    schema = StructType(
-        [f for f in _store_schema(_read_meta(root), "view") if f.name != BUCKET_COL]
-    )
+    view_schema = join_store_schema(read_join_meta(root), "view")
+    schema = StructType([f for f in view_schema if f.name != BUCKET_COL])
     return read_changes(spark, root, epochs, schema)

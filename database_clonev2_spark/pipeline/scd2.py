@@ -95,7 +95,7 @@ def fold_changes_scd2(
         e = epoch_number(name)
         ch = read_merge_changes(spark, target_path, [name])
         results.append(
-            _fold_one_epoch(
+            fold_scd2_epoch(
                 spark, history_path, ch, key_cols, e, name, n_buckets,
                 allow_evolution=allow_evolution,
             )
@@ -103,7 +103,7 @@ def fold_changes_scd2(
     return results
 
 
-def _fold_one_epoch(
+def fold_scd2_epoch(
     spark: SparkSession,
     history_path: str,
     ch: DataFrame,
@@ -113,6 +113,10 @@ def _fold_one_epoch(
     n_buckets: int,
     allow_evolution: bool = False,
 ) -> dict:
+    """Fold ONE feed epoch's change rows ``ch`` (``change_type`` plus
+    payload) into the history as epoch ``epoch_num``, committed under
+    the ledger id ``epoch_name`` — the body of ``fold_changes_scd2`` and
+    of the streaming SCD-2 face."""
     payload_cols = [c for c in ch.columns if c != "change_type"]
     opens = F.col("change_type").isin("insert", "update_postimage")
     closes = F.col("change_type").isin("update_preimage", "delete")

@@ -32,12 +32,16 @@ target once and every later batch takes the bucketed path.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .._durable import epoch_dir_name
-from ..pipeline._buckets import read_bucket_meta, swap_write
+from .._durable import applied_batches, epoch_dir_name
+from ..pipeline._buckets import BUCKET_COL, read_bucket_meta, swap_write
 from ..pipeline.merge import (
     is_bucketed,
     merge_additive_bucketed,
@@ -69,6 +73,82 @@ def _schema_evolved_error(missing: list[str]) -> ValueError:
     )
 
 
+def start_batches(
+    stream_df: DataFrame, apply, checkpoint_dir: str, available_now: bool
+):
+    """Start ``stream_df`` as a foreachBatch query — the one driver under
+    every streaming face. ``apply(batch_df, batch_id)`` runs once per
+    micro-batch; the query's offsets and commits live under
+    ``checkpoint_dir`` (a restart resumes there and re-delivers at most
+    the uncommitted batch); ``available_now`` drains what the source
+    holds and stops instead of running continuously. Returns the
+    running ``StreamingQuery``. The driver adds no Spark action: each
+    face's ``apply`` owns its own empty-batch skip and exactly-once
+    mechanism."""
+    writer = stream_df.writeStream.foreachBatch(apply).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def checkpoint_namespace(checkpoint_dir: str) -> str:
+    """A stable 12-hex tag of ``checkpoint_dir``'s absolute path: faces
+    whose ledger lives in a store SHARED across pipelines (the indexes)
+    prefix their batch ids with it, so another pipeline — or a fresh
+    checkpoint — over the same store never collides with this stream's
+    batch 0 and silently drops its append."""
+    return hashlib.md5(os.path.abspath(checkpoint_dir).encode()).hexdigest()[:12]
+
+
+def _latest_per_key(
+    df: DataFrame, key_cols: list[str], order_col: str | None
+) -> DataFrame:
+    """One row per key: the row with the greatest ``order_col``
+    (``max_by``), or without one the greatest non-key struct — a
+    deterministic pick, so a replayed batch picks the same rows."""
+    non_key = [c for c in df.columns if c not in key_cols]
+    picker = (
+        F.max_by(F.struct(*non_key), F.col(order_col))
+        if order_col is not None
+        else F.max(F.struct(*non_key))
+    )
+    return (
+        df.groupBy(*key_cols)
+        .agg(picker.alias("_s"))
+        .select(*key_cols, *[F.col(f"_s.{c}").alias(c) for c in non_key])
+    )
+
+
+def _require_epoch(change_stream: DataFrame, face: str) -> None:
+    if "_epoch" not in change_stream.columns:
+        raise ValueError(
+            f"{face} needs the _epoch column — read the feed through "
+            "read_merge_changes_stream"
+        )
+
+
+def _fold_epochs(batch_df: DataFrame, ledger_root: str, fold) -> None:
+    """Split a catch-up micro-batch back into its feed epochs and call
+    ``fold(changes, epoch_num, epoch_name)`` for each one ``ledger_root``
+    has not applied yet, in epoch order — for folds that do not commute
+    (each references the state the previous epoch left). The probe is
+    one distinct over the tiny ``_epoch`` column; a NULL epoch (a
+    non-numeric epoch dir) cannot be ordered and fails loud."""
+    epochs = [r["_epoch"] for r in batch_df.select("_epoch").distinct().collect()]
+    if None in epochs:
+        raise ValueError(
+            "epoch-ordered folds need numeric epoch ids; the feed carries a "
+            "non-numeric epoch directory"
+        )
+    for e in sorted(epochs):
+        name = epoch_dir_name(e)
+        if name in applied_batches(ledger_root):
+            continue
+        fold(batch_df.where(F.col("_epoch") == e).drop("_epoch"), e, name)
+
+
 def stream_merge_into(
     stream_df: DataFrame,
     target_path: str,
@@ -97,25 +177,14 @@ def stream_merge_into(
     target's ``_changes/`` (see merge_upsert_bucketed's change-feed
     contract) — the streamed clone becomes a change SOURCE downstream
     incremental views can tail with the same epoch ids."""
-    from pyspark.sql import functions as F
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         _merge_batch(
-            batch_df,
-            target_path,
-            key_cols,
-            order_col,
-            n_buckets,
-            change_feed=change_feed,
-            batch_id=batch_id,
+            batch_df, target_path, key_cols, order_col, n_buckets,
+            change_feed=change_feed, batch_id=batch_id,
         )
 
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream_df, apply_batch, checkpoint_dir, available_now)
 
 
 def _merge_batch(
@@ -129,22 +198,10 @@ def _merge_batch(
 ) -> None:
     """One micro-batch's merge — the foreachBatch body of
     ``stream_merge_into``, shared with the validated sink."""
-    from pyspark.sql import functions as F
-
     if batch_df.isEmpty():
         return
     spark = batch_df.sparkSession
-    non_key = [c for c in batch_df.columns if c not in key_cols]
-    picker = (
-        F.max_by(F.struct(*non_key), F.col(order_col))
-        if order_col is not None
-        else F.max(F.struct(*non_key))
-    )
-    deduped = (
-        batch_df.groupBy(*key_cols)
-        .agg(picker.alias("_s"))
-        .select(*key_cols, *[F.col(f"_s.{c}").alias(c) for c in non_key])
-    )
+    deduped = _latest_per_key(batch_df, key_cols, order_col)
     if not os.path.exists(target_path) or is_bucketed(target_path):
         # scale path: create-or-merge a bucketed target; only the
         # touched bucket partitions are read and rewritten. max_by
@@ -186,11 +243,8 @@ def _merge_batch(
             # version-aware merge: target rows compete on order_col so a
             # late batch with an older version cannot regress the target
             target = spark.read.parquet(target_path)
-            combined = target.unionByName(deduped)
-            merged = (
-                combined.groupBy(*key_cols)
-                .agg(F.max_by(F.struct(*non_key), F.col(order_col)).alias("_s"))
-                .select(*key_cols, *[F.col(f"_s.{c}").alias(c) for c in non_key])
+            merged = _latest_per_key(
+                target.unionByName(deduped), key_cols, order_col
             )
             swap_write(spark, merged, target_path)
     finally:
@@ -230,7 +284,6 @@ def stream_merge_validated(
     recursive listing). ``change_feed`` (round 7): as for stream_merge_into —
     the gated clone publishes its CDC log too, and only CLEAN rows ever
     reach the feed (quarantined rows changed nothing downstream)."""
-    from pyspark.sql import functions as F
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -256,12 +309,7 @@ def stream_merge_validated(
             change_feed=change_feed, batch_id=batch_id,
         )
 
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream_df, apply_batch, checkpoint_dir, available_now)
 
 
 def read_quarantine(spark, quarantine_path: str):
@@ -309,12 +357,7 @@ def stream_append_jdbc(
             return
         plan.write(batch_df)
 
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream_df, apply_batch, checkpoint_dir, available_now)
 
 
 def stream_merge_jdbc(
@@ -366,21 +409,10 @@ def stream_merge_jdbc(
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        from pyspark.sql import functions as F
-
         spark = batch_df.sparkSession
         non_key = [c for c in batch_df.columns if c not in key_cols]
         if non_key:
-            picker = (
-                F.max_by(F.struct(*non_key), F.col(order_col))
-                if order_col is not None
-                else F.max(F.struct(*non_key))
-            )
-            deduped = (
-                batch_df.groupBy(*key_cols)
-                .agg(picker.alias("_s"))
-                .select(*key_cols, *[F.col(f"_s.{c}").alias(c) for c in non_key])
-            )
+            deduped = _latest_per_key(batch_df, key_cols, order_col)
         else:
             # key-only table (pure link table): no payload to pick, no
             # MATCHED arm to emit — MERGE becomes insert-if-absent
@@ -423,12 +455,7 @@ def stream_merge_jdbc(
         if errors:  # if/raise, not assert: must fail the batch under -O too
             raise RuntimeError(f"merge statement failed: {errors}")
 
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream_df, apply_batch, checkpoint_dir, available_now)
 
 
 def stream_agg_maintain(
@@ -494,12 +521,7 @@ def stream_agg_maintain(
             hist_cols=hist_cols,
         )
 
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream_df, apply_batch, checkpoint_dir, available_now)
 
 
 def stream_join_maintain(
@@ -521,31 +543,36 @@ def stream_join_maintain(
     run ONE stream per view — for two live sides, union-tag the sources
     into a single stream and split inside a custom foreachBatch instead
     of running two concurrent queries against the same root."""
-    from ..pipeline.joinview import _read_meta, maintain_join_view
+    from ..pipeline.joinview import read_join_meta
 
     if side not in ("left", "right"):
         raise ValueError(f"side must be 'left' or 'right', got {side!r}")
-    n_buckets = _read_meta(root)["n_buckets"]  # view must exist already
+    n_buckets = read_join_meta(root)["n_buckets"]  # view must exist already
+    apply_batch = _join_batches(
+        root, key_cols, n_buckets,
+        lambda batch_df: (batch_df, None) if side == "left" else (None, batch_df),
+    )
+    return start_batches(stream_df, apply_batch, checkpoint_dir, available_now)
+
+
+def _join_batches(root: str, key_cols: list[str], n_buckets: int, split):
+    """The one foreachBatch body of both join faces: ``split(batch_df)``
+    returns the micro-batch's (left, right) rows, either side None, and
+    the pair folds as ONE ``maintain_join_view`` call under the epoch's
+    ledger id."""
+    from ..pipeline.joinview import maintain_join_view
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        left, right = split(batch_df)
         maintain_join_view(
-            batch_df.sparkSession,
-            root,
-            key_cols,
-            batch_left=batch_df if side == "left" else None,
-            batch_right=batch_df if side == "right" else None,
-            n_buckets=n_buckets,
-            batch_id=batch_id,
+            batch_df.sparkSession, root, key_cols,
+            batch_left=left, batch_right=right,
+            n_buckets=n_buckets, batch_id=batch_id,
         )
 
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return apply_batch
 
 
 def stream_join_maintain_tagged(
@@ -568,38 +595,23 @@ def stream_join_maintain_tagged(
     pinned left schema, right columns = pinned right schema; rows are
     projected by tag, so a left-tagged row's right-only columns are
     ignored (and vice versa)."""
-    from ..pipeline.joinview import _read_meta, _store_schema, maintain_join_view
+    from ..pipeline.joinview import join_store_schema, read_join_meta
 
-    meta = _read_meta(root)  # view must exist already
-    from ..pipeline.merge import BUCKET_COL
+    meta = read_join_meta(root)  # view must exist already
+    cols = {
+        s: [f.name for f in join_store_schema(meta, s) if f.name != BUCKET_COL]
+        for s in ("left", "right")
+    }
 
-    left_cols = [f.name for f in _store_schema(meta, "left") if f.name != BUCKET_COL]
-    right_cols = [f.name for f in _store_schema(meta, "right") if f.name != BUCKET_COL]
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        if batch_df.isEmpty():
-            return
+    def split(batch_df: DataFrame):
         batch_df = batch_df.localCheckpoint()  # split reads one evaluation
-        maintain_join_view(
-            batch_df.sparkSession,
-            root,
-            key_cols,
-            batch_left=batch_df.where(F.col(side_col) == "left").select(*left_cols),
-            batch_right=batch_df.where(F.col(side_col) == "right").select(
-                *right_cols
-            ),
-            n_buckets=meta["n_buckets"],
-            batch_id=batch_id,
+        return tuple(
+            batch_df.where(F.col(side_col) == s).select(*cols[s])
+            for s in ("left", "right")
         )
 
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    apply_batch = _join_batches(root, key_cols, meta["n_buckets"], split)
+    return start_batches(stream_df, apply_batch, checkpoint_dir, available_now)
 
 
 def stream_apply_cdc(
@@ -667,8 +679,6 @@ def stream_apply_cdc(
     atomically with the evolving epoch's publish) — the restart is then
     merely harmless. Without ``source_path`` the guard is off and the
     operator owns the restart discipline."""
-    from pyspark.sql import functions as F
-
     from ..pipeline.merge import apply_merge_changes
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -676,38 +686,18 @@ def stream_apply_cdc(
             # in-flight evolution guard (docstring): fail BEFORE anything
             # commits so the checkpoint never advances past files whose
             # evolved columns this stream's pinned schema would drop
-            from ..pipeline.merge import BUCKET_COL
-
             meta = read_bucket_meta(source_path)
             if meta.get("schema_json"):
-                import json as _json
-
-                from pyspark.sql import types as T
-
-                src_cols = {
-                    f.name
-                    for f in T.StructType.fromJson(
-                        _json.loads(meta["schema_json"])
-                    )
-                }
-                src_cols.discard(BUCKET_COL)
-                missing = sorted(
-                    src_cols - set(batch_df.columns)
-                )
+                schema = T.StructType.fromJson(json.loads(meta["schema_json"]))
+                src_cols = {f.name for f in schema} - {BUCKET_COL}
+                missing = sorted(src_cols - set(batch_df.columns))
                 if missing:
                     raise _schema_evolved_error(missing)
         if batch_df.isEmpty():
             return
         live = batch_df.where(F.col("change_type") != "update_preimage")
         if order_col is not None:
-            non_key = [c for c in live.columns if c not in key_cols]
-            live = (
-                live.groupBy(*key_cols)
-                .agg(F.max_by(F.struct(*non_key), F.col(order_col)).alias("_s"))
-                .select(
-                    *key_cols, *[F.col(f"_s.{c}").alias(c) for c in non_key]
-                )
-            )
+            live = _latest_per_key(live, key_cols, order_col)
             if drop_order_col:
                 live = live.drop(order_col)
         apply_merge_changes(
@@ -720,12 +710,7 @@ def stream_apply_cdc(
             allow_evolution=allow_evolution,
         )
 
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(stream_df, apply_batch, checkpoint_dir, available_now)
 
 
 def supervise_apply_cdc(
@@ -821,45 +806,22 @@ def stream_scd2_maintain(
     per epoch). The per-batch epoch probe is a distinct over the tiny
     ``_epoch`` column; a NULL epoch (non-numeric id) fails loud, same
     as the batch fold."""
-    from pyspark.sql import functions as F
+    from ..pipeline.scd2 import fold_scd2_epoch
 
-    from ..pipeline.scd2 import _fold_one_epoch
-    from ..pipeline.merge import applied_batches
-
-    if "_epoch" not in change_stream.columns:
-        raise ValueError(
-            "stream_scd2_maintain needs the _epoch column — read the feed "
-            "through read_merge_changes_stream"
-        )
+    _require_epoch(change_stream, "stream_scd2_maintain")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        epochs = sorted(
-            r["_epoch"]
-            for r in batch_df.select("_epoch").distinct().collect()
-        )
-        if epochs and epochs[0] is None:
-            raise ValueError(
-                "SCD-2 folds need numeric epoch ids; the feed carries a "
-                "non-numeric epoch directory"
-            )
-        for e in epochs:
-            name = epoch_dir_name(e)
-            if name in applied_batches(history_path):
-                continue
-            ch = batch_df.where(F.col("_epoch") == e).drop("_epoch")
-            _fold_one_epoch(
+        _fold_epochs(
+            batch_df, history_path,
+            lambda ch, e, name: fold_scd2_epoch(
                 batch_df.sparkSession, history_path, ch, key_cols,
                 e, name, n_buckets,
-            )
+            ),
+        )
 
-    writer = change_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(change_stream, apply_batch, checkpoint_dir, available_now)
 
 
 def stream_join_view_cdc(
@@ -881,43 +843,20 @@ def stream_join_view_cdc(
     split back into them and folded in epoch order, each through the
     fold's own two-step exactly-once discipline (a replayed micro-batch
     no-ops per epoch via the view's ledger marker)."""
-    from pyspark.sql import functions as F
-
     from ..pipeline.joinview_cdc import maintain_join_view_from_changes
-    from ..pipeline.merge import applied_batches
 
-    if "_epoch" not in change_stream.columns:
-        raise ValueError(
-            "stream_join_view_cdc needs the _epoch column — read the feed "
-            "through read_merge_changes_stream"
-        )
+    _require_epoch(change_stream, "stream_join_view_cdc")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        epochs = sorted(
-            r["_epoch"]
-            for r in batch_df.select("_epoch").distinct().collect()
-        )
-        if epochs and epochs[0] is None:
-            raise ValueError(
-                "CDC join-view folds need numeric epoch ids; the feed "
-                "carries a non-numeric epoch directory"
-            )
-        for e in epochs:
-            name = epoch_dir_name(e)
-            if name in applied_batches(view_path):
-                continue
-            ch = batch_df.where(F.col("_epoch") == e).drop("_epoch")
-            maintain_join_view_from_changes(
+        _fold_epochs(
+            batch_df, view_path,
+            lambda ch, e, name: maintain_join_view_from_changes(
                 batch_df.sparkSession, view_path, right_path, ch,
                 join_key=join_key, left_key=left_key, right_key=right_key,
                 epoch_num=e, batch_id=name, n_buckets=n_buckets,
-            )
+            ),
+        )
 
-    writer = change_stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_batches(change_stream, apply_batch, checkpoint_dir, available_now)

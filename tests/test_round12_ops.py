@@ -499,7 +499,21 @@ class TestQuiesceRound12:
         snap = mg.read_database_snapshot(
             spark, {"t": rep}, materialize=False, quiesce=True
         )
-        time.sleep(0.6)  # several ticks, then outlive the deadline
+        start = time.time()
+        marker = bk._quiesce_path(rep)
+
+        def wall_ts():
+            with open(marker) as fh:  # refreshed by atomic replace
+                return json.load(fh)["wall_ts"]
+
+        # the heartbeat must actually refresh the marker inside the hold
+        first, ticked = wall_ts(), False
+        while not ticked and time.time() - start < 0.25:
+            time.sleep(0.01)
+            ticked = wall_ts() > first
+        assert ticked, "no heartbeat refreshed the marker before the deadline"
+        # then outlive the deadline
+        time.sleep(max(0.0, 0.6 - (time.time() - start)))
         res = snap["release_quiesce"]()
         assert res == {"expired": True, "torn": False}
         assert not os.path.exists(bk._quiesce_path(rep))

@@ -13,13 +13,15 @@ directory-entry change that needs its own flush to survive power loss).
 
 FILESYSTEM CONTRACT for the whole commit protocol: it assumes POSIX
 single-filesystem semantics — atomic ``os.rename``/``os.replace`` within
-the parent directory (commit swaps, manifest publish), atomic
-``O_CREAT|O_EXCL`` (the recovery lock) and advisory ``fcntl.flock``
-(``flock_guard``: the recovery lock's guard, the quiesce fence and the
-index maintainers' guard). Local filesystems and NFSv4 provide all
-three. HDFS provides atomic create/rename but no flock — run recovery
-from a single coordinator there. Object stores provide none of the
-three; they need a lakehouse table format or a lease service instead.
+the parent directory (commit swaps, manifest publish) and advisory
+``fcntl.flock``: the bucketed store's commit lock, which its writer and
+every recoverer hold (``pipeline._buckets._commit_lock``), and
+``flock_guard`` (the quiesce fence and the index maintainers' guard).
+No lock is an ``O_CREAT|O_EXCL`` file: a flock dies with its holder, so
+no lock needs an abandonment judge. Local filesystems and NFSv4 provide
+both. HDFS provides atomic rename but no flock: bucketed-store writers
+raise there and readers skip recovery. Object stores provide neither;
+they need a lakehouse table format or a lease service instead.
 """
 
 from __future__ import annotations
@@ -64,17 +66,14 @@ def write_json_atomic(path: str, obj) -> None:
 def flock_guard(guard_path: str):
     """Best-effort exclusive flock on a never-unlinked sidecar guard
     file — the ONE implementation of the open/flock-or-degrade/close
-    pattern shared by the bucketed store's recovery-lock release and
-    quiesce fence and the index maintainers' guard (round-10 review
-    catch: three hand-rolled copies of the degrade-on-flockless-FS
-    policy). Yields ``'locked'`` (critical section held), ``'nolock'``
-    (filesystem without advisory locks — proceed best-effort, the
-    callers' documented degraded contract), or ``'noopen'`` (guard
-    unreachable — callers choose walk-away vs proceed). Not re-entrant:
-    a second open + flock of the same guard in one process blocks.
-    ``pipeline._buckets._acquire_recovery_lock`` keeps its own inline
-    guard: its degrade semantics differ per caller role (readers skip,
-    writers refuse loudly)."""
+    pattern shared by the bucketed store's quiesce fence and the index
+    maintainers' guard (round-10 review catch: hand-rolled copies of
+    the degrade-on-flockless-FS policy). Yields ``'locked'`` (critical
+    section held), ``'nolock'`` (filesystem without advisory locks —
+    proceed best-effort, the callers' documented degraded contract), or
+    ``'noopen'`` (guard unreachable — callers choose walk-away vs
+    proceed). Not re-entrant: a second open + flock of the same guard in
+    one process blocks."""
     import fcntl
 
     try:

@@ -127,8 +127,8 @@ def _maintainer_locked(path: str):
     neither can clobber the other's meta commit. Probes never take it —
     readers resolve whatever meta commit they observe, unchanged. Not
     re-entrant (``_durable.flock_guard``): hand-offs to compaction run
-    after the caller's block exits. Degrades exactly like the
-    recovery-lock guard it reuses: on a flock-less filesystem the
+    after the caller's block exits. Degrades exactly like the quiesce
+    fence, which shares ``flock_guard``: on a flock-less filesystem the
     documented single-writer contract is again the caller's job."""
     from .._durable import flock_guard
 

@@ -89,9 +89,9 @@ def recover_pending_join_commit(root: str, only_if_stale: bool = False) -> dict:
     store's one recovery (``_buckets.recover_pending``): writer-path
     calls (the next maintenance call; writers are serialized per view)
     recover unconditionally and sweep unreferenced staging; reader-path
-    calls pass ``only_if_stale=True`` and recover only when the recorded
-    writer is provably dead, under the recovery lock (readers skip while
-    it is held, writers wait). Returns the recovery report, or ``{}``."""
+    calls pass ``only_if_stale=True`` and recover only when no live
+    writer holds the store's commit lock (readers skip while it is held,
+    writers wait). Returns the recovery report, or ``{}``."""
     return recover_pending(root, only_if_stale) or {}
 
 

@@ -332,8 +332,8 @@ def read_merge_target(spark: SparkSession, target_path: str) -> DataFrame:
     spark.read.parquet would instead pick ONE file's footer and
     nondeterministically show or hide the new columns."""
     # only_if_stale: readers run concurrently with a single writer, so a
-    # manifest here may be a LIVE commit — recover only when the
-    # recording writer is provably gone (``_buckets._manifest_is_stale``)
+    # manifest here may be a LIVE commit — recover only when its writer
+    # no longer holds the store's commit lock
     recover_pending_commit(target_path, only_if_stale=True)
     reader = spark.read
     if is_bucketed(target_path):
@@ -1213,7 +1213,7 @@ def _commit_state(tables: dict[str, str]) -> dict:
     compaction) — swaps ``_bucket=N`` dirs, so it changes an entry name
     or an entry mtime here; only the NON-commit churn is excluded by
     name: the quiesce marker (heartbeat-refreshed in place, age-swept),
-    its fence and the recovery lock (flock sidecars — created lazily,
+    its fence and the commit lock (flock sidecars — created lazily,
     so their appearance is not a commit), and the commit manifest
     (transient; an IN-FLIGHT manifest is the separate ``any_inflight``
     check, and a completed commit is visible through the bucket swap it
@@ -1356,11 +1356,11 @@ def read_database_snapshot(
         return out
 
     def any_inflight():
-        # a manifest may belong to a CRASHED writer — roll a provably
-        # stale one forward (every other reader does) instead of
-        # permanently failing the snapshot with 'quiesce the sync' when
-        # the sync is in fact dead (round-8 review catch); only a
-        # manifest that survives the stale check counts as live
+        # a manifest may belong to a CRASHED writer — roll one whose
+        # commit lock is free forward (every other reader does) instead
+        # of permanently failing the snapshot with 'quiesce the sync'
+        # when the sync is in fact dead (round-8 review catch); only a
+        # manifest that survives that recovery counts as live
         live = False
         for p in tables.values():
             if has_pending_commit(p):

@@ -6,8 +6,6 @@
   epoch, each under an upper bound;
 - an SCD-2 fold and a join-view epoch rewrite each touched bucket of
   each store as exactly one file;
-- the join-view roll-forward heartbeats the recovery lock between
-  bucket steps, as merge's always did;
 - a crashed join-view creation leaves no staging sibling once the next
   ``maintain_join_view`` has run;
 - no module under ``pipeline/`` imports another ``pipeline/`` module's
@@ -18,11 +16,8 @@ from __future__ import annotations
 
 import ast
 import glob
-import json
 import os
-import subprocess
 import uuid
-from pathlib import Path
 
 import pytest
 
@@ -187,46 +182,6 @@ def test_crashed_join_view_creation_leaves_no_staging(spark, tmp_path, monkeypat
     assert res["view_rows_added"] == 10
     assert [n for n in os.listdir(tmp_path) if n.startswith("jv.")] == []
     assert jv.read_join_view(spark, root).count() == 10
-
-
-def test_join_roll_forward_beats_the_recovery_lock(tmp_path, monkeypatch):
-    """A dead writer's join commit, recovered on the writer path: the
-    recovery lock's mtime is touched before every bucket swap, so a
-    long recovery never ages into the lock's no-heartbeat backstop."""
-    root = str(tmp_path / "jv")
-    staged = {"left": [0, 1], "right": [2], "view": [0, 2]}
-    for store in staged:
-        for b in range(3):
-            os.makedirs(os.path.join(root, store, f"_bucket={b}"))
-    for store, buckets in staged.items():
-        for b in buckets:
-            os.makedirs(os.path.join(root, ".__stage_t1", store, f"_bucket={b}"))
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    man = {"token": "t1", "staged": staged, "batch_id": 3, "change_dir": None,
-           "pid": proc.pid, "wall_ts": 0}
-    Path(root, "_commit.json").write_text(json.dumps(man))
-    lock = os.path.join(root, "_recovery.lock")
-    events = []
-    real_rename, real_utime = os.rename, os.utime
-
-    def rename(src, dst):
-        events.append("rename")
-        return real_rename(src, dst)
-
-    def utime(path, *a, **kw):
-        if os.path.abspath(path) == os.path.abspath(lock):
-            events.append("beat")
-        return real_utime(path, *a, **kw)
-
-    monkeypatch.setattr(os, "rename", rename)
-    monkeypatch.setattr(os, "utime", utime)
-    jv.recover_pending_join_commit(root)
-    monkeypatch.undo()
-    swaps = "".join("b" if e == "beat" else "r" for e in events)
-    # each bucket: a beat, then its two renames (old strand, staged in)
-    assert swaps.startswith("brr" * sum(len(b) for b in staged.values())), swaps
-    assert not os.path.exists(os.path.join(root, "_commit.json"))
 
 
 # ---------------------------------------------------------------------------

@@ -386,27 +386,6 @@ def _partition_snapshot(target: str) -> dict[str, dict[str, tuple]]:
     return snap
 
 
-
-def _mark_writer_dead(target: str) -> None:
-    """Simulate the recording writer's process being gone: reader-side
-    recovery (round 7) only rolls a manifest forward when the writer is
-    provably dead, and these in-process kill-tests crash by exception,
-    so the manifest still carries OUR (live) pid. Point it at a pid that
-    has already exited."""
-    import json
-    import os
-    import subprocess
-
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    cp = os.path.join(target, "_commit.json")
-    with open(cp) as fh:
-        man = json.load(fh)
-    man["pid"] = proc.pid
-    with open(cp, "w") as fh:
-        json.dump(man, fh)
-
-
 class TestMergeUpsertBucketed:
     """Round-4 scale redesign: per-merge cost must be O(|updates|), not
     O(|target|) — only touched bucket partitions are read and rewritten."""
@@ -641,7 +620,6 @@ class TestMergeUpsertBucketed:
 
         # the crash landed after the commit point: manifest is dangling
         assert os.path.exists(os.path.join(target, "_commit.json"))
-        _mark_writer_dead(target)  # reader recovery requires a dead writer
         got = {
             r["id"]: (r["name"], r["version"])
             for r in read_merge_target(spark, target).collect()
@@ -1262,6 +1240,8 @@ class TestRound7CrashWindows:
         import json
         import os
 
+        from store_lock import hold_store_lock
+
         from database_clonev2_spark.pipeline.merge import (
             merge_upsert_bucketed,
             read_merge_target,
@@ -1271,10 +1251,9 @@ class TestRound7CrashWindows:
         base = spark.createDataFrame([(i, i * 10) for i in range(20)], ["id", "v"])
         merge_upsert_bucketed(spark, target, base, ["id"], n_buckets=4)
 
-        # hand-craft a LIVE manifest (our own pid, fresh timestamp) that
-        # references a staging dir, as a concurrent writer mid-commit would
-        import time
-
+        # hand-craft a LIVE manifest (published, its commit lock held)
+        # that references a staging dir, as a concurrent writer
+        # mid-commit would
         staging = f"{target}.__stage_deadbeef"
         os.makedirs(os.path.join(staging, "_bucket=0"))
         with open(os.path.join(target, "_commit.json"), "w") as fh:
@@ -1285,17 +1264,15 @@ class TestRound7CrashWindows:
                     "buckets": [0],
                     "batch_id": None,
                     "schema_json": None,
-                    "pid": os.getpid(),
-                    "wall_ts": time.time(),
                 },
                 fh,
             )
-        read_merge_target(spark, target).count()
-        # the reader must not have replayed the writer's commit steps
-        assert os.path.exists(os.path.join(target, "_commit.json"))
-        assert os.path.isdir(staging)
+        with hold_store_lock(target):
+            read_merge_target(spark, target).count()
+            # the reader must not have replayed the writer's commit steps
+            assert os.path.exists(os.path.join(target, "_commit.json"))
+            assert os.path.isdir(staging)
 
-        _mark_writer_dead(target)
         read_merge_target(spark, target).count()
         assert not os.path.exists(os.path.join(target, "_commit.json"))
         assert not os.path.isdir(staging)
@@ -1339,7 +1316,6 @@ class TestRound7CrashWindows:
         # mixed-schema buckets are committed, manifest dangles with the
         # evolved schema; recovery must persist it before any read
         assert os.path.exists(os.path.join(target, "_commit.json"))
-        _mark_writer_dead(target)
         df = read_merge_target(spark, target)
         assert "score" in df.columns  # never silently dropped
         rows = {r["id"]: (r["name"], r["score"]) for r in df.collect()}
@@ -1445,7 +1421,6 @@ class TestDeleteCrashWindows:
         monkeypatch.setattr(merge_mod.os, "rename", real_rename)
 
         assert os.path.exists(os.path.join(target, "_commit.json"))
-        _mark_writer_dead(target)
         got = {r["id"] for r in read_merge_target(spark, target).collect()}
         assert got == set(range(1, 101)) - set(b0) - set(others)
         assert not os.path.exists(os.path.join(target, "_commit.json"))
@@ -1518,7 +1493,6 @@ class TestApplyChangesCrashWindows:
             sync_replica_from_changes(spark, rep, src, ["id"], n_buckets=4)
         monkeypatch.setattr(merge_mod.os, "rename", real_rename)
         assert os.path.exists(os.path.join(rep, "_commit.json"))
-        _mark_writer_dead(rep)
         # the next sync first rolls the crashed epoch forward (its ledger
         # entry lands during recovery), then applies the remaining epoch
         sync_replica_from_changes(spark, rep, src, ["id"], n_buckets=4)

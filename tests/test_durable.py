@@ -5,7 +5,9 @@
 - the bucketed-merge and join-view commits, both run by the bucketed
   store's one ``_roll_forward``, recover to exactly the pre-state or the
   post-state from a crash at every rename/replace;
-- reader-side join-view recovery honours merge's recovery lock;
+- reader-side recovery never replays a manifest whose commit lock is
+  held — a recoverer's, or a live writer's paused mid-commit however
+  old its manifest — and rolls forward at once when the holder dies;
 - every JSON state write and every rename outside ``_durable.py`` is a
   named, reasoned exception, and only ``_durable.py`` spells an
   ``epoch-`` name (AST guards).
@@ -20,8 +22,12 @@ import ast
 import json
 import os
 import shutil
+import signal
 import subprocess
+import sys
 import tempfile
+import threading
+import time
 from pathlib import Path
 from unittest import mock
 
@@ -34,12 +40,7 @@ from database_clonev2_spark._durable import applied_batches, write_json_atomic
 from database_clonev2_spark.pipeline import _buckets as bk
 from database_clonev2_spark.pipeline import joinview as jv
 from database_clonev2_spark.pipeline import merge as mg
-
-
-def _dead_pid() -> int:
-    proc = subprocess.Popen(["true"])
-    proc.wait()
-    return proc.pid
+from store_lock import hold_store_lock
 
 
 def _crash_on_call(real, k: int, state: dict):
@@ -156,7 +157,7 @@ _JV_STAGED = {"left": [0, 1], "right": [2], "view": [0, 2]}
 _JV_TOKEN = "tok1"
 
 
-def _build_join_root(root: str, pid: int | None = None) -> dict:
+def _build_join_root(root: str) -> dict:
     shutil.rmtree(root, ignore_errors=True)
     for store in ("left", "right", "view"):
         for b in range(3):
@@ -179,8 +180,6 @@ def _build_join_root(root: str, pid: int | None = None) -> dict:
         "batch_id": 7,
         "change_dir": "epoch-7",
     }
-    if pid is not None:
-        man.update(pid=pid, wall_ts=0)
     with open(os.path.join(root, "_commit.json"), "w") as fh:
         json.dump(man, fh)
     return man
@@ -244,30 +243,27 @@ def test_join_reader_recovery_waits_for_the_recovery_lock(tmp_path):
     swapped bucket to ``.__old_`` and delete it; the reader must skip,
     leaving every bucket dir and the manifest untouched."""
     root = str(tmp_path / "jv")
-    _build_join_root(root, pid=_dead_pid())
-    lock = os.path.join(root, bk._RECOVERY_LOCK_FILE)
-    Path(lock).write_text(f"{os.getpid()}\nlive-holder\n")
+    _build_join_root(root)
     cp = os.path.join(root, "_commit.json")
     manifest_before = Path(cp).read_text()
     stage = os.path.join(root, f".__stage_{_JV_TOKEN}")
 
-    jv.recover_pending_join_commit(root, only_if_stale=True)
+    with hold_store_lock(root):
+        jv.recover_pending_join_commit(root, only_if_stale=True)
 
-    assert _join_snapshot(root) == {
-        (s, b): "old" for s in ("left", "right", "view") for b in range(3)
-    }
-    assert Path(cp).read_text() == manifest_before
-    for store, bs in _JV_STAGED.items():
-        for b in bs:
-            assert Path(
-                stage, store, f"{jv.BUCKET_COL}={b}", "marker"
-            ).read_text() == "new"
-    assert not os.path.exists(os.path.join(root, "_changes"))
-    assert applied_batches(root) == []
-    assert Path(lock).read_text() == f"{os.getpid()}\nlive-holder\n"
+        assert _join_snapshot(root) == {
+            (s, b): "old" for s in ("left", "right", "view") for b in range(3)
+        }
+        assert Path(cp).read_text() == manifest_before
+        for store, bs in _JV_STAGED.items():
+            for b in bs:
+                assert Path(
+                    stage, store, f"{jv.BUCKET_COL}={b}", "marker"
+                ).read_text() == "new"
+        assert not os.path.exists(os.path.join(root, "_changes"))
+        assert applied_batches(root) == []
 
     # once the holder is gone, the same reader call rolls forward
-    os.remove(lock)
     jv.recover_pending_join_commit(root, only_if_stale=True)
     assert _join_snapshot(root) == {
         (s, b): ("new" if b in _JV_STAGED[s] else "old")
@@ -275,7 +271,8 @@ def test_join_reader_recovery_waits_for_the_recovery_lock(tmp_path):
         for b in range(3)
     }
     assert not os.path.exists(cp)
-    assert not os.path.exists(lock)
+    with hold_store_lock(root):
+        pass  # the reader released the lock
 
 
 # ---------------------------------------------------------------------------
@@ -405,6 +402,110 @@ def test_merge_commit_recovers_from_every_crash_position(tmp_path, monkeypatch):
             assert Path(
                 target, "_changes", "epoch-5", "marker"
             ).exists() == (want is post), (name, k)
+
+
+# ---------------------------------------------------------------------------
+# commit lock: held by the writer, freed by the kernel when it dies
+# ---------------------------------------------------------------------------
+
+
+def test_paused_live_writer_is_never_raced(tmp_path, monkeypatch):
+    """A live writer paused mid-commit (SIGSTOP, a VM suspend, an NFS
+    stall) keeps its store: a reader finding its manifest, however old,
+    leaves it alone, and the writer's commit lands whole when it
+    resumes. Judged by pid and manifest age, the reader would roll the
+    commit forward itself, and the writer's own rename would then move
+    the reader's freshly swapped bucket to ``.__old_`` and delete it."""
+    target = str(tmp_path / "t.parquet")
+    staging = f"{target}.__stage_tokp"
+    for b in range(2):
+        d = os.path.join(target, f"{mg.BUCKET_COL}={b}")
+        os.makedirs(d)
+        Path(d, "marker").write_text("old")
+    Path(target, "_merge_buckets.json").write_text(
+        json.dumps({"n_buckets": 2, "key_cols": ["k"]})
+    )
+    os.makedirs(os.path.join(staging, f"{mg.BUCKET_COL}=0"))
+    Path(staging, f"{mg.BUCKET_COL}=0", "marker").write_text("new")
+
+    paused, resume, errors = threading.Event(), threading.Event(), []
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if threading.current_thread() is writer and not paused.is_set():
+            paused.set()
+            resume.wait(60)
+        return real_rename(src, dst)
+
+    def commit():
+        try:
+            bk.commit_staged_buckets(target, "tokp", staging, [0], batch_id=9)
+        except BaseException as exc:  # noqa: BLE001 - reported below
+            errors.append(exc)
+
+    monkeypatch.setattr(bk.os, "rename", rename)
+    writer = threading.Thread(target=commit)
+    writer.start()
+    try:
+        assert paused.wait(30), "writer never reached its first rename"
+        cp = os.path.join(target, "_commit.json")
+        # backdate every clock a staleness judge could read
+        man = json.loads(Path(cp).read_text())
+        man["wall_ts"] = time.time() - 7200
+        Path(cp).write_text(json.dumps(man))
+        os.utime(cp, (time.time() - 7200,) * 2)
+
+        assert bk.recover_pending(target, only_if_stale=True) is None
+        assert os.path.exists(cp)
+    finally:
+        resume.set()
+        writer.join(60)
+    monkeypatch.undo()
+    assert errors == []
+    assert Path(target, f"{mg.BUCKET_COL}=0", "marker").read_text() == "new"
+    assert Path(target, f"{mg.BUCKET_COL}=1", "marker").read_text() == "old"
+    assert applied_batches(target) == [9]
+    assert not os.path.exists(os.path.join(target, "_commit.json"))
+
+
+def test_killed_lock_holder_frees_the_store(tmp_path):
+    """The kernel drops a dead holder's lock: a crashed commit whose
+    lock holder was SIGKILLed is rolled forward by the next reader at
+    once, with no pid or age in the manifest to judge."""
+    target = str(tmp_path / "t.parquet")
+    staging = _build_merge_target(target)
+    bk._write_commit_manifest(
+        target, _MG_TOKEN, staging, _MG_TOUCHED,
+        batch_id=5, schema_json=_MG_SCHEMA, change_dir="epoch-5",
+    )
+    holder = subprocess.Popen(
+        [
+            sys.executable, "-c",
+            "import sys, time\n"
+            "from database_clonev2_spark.pipeline import _buckets as bk\n"
+            "with bk._commit_lock(sys.argv[1], reader=False):\n"
+            "    print('held', flush=True)\n"
+            "    time.sleep(600)\n",
+            target,
+        ],
+        cwd=str(_PKG.parent),
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "held"
+        assert bk.recover_pending(target, only_if_stale=True) is None
+    finally:
+        holder.send_signal(signal.SIGKILL)
+        holder.wait()
+        holder.stdout.close()
+
+    rep = bk.recover_pending(target, only_if_stale=True)
+    assert rep == {"token": _MG_TOKEN, "rolled_forward_buckets": len(_MG_TOUCHED)}
+    state = _merge_state(target)
+    assert state["buckets"] == {0: "new", 1: "old", 2: "new", 3: "new"}
+    assert state["changes"] == ["epoch-5"] and state["ledger"] == [5]
+    assert state["residue"] == []
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,6 @@
   column family, never the vectors tree (VERDICT r9 #2), with
   torn-append repair and legacy migration through one reconcile scan;
 - duplicate-id collapse in all three index BUILD paths (VERDICT r9 #3);
-- release-side recovery-lock verify+remove under the guard flock
-  (VERDICT r9 #1);
 - age-gated retired-dir sweep across the three indexes (VERDICT r9 #6);
 - quiesce fence at the commit point + lazy-snapshot revalidation
   (ADVICE r9 high) and held-marker heartbeat (ADVICE r9 medium);
@@ -358,56 +356,6 @@ class TestSegmentIndexBuildHardening:
         assert meta["retired"] == []
         for seg in old_meta["segments"]:
             assert not os.path.exists(os.path.join(idx, "digests", seg))
-
-
-# ---------------------------------------------------------------------------
-# release-side recovery-lock TOCTOU (VERDICT r9 #1)
-# ---------------------------------------------------------------------------
-
-
-class TestReleaseLockUnderGuard:
-    def test_release_verify_and_remove_runs_under_the_guard_flock(
-        self, tmp_path
-    ):
-        """The dethroned-holder race is closed structurally: the token
-        verify + remove cannot interleave with a reclaim because both
-        run under the same ``.guard`` flock — a release attempted while
-        a reclaim critical section is open BLOCKS until it closes, then
-        re-reads the CURRENT inode (the new winner's token) and walks
-        away, leaving exactly one lock."""
-        import fcntl
-
-        from database_clonev2_spark.pipeline._buckets import (
-            _release_recovery_lock,
-        )
-
-        lock = str(tmp_path / "_recovery.lock")
-        # the state after a backstop reclaim: the NEW winner's lock
-        wfd = os.open(lock, os.O_CREAT | os.O_WRONLY)
-        os.write(wfd, f"{os.getpid()}\nwinner-token\n".encode())
-
-        # hold the guard open, simulating a reclaim mid-critical-section
-        gfd = os.open(lock + ".guard", os.O_CREAT | os.O_RDWR)
-        fcntl.flock(gfd, fcntl.LOCK_EX)
-
-        hfd = os.open(lock, os.O_RDONLY)  # the dethroned slow holder's fd
-        done = threading.Event()
-
-        def dethroned_release():
-            _release_recovery_lock(lock, hfd, "dethroned-token")
-            done.set()
-
-        t = threading.Thread(target=dethroned_release)
-        t.start()
-        assert not done.wait(0.3), "release did not block on the guard"
-        assert os.path.exists(lock)
-        os.close(gfd)  # reclaim section closes; release proceeds
-        assert done.wait(5.0)
-        t.join()
-        # the winner's fresh lock SURVIVED the dethroned release
-        assert os.path.exists(lock)
-        _release_recovery_lock(lock, wfd, "winner-token")
-        assert not os.path.exists(lock)
 
 
 # ---------------------------------------------------------------------------

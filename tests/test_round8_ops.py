@@ -527,24 +527,25 @@ class TestDatabaseSnapshot:
         import json as _json
         import os as _os
 
+        from store_lock import hold_store_lock
+
         from database_clonev2_spark.pipeline._buckets import _commit_path
         from database_clonev2_spark.pipeline.merge import read_database_snapshot
 
         paths = self._database(spark, tmp_path)
         reps = {t: rep for t, (_s, rep) in paths.items()}
-        # a LIVE writer's manifest (this pid, fresh timestamp) on one
-        # table = an in-flight commit the cut must not read through
-        import time as _time
-
+        # a LIVE writer's manifest (published, its commit lock held) on
+        # one table = an in-flight commit the cut must not read through
         with open(_commit_path(reps["beta"]), "w") as fh:
             _json.dump(
                 {"token": "x", "staging": "/nonexistent", "buckets": [],
-                 "batch_id": None, "schema_json": None, "change_dir": None,
-                 "pid": _os.getpid(), "wall_ts": _time.time()},
+                 "batch_id": None, "schema_json": None, "change_dir": None},
                 fh,
             )
         try:
-            with pytest.raises(RuntimeError, match="quiesce the sync"):
+            with hold_store_lock(reps["beta"]), pytest.raises(
+                RuntimeError, match="quiesce the sync"
+            ):
                 read_database_snapshot(spark, reps, max_retries=2)
         finally:
             _os.remove(_commit_path(reps["beta"]))
@@ -915,9 +916,9 @@ class TestScd2AsofJoin:
 class TestRecoveryLock:
     """Round-8 review catch: two recoverers racing one stale manifest
     could interleave the swap loop so the loser deletes the winner's
-    freshly-committed bucket. Recovery is now serialized by an O_EXCL
-    lock: a held lock makes a reader-recoverer report nothing (its
-    caller retries), an abandoned lock (crashed recoverer) is swept."""
+    freshly-committed bucket. Recovery is serialized by the store's
+    commit lock (a flock on ``_recovery.lock``): a held lock makes a
+    reader-recoverer report nothing (its caller retries)."""
 
     def _crashed_target(self, spark, tmp_path, monkeypatch):
         import os as _os
@@ -951,17 +952,6 @@ class TestRecoveryLock:
             )
         monkeypatch.setattr(merge_mod.os, "rename", real_rename)
         assert _os.path.exists(_os.path.join(tgt, "_commit.json"))
-        # these in-process kill-tests crash by exception, so the manifest
-        # carries our live pid — point it at a dead one (house helper)
-        import json as _json
-        import subprocess
-
-        proc = subprocess.Popen(["true"])
-        proc.wait()
-        cp = _os.path.join(tgt, "_commit.json")
-        man = _json.load(open(cp))
-        man["pid"] = proc.pid
-        _json.dump(man, open(cp, "w"))
         return tgt
 
     def test_reader_recoverer_skips_under_held_lock(
@@ -969,40 +959,24 @@ class TestRecoveryLock:
     ):
         import os as _os
 
+        from store_lock import hold_store_lock
+
         from database_clonev2_spark.pipeline.merge import (
             recover_pending_commit,
         )
 
         tgt = self._crashed_target(spark, tmp_path, monkeypatch)
-        lock = _os.path.join(tgt, "_recovery.lock")
-        with open(lock, "w") as fh:
-            fh.write("held\n")
-        # a FRESH lock (another recoverer live): report nothing, manifest
-        # untouched — the caller's retry sees the finished state later
-        assert recover_pending_commit(tgt, only_if_stale=True) is None
-        assert _os.path.exists(_os.path.join(tgt, "_commit.json"))
-        _os.remove(lock)
+        with hold_store_lock(tgt):
+            # a HELD lock (another recoverer live): report nothing,
+            # manifest untouched — the caller's retry sees the finished
+            # state later
+            assert recover_pending_commit(tgt, only_if_stale=True) is None
+            assert _os.path.exists(_os.path.join(tgt, "_commit.json"))
         rep = recover_pending_commit(tgt, only_if_stale=True)
         assert rep and rep["rolled_forward_buckets"] >= 1
         assert not _os.path.exists(_os.path.join(tgt, "_commit.json"))
-        assert not _os.path.exists(lock)  # released
-
-    def test_abandoned_lock_is_swept(self, spark, tmp_path, monkeypatch):
-        import os as _os
-
-        from database_clonev2_spark.pipeline.merge import (
-            recover_pending_commit,
-        )
-
-        tgt = self._crashed_target(spark, tmp_path, monkeypatch)
-        lock = _os.path.join(tgt, "_recovery.lock")
-        with open(lock, "w") as fh:
-            fh.write("crashed recoverer\n")
-        old = _os.stat(lock).st_mtime - 3600
-        _os.utime(lock, (old, old))
-        rep = recover_pending_commit(tgt, only_if_stale=True)
-        assert rep and rep["rolled_forward_buckets"] >= 1
-        assert not _os.path.exists(lock)
+        with hold_store_lock(tgt):
+            pass  # released
 
 
 def test_stream_apply_cdc_evolution_across_restart(spark, tmp_path):
